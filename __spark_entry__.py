@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from deeptime_spark.local_relation import local_df as _local_df
+from deeptime_spark.session import read_table as _read
 
 # ----------------------------------------------------------------- loaders
 
@@ -49,26 +50,6 @@ def _drop_view_quiet(spark: SparkSession, sink: str | None) -> None:
             spark.catalog.dropTempView(sink)
         except Exception:
             pass
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # the events table stores TIMESTAMP(NANOS); Spark's reader rejects
-        # that unless nanos are surfaced as long (runtime-settable conf)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer DIV: ns epoch > 2^53 would lose microseconds through fp
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # timestamp[us] without tz metadata reads as TIMESTAMP_NTZ; pin
-            # the session to UTC so the cast is a pure type change, then
-            # restore TIMESTAMP for unix_micros()/window() compatibility.
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def _state_expr():

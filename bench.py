@@ -218,44 +218,15 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
 
-    from pyspark.sql import SparkSession
+    from deeptime_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("deeptime-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # A 137-query x 3-pass session compiles ~1500 whole-stage-codegen
-        # units; the JVM's default 240MB reserved code cache fills, the
-        # JIT stops compiling and DEOPTIMIZES hot methods, and the widest
-        # codegen plans (the dedup family's 32/64-column hash aggregates)
-        # crawl at 3-5x on late passes — measured as corpus_tuned_dedup's
-        # warm trials landing at 38s vs its 8s idle-session profile. Any
-        # long-lived production driver sets this; so does the bench.
-        .config(
-            "spark.driver.extraJavaOptions",
-            # 512m stopped the r10 code-cache exhaustion at 138 queries;
-            # the r11 additions (147 wide-codegen plans x 3 passes)
-            # overflowed it again — corpus_tuned_dedup read 26 s warm in
-            # the session while timing 6.4 s in isolation. 1g holds the
-            # whole compiled-plan working set.
-            "-XX:ReservedCodeCacheSize=1g",
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("deeptime-spark-bench", "bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()

@@ -1,6 +1,7 @@
 """Idle-session anchor bench: re-time a handful of queries in a FRESH
-Spark session with bench.py's exact configs, 1 cold + N warm passes
-(default 3), reporting per-query cold / warm-min / warm-spread.
+Spark session with bench.py's conf (``get_spark``'s ``bench`` profile),
+1 cold + N warm passes (default 3), reporting per-query cold / warm-min /
+warm-spread.
 
 The adjudication tool for warm-bench drift (PLANS.md protocol): a
 regression that shows up in the full 150-query bench session but
@@ -33,22 +34,9 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
-    from pyspark.sql import SparkSession
+    from deeptime_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("deeptime-spark-anchor")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("deeptime-spark-anchor", "bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     out: dict[str, dict] = {}

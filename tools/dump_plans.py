@@ -1,8 +1,22 @@
-"""Regenerate PLANS.md: formatted physical plans for flagship queries,
-each annotated with the design claim the plan is supposed to exhibit
-(the same claims tests/test_plans.py pins in CI).
+"""Dump formatted physical plans (``.explain("formatted")``).
 
-Usage: python tools/dump_plans.py  [writes /root/repo/PLANS.md]
+Without arguments: regenerate PLANS.md, the plans of the flagship queries,
+each annotated with the design claim the plan is supposed to exhibit (the
+same claims tests/test_plans.py pins in CI).
+
+With arguments: write ``<outdir>/<query>_<tag>.txt`` for every query
+named. Run once in a worktree at the pre-optimization commit with tag
+``before`` and once in the optimized tree with tag ``after``; the
+plan-shape claims of an optimization round are checked against these
+files (plans/r12, plans/r13). Many harness queries materialize eagerly
+inside ``queries()`` (the returned frame is a literal built from
+driver-side results); for those the file pins only the final shape, and
+the returned frame's partition count is printed alongside the plan.
+
+Both modes read the tables at $SPARK_GRAFT_SF_DIR (default sf0.001).
+
+Usage: python tools/dump_plans.py                       # PLANS.md
+       python tools/dump_plans.py <tag> <outdir> <query> [query ...]
 """
 
 from __future__ import annotations
@@ -12,7 +26,9 @@ import io
 import os
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", SF)
 
 # query -> what to look for in the plan (the reviewable claim)
 FLAGSHIPS = {
@@ -221,36 +237,31 @@ PLAN_BUILDERS = {
 }
 
 
-def main() -> int:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import __spark_entry__ as entrymod
-    from deeptime_spark.session import get_spark
+def explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
-    spark = get_spark("dump-plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
 
+def write_plans_md(spark, qs) -> None:
     out = [
         "# PLANS — flagship physical plans, annotated",
         "",
         "Auto-generated by `tools/dump_plans.py` (re-run after plan-affecting",
         "changes). Each plan is shown with the design claim it must exhibit;",
         "`tests/test_plans.py` pins the same claims in CI so they cannot",
-        "silently regress. Plans captured at sf0.001 — the SHAPE is scale-",
+        f"silently regress. Plans captured at {os.path.basename(SF)} — the SHAPE is scale-",
         "invariant (AQE may re-plan exchanges at runtime, which is the point).",
         "",
     ]
     for name, claim in FLAGSHIPS.items():
         builder = PLAN_BUILDERS.get(name)
         df = builder(spark) if builder else qs[name](spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue().strip()
+        plan = explain(df).strip()
         out += [f"## {name}", "", claim, "", "```", plan, "```", ""]
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "PLANS.md")
+    path = os.path.join(ROOT, "PLANS.md")
     # hand-written sections (regression adjudications, pinned multi-trial
     # profiles) live after the marker and survive regeneration
     manual = ""
@@ -263,6 +274,43 @@ def main() -> int:
         fh.write("\n" + MANUAL_MARKER + "\n")
         fh.write(manual)
     print(f"wrote PLANS.md ({len(FLAGSHIPS)} plans)")
+
+
+def write_query_plans(spark, qs, tag: str, outdir: str, names: list[str]) -> None:
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        fn = qs.get(name)
+        if fn is None:
+            print(f"SKIP unknown query {name}", file=sys.stderr)
+            continue
+        df = fn(spark, SF)
+        plan = explain(df)
+        npart = df.rdd.getNumPartitions()
+        path = os.path.join(outdir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} ({tag}) — sf_dir={SF}\n")
+            fh.write(f"# returned-frame partitions: {npart}\n\n")
+            fh.write(plan)
+        print(f"wrote {path} (partitions={npart})")
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    if 0 < len(args) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    sys.path.insert(0, ROOT)
+    import __spark_entry__ as entrymod
+    from deeptime_spark.session import get_spark
+
+    spark = get_spark("dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = entrymod.queries()
+    if args:
+        write_query_plans(spark, qs, args[0], args[1], args[2:])
+    else:
+        write_plans_md(spark, qs)
+    spark.stop()
     return 0
 
 

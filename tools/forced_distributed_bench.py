@@ -16,9 +16,9 @@ dispatch-gated bench query twice per fixture:
   the SAME queries and the oracle stays green either way.
 
 Fixtures: sf0.1 and the x8 replicated weak-scaling dir
-(tools/scale_bench.py's fixture — built on first use). Each
-(fixture, mode) runs in its OWN subprocess because the deep-estimator
-bound is captured at import time.
+(tools/scale_bench.py's fixture — built here on first use). Each
+(fixture, mode) runs ``tools/anchor_bench.py`` in its OWN subprocess
+because the deep-estimator bound is captured at import time.
 
 Usage: python tools/forced_distributed_bench.py [x8]
 Prints one JSON line; record the table in SCALE.md.
@@ -30,6 +30,8 @@ import json
 import os
 import subprocess
 import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 QUERIES = [
     # §14 graph kernels
@@ -56,79 +58,45 @@ FORCE_ENV = {
     "DEEPTIME_KMEANS_DRIVER_DISPATCH": "0",
 }
 
-_CHILD = """
-import json, os, sys, time
-sys.path.insert(0, {repo!r})
-import __spark_entry__ as entrymod
-from pyspark.sql import SparkSession
-cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-spark = (SparkSession.builder.master(f"local[{{cpus}}]")
-    .appName("forced-distributed-gate")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-    .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-if {build_x8!r}:
-    sys.path.insert(0, os.path.join({repo!r}, "tools"))
-    import scale_bench
-    scale_bench.build_dir(spark, 8)
-qs = entrymod.queries()
-sf_dir = {sf_dir!r}
-out = {{}}
-for name in {queries!r}:
-    fn = qs[name]
-    trials = []
-    for _ in range(3):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        trials.append(round(time.time() - t0, 3))
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-    out[name] = {{"cold": trials[0], "warm_min": min(trials[1:]),
-                  "trials": trials}}
-print("FDG_JSON:" + json.dumps(out))
-spark.stop()
-"""
 
+def run_anchor(sf_dir: str, mode: str) -> dict:
+    """Time QUERIES with tools/anchor_bench.py in a fresh process (1 cold +
+    2 warm trials, the gate's r13 protocol), under FORCE_ENV for
+    ``distributed``."""
+    from deeptime_spark.session import PROFILES
 
-def run_child(sf_dir: str, mode: str, build_x8: bool) -> dict:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ)
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
+    env.setdefault("SPARK_DRIVER_MEMORY", PROFILES["scale"]["spark.driver.memory"])
+    env.setdefault("SPARK_GRAFT_ANCHOR_TRIALS", "2")
     if mode == "distributed":
         env.update(FORCE_ENV)
-    code = _CHILD.format(
-        repo=repo, sf_dir=sf_dir, queries=QUERIES, build_x8=build_x8
-    )
     r = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
-        timeout=3600,
+        [sys.executable, os.path.join(HERE, "anchor_bench.py"), *QUERIES],
+        env=env, capture_output=True, text=True, timeout=3600,
     )
-    for line in r.stdout.splitlines():
-        if line.startswith("FDG_JSON:"):
-            return json.loads(line[len("FDG_JSON:"):])
-    raise RuntimeError(
-        f"child ({sf_dir}, {mode}) produced no result; stderr tail:\n"
-        + r.stderr[-2000:]
-    )
+    if r.returncode != 0:
+        raise RuntimeError(
+            f"anchor_bench ({sf_dir}, {mode}) failed; stderr tail:\n"
+            + r.stderr[-2000:]
+        )
+    return json.loads(r.stdout.splitlines()[-1])["anchors"]
 
 
 def main() -> int:
-    with_x8 = "x8" in sys.argv[1:]
-    fixtures = [("sf0.1", "/root/testdata/sf0.1", False)]
-    if with_x8:
-        fixtures.append(("x8", "/tmp/scale/x8", True))
+    sys.path.insert(0, os.path.dirname(HERE))
+    from deeptime_spark.session import get_spark
+    from tools import scale_bench
+
+    fixtures = {"sf0.1": scale_bench.SRC}
+    if "x8" in sys.argv[1:]:
+        spark = get_spark("forced-distributed-gate", "scale")
+        fixtures["x8"] = scale_bench.build_dir(spark, 8)
+        spark.stop()
     report: dict = {}
-    for label, sf_dir, build in fixtures:
+    for label, sf_dir in fixtures.items():
         report[label] = {}
         for mode in ("driver", "distributed"):
-            report[label][mode] = run_child(sf_dir, mode, build)
+            report[label][mode] = run_anchor(sf_dir, mode)
             print(f"done {label}/{mode}", file=sys.stderr)
     print(json.dumps(report))
     return 0

@@ -1,11 +1,11 @@
 """Per-job time attribution for one query — guide §1 (measure first).
 
-Runs a query in a fresh bench-config session with the UI enabled, does one
-warm-up pass, then one measured pass, and prints every Spark job the
-measured pass submitted (job id, duration, first stage name) scraped from
-the UI REST API — the local[.] stand-in for the Stages tab. This is how
-each round-12 optimization decides WHICH of a query's jobs is worth
-attacking before touching the plan.
+Runs a query in a fresh ``get_spark(..., "profile")`` session (the bench
+conf with the UI enabled), does one warm-up pass, then one measured pass,
+and prints every Spark job the measured pass submitted (job id, duration,
+first stage name) scraped from the UI REST API — the local[.] stand-in
+for the Stages tab. This is how each round-12 optimization decides WHICH
+of a query's jobs is worth attacking before touching the plan.
 
 Usage: python tools/profile_query.py <query> [n_warmup]
 """
@@ -23,27 +23,12 @@ def main() -> int:
     name = sys.argv[1]
     n_warm = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
-    from pyspark.sql import SparkSession
+    from deeptime_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("deeptime-spark-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")
-        .getOrCreate()
-    )
+    spark = get_spark("deeptime-spark-profile", "profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     fn = qs[name]

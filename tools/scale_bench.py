@@ -202,29 +202,15 @@ def build_dir(spark, k: int) -> str:
 def main() -> None:
     ks = [int(a) for a in sys.argv[1:]] or [1, 2, 4, 8]
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
+    from deeptime_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("scale-bench", "scale")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     # warm codegen + python workers once
-    from pyspark.sql import functions as F  # noqa: F401
-
     spark.read.parquet(f"{SRC}/region.parquet").mapInPandas(
         lambda it: it, schema="r_regionkey int, r_name string"
     ).write.format("noop").mode("overwrite").save()
@@ -243,14 +229,12 @@ def main() -> None:
         # base excludes whole-stage-codegen JIT / Arrow worker spin-up.
         # Cold x1 bases produced slopes < 1 (x8 "faster" than x1) in the
         # r04-r06 tables — warm-session artifacts, not real sublinearity.
-        # Set SPARK_GRAFT_SCALE_COLD=1 to keep the old cold-base behavior.
-        if not os.environ.get("SPARK_GRAFT_SCALE_COLD"):
-            try:
-                fn(spark, dirs[ks[0]]).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+        try:
+            fn(spark, dirs[ks[0]]).write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
         for k in ks:
             t0 = time.time()
             try:

@@ -59,22 +59,10 @@ def skew_edges(spark, sf_dir: str):
 def main() -> None:
     ks = [int(a) for a in sys.argv[1:]] or [1, 8]
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
-
+    from deeptime_spark.session import get_spark
     from tools.scale_bench import build_dir
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("skew-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("skew-bench", "scale")
     spark.sparkContext.setLogLevel("ERROR")
 
     from deeptime_spark.operators.graph import (

@@ -11,6 +11,7 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -31,28 +32,20 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
-    import os
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     # literal-value estimator oracles (oracle_ref) must be built against
     # the same sf dir the queries run at
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
     import __spark_entry__ as entrymod
 
-    from pyspark.sql import SparkSession
+    from deeptime_spark.session import TABLES, get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("verify-local")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
+    spark = get_spark("verify-local", "bare")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for name in ("region nation customer supplier part orders lineitem events documents embeddings").split():
+    for name in TABLES:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
 
     qs = entrymod.queries()
