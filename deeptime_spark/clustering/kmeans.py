@@ -14,13 +14,13 @@ the rest of the engine without MLlib types leaking out.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator
 from deeptime_spark.clustering.cluster_model import ClusterModel
 
@@ -366,15 +366,7 @@ class DeterministicKMeans(Estimator):
             .collect()
         )
         X0 = np.array([r[x_col] for r in sample_rows], dtype=np.float64)
-        # the env kill-switch exists ONLY for the forced-distributed
-        # scale gate (tools/forced_distributed_bench.py / SCALE.md):
-        # both paths are bit-identical (pinned by pytest), the gate
-        # needs the distributed Lloyd loop TIMED on inputs the driver
-        # replay normally absorbs. Default unchanged.
-        driver_ok = os.environ.get(
-            "DEEPTIME_KMEANS_DRIVER_DISPATCH", "1"
-        ) != "0"
-        if driver_ok and len(sample_rows) < self.sample_size:
+        if dispatch.on_driver("kmeans", int(len(sample_rows) >= self.sample_size)):
             # The bounded init sample IS the whole relation (limit
             # returned fewer rows than requested), so the Lloyd loop
             # runs driver-side on the rows already collected —
@@ -383,9 +375,8 @@ class DeterministicKMeans(Estimator):
             # kernel, and the exactly-reduced fixed-point update; the
             # integer partials are associative, so one batch == any
             # partitioning). Saves max_iter mapInPandas jobs whose
-            # inputs the driver already holds — the connected_components
-            # "driver union-find below the bound, distributed above"
-            # dispatch (guide §1.2/§5). Above sample_size rows the
+            # inputs the driver already holds (the "kmeans" bound of
+            # deeptime_spark/dispatch.py). Above sample_size rows the
             # distributed path below is unchanged at any scale.
             centers, self.n_iter_ = deterministic_kmeans_numpy(
                 X0,

@@ -34,7 +34,6 @@ Colocation is ONE shuffle paid once before the epoch loop.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, List, Optional, Sequence
 
 import numpy as np
@@ -42,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator, Model, Transformer
 
 __all__ = [
@@ -424,37 +424,17 @@ def _collocate(df: DataFrame, traj_col: str, time_col: str, x_cols: List[str]):
     return sel.repartition("_tid").sortWithinPartitions("_tid", "_t").persist()
 
 
-# Driver-dispatch bound for the epoch loops: when the whole training
-# input holds at most this many float64 feature elements (rows x dims;
-# ~32 MB), one Arrow collect plus the established driver replay
-# (*_train_arrays — the SAME per-traj kernels and sorted reduces, so
+# Below the "deep_fit" dispatch bound one Arrow collect plus the driver
+# replay (*_train_arrays: the SAME per-traj kernels and sorted reduces, so
 # bit-identical results) replaces n_epochs x (broadcast + mapInPandas +
-# collect) round trips whose inputs the driver could hold outright —
-# the connected_components / DeterministicKMeans "driver below the
-# bound, distributed above" convention. Above the bound nothing
-# changes, at any scale.
-# env-overridable for the forced-distributed scale gate (set to 0 to
-# force the distributed epoch loop on inputs the driver replay normally
-# absorbs — tools/forced_distributed_bench.py / SCALE.md; bit-identical
-# either way, pinned by the cross-path pytests).
-#
-# Bound MEASURED by that gate (r13): the driver replay's per-trajectory
-# Python loop scales ~2.05 s/100k elems while the distributed epoch
-# loop scales ~0.75 s/100k on top of a ~4 s session floor — they cross
-# at ~270k elems (driver wins 2.64 vs 4.84 at 100k, LOSES 17.0 vs 10.1
-# at 800k). The r12 bound (4M) kept the driver path far past the
-# crossover; 256k dispatches each side to its winning regime with the
-# same bit-identical results either way.
-DRIVER_FIT_MAX_ELEMS = int(
-    os.environ.get("DEEPTIME_DRIVER_FIT_MAX_ELEMS", 262_144)
-)
+# collect) round trips whose inputs the driver could hold outright.
 
 
 def _driver_traj_arrays(sel: DataFrame, d: int) -> List[tuple]:
     """[(traj_id, (T, d) float64 X)] in sorted-trajectory order from one
     Arrow collect of the projected frame — the numpy mirror of
     ``_collocate`` + ``_partition_traj_arrays`` (stable time sort within
-    each trajectory, same casts), bounded by DRIVER_FIT_MAX_ELEMS."""
+    each trajectory, same casts), bounded by the "deep_fit" dispatch bound."""
     pdf = sel.toPandas()
     if pdf.empty:
         return []
@@ -522,8 +502,7 @@ class VAMPNet(Estimator):
     bit-exactly via :func:`vampnet_train_arrays`."""
 
     def __init__(self, lagtime: int, layers: Sequence[int], n_epochs: int = 8,
-                 lr: float = 0.05, seed: int = 42, epsilon: float = 1e-6,
-                 driver_max_elems: int = DRIVER_FIT_MAX_ELEMS):
+                 lr: float = 0.05, seed: int = 42, epsilon: float = 1e-6):
         super().__init__()
         self.lagtime = int(lagtime)
         self.layers = list(layers)
@@ -531,7 +510,6 @@ class VAMPNet(Estimator):
         self.lr = float(lr)
         self.seed = int(seed)
         self.epsilon = float(epsilon)
-        self.driver_max_elems = int(driver_max_elems)
 
     def fit(self, df: DataFrame, x_cols: Sequence[str] = ("x",),
             traj_col: str = "traj_id", time_col: str = "t") -> "VAMPNet":
@@ -541,7 +519,7 @@ class VAMPNet(Estimator):
         k = int(self.layers[-1])
         tau = self.lagtime
         sel = _traj_sel(df, traj_col, time_col, list(x_cols))
-        if sel.count() * max(d, 1) <= self.driver_max_elems:
+        if dispatch.on_driver("deep_fit", sel.count() * max(d, 1)):
             params, scores = vampnet_train_arrays(
                 _driver_traj_arrays(sel, d), self.layers, tau,
                 self.n_epochs, self.lr, self.seed, self.epsilon,
@@ -657,8 +635,7 @@ class TAE(Estimator):
     of weight layers in the encoder)."""
 
     def __init__(self, lagtime: int, layers: Sequence[int], bottleneck_layer: int,
-                 n_epochs: int = 10, lr: float = 0.01, seed: int = 42,
-                 driver_max_elems: int = DRIVER_FIT_MAX_ELEMS):
+                 n_epochs: int = 10, lr: float = 0.01, seed: int = 42):
         super().__init__()
         if layers[0] != layers[-1]:
             raise ValueError("TAE reconstructs its input space: layers[0] must equal layers[-1]")
@@ -668,7 +645,6 @@ class TAE(Estimator):
         self.n_epochs = int(n_epochs)
         self.lr = float(lr)
         self.seed = int(seed)
-        self.driver_max_elems = int(driver_max_elems)
 
     def fit(self, df: DataFrame, x_cols: Sequence[str] = ("x",),
             traj_col: str = "traj_id", time_col: str = "t") -> "TAE":
@@ -677,7 +653,7 @@ class TAE(Estimator):
             raise ValueError(f"layers[0]={self.layers[0]} != len(x_cols)={d}")
         tau = self.lagtime
         sel = _traj_sel(df, traj_col, time_col, list(x_cols))
-        if sel.count() * max(d, 1) <= self.driver_max_elems:
+        if dispatch.on_driver("deep_fit", sel.count() * max(d, 1)):
             params, losses = tae_train_arrays(
                 _driver_traj_arrays(sel, d), self.layers, tau,
                 self.n_epochs, self.lr, self.seed,
@@ -875,7 +851,7 @@ class TVAE(Estimator):
 
     def __init__(self, lagtime: int, hidden: int, bottleneck: int,
                  n_epochs: int = 10, beta: float = 1.0, lr: float = 0.01,
-                 seed: int = 42, driver_max_elems: int = DRIVER_FIT_MAX_ELEMS):
+                 seed: int = 42):
         super().__init__()
         self.lagtime = int(lagtime)
         self.hidden = int(hidden)
@@ -884,14 +860,13 @@ class TVAE(Estimator):
         self.beta = float(beta)
         self.lr = float(lr)
         self.seed = int(seed)
-        self.driver_max_elems = int(driver_max_elems)
 
     def fit(self, df: DataFrame, x_cols: Sequence[str] = ("x",),
             traj_col: str = "traj_id", time_col: str = "t") -> "TVAE":
         d = len(x_cols)
         tau, beta, seed = self.lagtime, self.beta, self.seed
         sel = _traj_sel(df, traj_col, time_col, list(x_cols))
-        if sel.count() * max(d, 1) <= self.driver_max_elems:
+        if dispatch.on_driver("deep_fit", sel.count() * max(d, 1)):
             params, losses = tvae_train_arrays(
                 _driver_traj_arrays(sel, d), d, self.hidden, self.bottleneck,
                 tau, self.n_epochs, beta, self.lr, seed,

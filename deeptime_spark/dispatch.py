@@ -1,0 +1,65 @@
+"""The one place that says whether a gated operator finishes on the driver.
+
+An input small enough to collect finishes on the driver with numpy: short
+iterative Spark loops are bound by per-round scheduling, not data. Both
+paths return bit-identical results (tests/test_forced_distributed.py), so
+a bound only moves time. ``force("distributed")`` sends every decision to
+the distributed path; its only state is ``DEEPTIME_DISPATCH=distributed``,
+read at each decision, so a subprocess or ``monkeypatch.setenv`` works too.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import os
+
+ENV = "DEEPTIME_DISPATCH"
+
+# decision -> closed range of input sizes that runs on the driver, with the
+# warm-min crossover SCALE.md's round-13 table measured (x1 = sf0.1, 32 cores)
+BOUNDS = {
+    # triangle_counts, canonical edges: driver 1.55 vs 2.95 s at x1; x8 is
+    # above the bound and ties (8.56 vs 8.60 s)
+    "triangles": (1, 500_000),
+    # oriented wedges the driver triangle kernel may expand (its memory
+    # budget); above it the kernel hands back to the distributed join
+    "triangle_wedges": (0, 20_000_000),
+    # k_core / bfs_distances / label_propagation, collected edge rows: driver
+    # ~4x faster at x1, still ahead at x8 (label propagation 3.51 vs 3.68 s)
+    "graph": (1, 500_000),
+    # VAMPNet / TAE / TVAE fits, rows x features: driver replay ~2.05 s/100k
+    # elems, distributed epochs ~0.75 s/100k over a ~4 s floor; they cross
+    # near 270k (100k: 2.64 vs 4.84 s, 800k: 17.0 vs 10.1 s)
+    "deep_fit": (0, 262_144),
+    # connected_components union-find, pair rows: driver 3.59 vs 5.43 s at
+    # x1, 6.52 vs 10.75 s at x8
+    "union_find": (0, 2_000_000),
+    # DeterministicKMeans Lloyd, 1 if the init sample came back full, 0 if it
+    # holds the whole relation: driver 0.39 vs 3.07 s at x1
+    "kmeans": (0, 0),
+}
+
+
+def on_driver(decision: str, size: int) -> bool:
+    """True when ``decision`` on an input of ``size`` units runs on the driver."""
+    mode = os.environ.get(ENV, "")
+    if mode and mode != "distributed":
+        raise ValueError(f"{ENV}={mode!r}: expected unset or 'distributed'")
+    lo, hi = BOUNDS[decision]
+    return not mode and lo <= size <= hi
+
+
+@contextlib.contextmanager
+def force(mode: str):
+    """Run every gated operator on the distributed path inside the block."""
+    if mode != "distributed":
+        raise ValueError(f"force({mode!r}): the only forced mode is 'distributed'")
+    old = os.environ.get(ENV)
+    os.environ[ENV] = mode
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ[ENV]
+        else:
+            os.environ[ENV] = old

@@ -10,8 +10,6 @@ only ever runs inside buckets — never an all-pairs join.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from deeptime_spark.local_relation import local_df as _local_df
@@ -19,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
+from deeptime_spark import dispatch
 from deeptime_spark.operators.text import shingles, tokens
 
 # Default cap on LSH bucket size before pair generation. A degenerate
@@ -28,15 +27,6 @@ from deeptime_spark.operators.text import shingles, tokens
 # members are near-identical boilerplate whose representatives still
 # pair) for a hard quadratic bound per bucket.
 DEFAULT_MAX_BUCKET = 256
-
-# connected_components' driver/distributed dispatch bound —
-# env-overridable for the forced-distributed scale gate
-# (tools/forced_distributed_bench.py / SCALE.md; set to 0 to force the
-# distributed label-propagation loop; bit-identical either way).
-# Default unchanged.
-CC_LOCAL_THRESHOLD = int(
-    os.environ.get("DEEPTIME_CC_LOCAL_THRESHOLD", 2_000_000)
-)
 
 
 def _cap_buckets(df: DataFrame, bucket_cols: list[str], order_col: str, max_bucket: int) -> DataFrame:
@@ -826,7 +816,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    local_threshold: int | None = None,
     mode: str = "label",
 ) -> DataFrame:
     """Distributed connected components over a pair graph by iterative
@@ -850,12 +839,11 @@ def connected_components(
 
     Duplicate-pair graphs are usually TINY relative to the corpus (the
     corpus-scale work already happened in the LSH/verification stages), so
-    when the symmetrized edge list fits ``local_threshold`` rows
-    (default: module constant ``CC_LOCAL_THRESHOLD``, 2M, env-overridable
-    for the forced-distributed scale gate) it is
-    collected and solved with a driver union-find — one job instead of
-    2/round, bit-identical output. The distributed loop is the path for
-    genuinely huge pair graphs; set ``local_threshold=0`` to force it.
+    when the pair list fits the ``union_find`` bound of
+    :mod:`deeptime_spark.dispatch` it is collected and solved with a
+    driver union-find — one job instead of 2/round, bit-identical output.
+    The distributed loop is the path for genuinely huge pair graphs;
+    ``dispatch.force("distributed")`` forces it.
 
     ``mode="star"`` switches the distributed loop to the
     large-star/small-star edge contraction of Kiveris et al.,
@@ -880,9 +868,7 @@ def connected_components(
     # LSH+verify pipeline that multiplies the dominant cost several times.
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
     n_edges = e0.count()
-    if local_threshold is None:
-        local_threshold = CC_LOCAL_THRESHOLD
-    if 0 < local_threshold >= n_edges:
+    if dispatch.on_driver("union_find", n_edges):
         # union-find needs neither symmetrized nor distinct edges: collect
         # the raw pairs from cache and solve on the driver — no
         # union/distinct shuffle, bit-identical output.

@@ -39,9 +39,9 @@ oracle replays it densely) and is how production crawl ranks are run
 
 from __future__ import annotations
 
-import os
 import warnings
 
+from deeptime_spark import dispatch
 from deeptime_spark.local_relation import local_df as _local_df
 from pyspark.sql import DataFrame, functions as F
 
@@ -370,24 +370,6 @@ def hits(
     )
 
 
-# env-overridable so the forced-distributed scale gate
-# (tools/forced_distributed_bench.py, SCALE.md) can TIME the distributed
-# loops on the same inputs the driver kernels normally absorb — set to 0
-# to force the distributed path (results bit-identical either way; the
-# cross-path pytests pin it). Defaults unchanged.
-DRIVER_TRI_MAX_EDGES = int(
-    os.environ.get("DEEPTIME_DRIVER_TRI_MAX_EDGES", 500_000)
-)
-_DRIVER_TRI_MAX_WEDGES = 20_000_000
-# shared driver-dispatch bound for the integer-exact iterative kernels
-# (k-core peel, BFS, label propagation) — same convention as
-# connected_components' local_threshold (dedup.py): driver below the
-# bound, distributed above, bit-identical either way
-DRIVER_GRAPH_MAX_EDGES = int(
-    os.environ.get("DEEPTIME_DRIVER_GRAPH_MAX_EDGES", 500_000)
-)
-
-
 def _driver_triangle_counts(a, b):
     """Exact per-node triangle counts on the driver — the numpy
     vectorization of the SAME degree-ordered compact-forward algorithm
@@ -417,7 +399,7 @@ def _driver_triangle_counts(a, b):
     outdeg = np.bincount(u, minlength=n)
     indeg = np.bincount(v, minlength=n)
     n_wedges = int((outdeg.astype(np.int64) * indeg.astype(np.int64)).sum())
-    if n_wedges > _DRIVER_TRI_MAX_WEDGES:
+    if not dispatch.on_driver("triangle_wedges", n_wedges):
         return None
     # oriented-edge membership keys, sorted for binary search
     key_sorted = np.sort(u.astype(np.int64) * n + v)
@@ -512,9 +494,7 @@ def triangle_counts(
     # one re-scans the raw edges and re-runs the distinct exchange.
     und = e0.distinct().persist()
     n_edges = und.count()
-    if materialize and 0 < n_edges <= DRIVER_TRI_MAX_EDGES:
-        # driver below the bound, distributed above — the
-        # connected_components convention (dedup.py local_threshold):
+    if materialize and dispatch.on_driver("triangles", n_edges):
         # the canonical edge set is already materialized in cache, one
         # Arrow collect replaces the degree join + wedge join + count
         # aggregate + node outer-join (4 shuffles and ~8 jobs), and the
@@ -749,9 +729,8 @@ def label_propagation(
     und = e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
     und = und.groupBy("a", "b").agg(F.count(F.lit(1)).alias("w")).persist()
     n_edges = und.count()
-    if 0 < n_edges <= DRIVER_GRAPH_MAX_EDGES:
-        # driver below the bound (the connected_components /
-        # triangle_counts convention): one Arrow collect of the
+    if dispatch.on_driver("graph", n_edges):
+        # driver below the bound: one Arrow collect of the
         # aggregated relation replaces n_iter x (join + two aggregates
         # + localCheckpoint); the all-integer synchronous vote rule is
         # replayed exactly, so output is bit-identical at any layout
@@ -851,7 +830,7 @@ def k_core(
     ).where(F.col("a") != F.col("b"))
     base = e0.distinct().persist()
     n_edges = base.count()
-    if 0 < n_edges <= DRIVER_GRAPH_MAX_EDGES:
+    if dispatch.on_driver("graph", n_edges):
         # driver below the bound: the k-core fixed point is UNIQUE, so
         # the numpy peel is bit-identical to the distributed loop and
         # replaces per-round (2 semi-joins + degree aggregate +
@@ -979,7 +958,7 @@ def bfs_distances(
     # its repartitioned copy from the cache
     und = e.distinct().persist()
     n_und = und.count()
-    if 0 < n_und <= DRIVER_GRAPH_MAX_EDGES:
+    if dispatch.on_driver("graph", n_und):
         # driver below the bound: hop distances are a unique fixed
         # point, so the numpy level-synchronous BFS is bit-identical
         # and replaces up to max_depth x (frontier join + anti-join +

@@ -247,10 +247,11 @@ def test_kvadnet_spark_matches_replay(spark):
 
 
 def test_deep_driver_dispatch_bit_equal_to_distributed(spark):
-    """r12: below DRIVER_FIT_MAX_ELEMS the deep fits collect once and run
-    the *_train_arrays replay on the driver; forcing the bound to 0 runs
-    the original per-epoch distributed loop. Both paths use the identical
+    """r12: below the "deep_fit" dispatch bound the deep fits collect once
+    and run the *_train_arrays replay on the driver; forcing the
+    distributed path runs the original per-epoch distributed loop. Both paths use the identical
     per-traj kernels + sorted reduces, so params/curves are bit-equal."""
+    from deeptime_spark import dispatch
     from deeptime_spark.decomposition.deep import TVAE
 
     trajs = _toy_trajs(n_traj=3, n=600)
@@ -258,20 +259,23 @@ def test_deep_driver_dispatch_bit_equal_to_distributed(spark):
 
     kw = dict(lagtime=1, layers=[2, 8, 2], n_epochs=3, lr=0.05, seed=42)
     a = VAMPNet(**kw).fit(df, x_cols=["x0", "x1"]).fetch_model()
-    b = VAMPNet(**kw, driver_max_elems=0).fit(df, x_cols=["x0", "x1"]).fetch_model()
+    with dispatch.force("distributed"):
+        b = VAMPNet(**kw).fit(df, x_cols=["x0", "x1"]).fetch_model()
     assert a.scores == b.scores
     assert all(np.array_equal(p, q) for p, q in zip(a.params, b.params))
 
     kw = dict(lagtime=1, layers=[2, 8, 1, 8, 2], bottleneck_layer=2,
               n_epochs=3, lr=0.02, seed=42)
     a = TAE(**kw).fit(df, x_cols=["x0", "x1"]).fetch_model()
-    b = TAE(**kw, driver_max_elems=0).fit(df, x_cols=["x0", "x1"]).fetch_model()
+    with dispatch.force("distributed"):
+        b = TAE(**kw).fit(df, x_cols=["x0", "x1"]).fetch_model()
     assert a.losses == b.losses
     assert all(np.array_equal(p, q) for p, q in zip(a.params, b.params))
 
     kw = dict(lagtime=1, hidden=8, bottleneck=1, n_epochs=3, beta=0.1,
               lr=0.02, seed=42)
     a = TVAE(**kw).fit(df, x_cols=["x0", "x1"]).fetch_model()
-    b = TVAE(**kw, driver_max_elems=0).fit(df, x_cols=["x0", "x1"]).fetch_model()
+    with dispatch.force("distributed"):
+        b = TVAE(**kw).fit(df, x_cols=["x0", "x1"]).fetch_model()
     assert a.losses == b.losses
     assert all(np.array_equal(p, q) for p, q in zip(a.params, b.params))

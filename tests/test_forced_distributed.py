@@ -1,47 +1,180 @@
-"""The forced-distributed switches of tools/forced_distributed_bench.py.
+"""Driver-vs-distributed dispatch (deeptime_spark/dispatch.py).
 
-The gate times the distributed path of every driver-dispatched operator by
-setting ``FORCE_ENV``; a key the package never reads would silently time
-the driver path under a "distributed" label.
+Every gated operator finishes small inputs on the driver and large ones
+distributed; ``dispatch.force("distributed")`` — or the
+``DEEPTIME_DISPATCH=distributed`` variable tools/forced_distributed_bench.py
+sets — must reach every site, skip every driver kernel and change no
+result, on real inputs and on empty ones.
 """
 
-import glob
 import os
-import re
+import random
+import subprocess
 
 import numpy as np
+import pandas as pd
+import pytest
 
-from tools.forced_distributed_bench import FORCE_ENV
+import __spark_entry__ as entrymod
+from deeptime_spark import dispatch
+from deeptime_spark.clustering import kmeans
+from deeptime_spark.decomposition import deep
+from deeptime_spark.operators import dedup
+from deeptime_spark.operators import graph as G
+from test_partition_invariance import SF, normalize
+from tools.forced_distributed_bench import FORCE_ENV, QUERIES
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_every_force_env_key_is_read_by_the_package():
-    source = "\n".join(
-        open(p, encoding="utf-8").read()
-        for p in glob.glob(os.path.join(ROOT, "deeptime_spark", "**", "*.py"), recursive=True)
-    )
-    unread = [
-        key
-        for key in FORCE_ENV
-        if not re.search(r"(?:environ\.get|getenv)\(\s*[\"']" + re.escape(key) + r"[\"']", source)
+def test_only_dispatch_module_reads_deeptime_env():
+    tracked = subprocess.run(
+        ["git", "ls-files", "deeptime_spark/*.py"],
+        cwd=ROOT, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert tracked
+    offenders = [
+        path
+        for path in tracked
+        if path != "deeptime_spark/dispatch.py"
+        and os.path.exists(os.path.join(ROOT, path))
+        and "DEEPTIME_" in open(os.path.join(ROOT, path), encoding="utf-8").read()
     ]
-    assert unread == []
+    assert offenders == []
+
+
+def _edges(spark, empty):
+    rng = random.Random(17)
+    rows = [] if empty else [(rng.randint(0, 90), rng.randint(0, 90)) for _ in range(2000)]
+    rows += [] if empty else [(2, 8), (8, 2), (2, 8), (4, 4)]  # multi-edges + self-loop
+    return spark.createDataFrame(rows, "src long, dst long")
+
+
+def _trajs(spark, empty):
+    rows = []
+    for tid in range(0 if empty else 3):
+        x = np.random.default_rng(tid).normal(size=300).cumsum() * 0.1
+        rows += [(tid, t, float(x[t]), float(x[t] ** 2)) for t in range(len(x))]
+    return spark.createDataFrame(rows, "traj_id long, t long, x0 double, x1 double")
+
+
+def _points(spark, empty):
+    X = np.random.default_rng(55).normal(size=(0 if empty else 90, 3))
+    return spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(len(X))], "id long, x array<double>"
+    ).repartition(4)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _deep(est, key):
+    def fit(df):
+        m = est().fit(df, x_cols=["x0", "x1"]).fetch_model()
+        return getattr(m, key), [p.tolist() for p in m.params]
+    return fit
+
+
+KMEANS = dict(n_clusters=4, seed=3, max_iter=10, order_col="id", sample_size=91)
+
+# decision, module, driver kernel, input builder, run, empty-input outcome
+CASES = {
+    "triangles": (
+        "triangles", G, "_driver_triangle_counts", _edges,
+        lambda e: _rows(G.triangle_counts(e, include_degree=True)), [],
+    ),
+    "graph-k_core": (
+        "graph", G, "_driver_k_core", _edges, lambda e: _rows(G.k_core(e, k=5)), [],
+    ),
+    "graph-bfs": (
+        "graph", G, "_driver_bfs", _edges,
+        lambda e: _rows(G.bfs_distances(e, sources=[0], max_depth=3)), [(0, 0)],
+    ),
+    "graph-label_propagation": (
+        "graph", G, "_driver_label_propagation", _edges,
+        lambda e: _rows(G.label_propagation(e, n_iter=4)), [],
+    ),
+    "deep_fit-vampnet": (
+        "deep_fit", deep, "vampnet_train_arrays", _trajs,
+        _deep(lambda: deep.VAMPNet(lagtime=1, layers=[2, 8, 2], n_epochs=3, seed=42), "scores"),
+        ValueError,
+    ),
+    "deep_fit-tae": (
+        "deep_fit", deep, "tae_train_arrays", _trajs,
+        _deep(lambda: deep.TAE(lagtime=1, layers=[2, 8, 1, 8, 2], bottleneck_layer=2,
+                               n_epochs=3, lr=0.02, seed=42), "losses"),
+        ValueError,
+    ),
+    "deep_fit-tvae": (
+        "deep_fit", deep, "tvae_train_arrays", _trajs,
+        _deep(lambda: deep.TVAE(lagtime=1, hidden=8, bottleneck=1, n_epochs=3,
+                                beta=0.1, lr=0.02, seed=42), "losses"),
+        ValueError,
+    ),
+    "kmeans": (
+        "kmeans", kmeans, "deterministic_kmeans_numpy", _points,
+        lambda df: kmeans.DeterministicKMeans(**KMEANS).fit(df).fetch_model()
+        .cluster_centers.tolist(),
+        ValueError,
+    ),
+    "union_find": (
+        "union_find", dedup, "_union_find_local", _edges,
+        lambda e: _rows(dedup.connected_components(e, "src", "dst")), [],
+    ),
+}
+
+
+def _outcome(run, df):
+    try:
+        return run(df)
+    except ValueError as e:
+        return ValueError, str(e)
+
+
+def test_every_decision_has_a_forced_case():
+    # triangle_wedges is the driver triangle kernel's own budget: forcing
+    # "triangles" already keeps the kernel from running
+    assert {c[0] for c in CASES.values()} == set(dispatch.BOUNDS) - {"triangle_wedges"}
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_force_skips_driver_kernel_bit_equal(spark, monkeypatch, name):
+    _, module, kernel, build, run, empty = CASES[name]
+    calls = []
+    real = getattr(module, kernel)
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, kernel, spy)
+    df = build(spark, empty=False)
+    by_default = run(df)
+    assert calls == [1]
+    with dispatch.force("distributed"):
+        forced = run(df)
+    assert calls == [1]
+    assert forced == by_default
+
+    # empty input: the same outcome on both paths (rows or the ValueError)
+    df = build(spark, empty=True)
+    by_default = _outcome(run, df)
+    with dispatch.force("distributed"):
+        forced = _outcome(run, df)
+    assert forced == by_default
+    if empty is ValueError:
+        assert by_default[0] is ValueError
+    else:
+        assert by_default == empty
 
 
 def test_kmeans_dispatch_switch_forces_distributed_lloyd(spark, monkeypatch):
     """sample_size > n puts the whole relation in the init sample, which
-    the driver Lloyd loop absorbs; DEEPTIME_KMEANS_DRIVER_DISPATCH=0 must
-    run the distributed loop instead, with bit-identical centers."""
-    from deeptime_spark.clustering import kmeans
-
-    rng = np.random.default_rng(55)
-    X = rng.normal(size=(90, 3))
-    df = spark.createDataFrame(
-        [(int(i), X[i].tolist()) for i in range(len(X))], "id long, x array<double>"
-    ).repartition(4)
-    est = dict(n_clusters=4, seed=3, max_iter=10, order_col="id", sample_size=91)
-
+    the driver Lloyd loop absorbs; the gate's FORCE_ENV must run the
+    distributed loop instead, with bit-identical centers."""
+    assert FORCE_ENV == {"DEEPTIME_DISPATCH": "distributed"}
+    df = _points(spark, empty=False)
     calls = []
     driver_lloyd = kmeans.deterministic_kmeans_numpy
 
@@ -50,10 +183,38 @@ def test_kmeans_dispatch_switch_forces_distributed_lloyd(spark, monkeypatch):
         return driver_lloyd(*args, **kwargs)
 
     monkeypatch.setattr(kmeans, "deterministic_kmeans_numpy", spy)
-    m_driver = kmeans.DeterministicKMeans(**est).fit(df).fetch_model()
+    m_driver = kmeans.DeterministicKMeans(**KMEANS).fit(df).fetch_model()
     assert calls == [1]
 
-    monkeypatch.setenv("DEEPTIME_KMEANS_DRIVER_DISPATCH", "0")
-    m_dist = kmeans.DeterministicKMeans(**est).fit(df).fetch_model()
+    monkeypatch.setenv("DEEPTIME_DISPATCH", "distributed")
+    m_dist = kmeans.DeterministicKMeans(**KMEANS).fit(df).fetch_model()
     assert calls == [1]
     assert np.array_equal(m_dist.cluster_centers, m_driver.cluster_centers)
+
+
+def test_dispatch_rejects_unknown_modes(monkeypatch):
+    monkeypatch.delenv(dispatch.ENV, raising=False)
+    assert dispatch.on_driver("graph", 10)
+    assert not dispatch.on_driver("graph", 0)
+    with pytest.raises(ValueError):
+        with dispatch.force("driver"):
+            pass
+    with dispatch.force("distributed"):
+        assert not dispatch.on_driver("graph", 10)
+    assert dispatch.ENV not in os.environ
+    monkeypatch.setenv(dispatch.ENV, "driver")
+    with pytest.raises(ValueError):
+        dispatch.on_driver("graph", 10)
+
+
+@pytest.mark.parametrize("name", QUERIES)
+def test_gated_query_unchanged_when_forced_distributed(spark, name):
+    q = entrymod.queries()[name]
+    try:
+        by_default = normalize(q(spark, SF))
+        with dispatch.force("distributed"):
+            forced = normalize(q(spark, SF))
+    finally:
+        spark.catalog.clearCache()
+    assert len(by_default)
+    pd.testing.assert_frame_equal(forced, by_default, check_exact=True)

@@ -373,21 +373,17 @@ def test_k_core_raises_on_max_iter_exhaustion(spark):
     # chain at k=2 peels one endpoint pair per round — needs ~n/2
     # rounds, so max_iter=2 cannot reach the (empty) fixed point and
     # must raise rather than return degree<k nodes as core members.
-    from deeptime_spark.operators import graph as G
+    from deeptime_spark import dispatch
 
     chain = [(i, i + 1) for i in range(12)]
     df = spark.createDataFrame(chain, "src long, dst long")
-    # driver-dispatch path (12 edges < DRIVER_GRAPH_MAX_EDGES)
+    # driver-dispatch path (12 edges, below the "graph" dispatch bound)
     with pytest.raises(RuntimeError, match="fixed point"):
         k_core(df, 2, max_iter=2)
     # distributed path: the same exhaustion contract, forced
-    old_bound = G.DRIVER_GRAPH_MAX_EDGES
-    G.DRIVER_GRAPH_MAX_EDGES = 0
-    try:
+    with dispatch.force("distributed"):
         with pytest.raises(RuntimeError, match="fixed point"):
             k_core(df, 2, max_iter=2)
-    finally:
-        G.DRIVER_GRAPH_MAX_EDGES = old_bound
     # with enough rounds the chain peels away entirely
     assert k_core(df, 2, max_iter=20).count() == 0
 

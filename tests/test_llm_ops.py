@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.operators import dedup, similarity, text
 from deeptime_spark.operators.multimodal import extract_features, frame_sample_plan, media_from_documents
 
@@ -410,7 +411,8 @@ def test_connected_components_matches_union_find(spark):
     # both paths must agree: driver union-find fast path and the
     # distributed min-label propagation loop
     got_local = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    got = {r["node"]: r["component"] for r in connected_components(df, local_threshold=0).collect()}
+    with dispatch.force("distributed"):
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got_local == got
 
     parent = {}
@@ -449,7 +451,8 @@ def test_connected_components_long_chain_converges_fast(spark):
 
     edges = [(i, i + 1) for i in range(200)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(8)
-    got = connected_components(df, max_iter=12, local_threshold=0).collect()
+    with dispatch.force("distributed"):
+        got = connected_components(df, max_iter=12).collect()
     assert len(got) == 201
     assert all(r["component"] == 0 for r in got)
 
@@ -462,10 +465,11 @@ def test_connected_components_star_mode_equivalence(spark):
     edges = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (20, 21),
              (5, 6), (6, 5), (30, 31), (31, 32), (32, 30), (7, 7)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
-    lab = {r["node"]: r["component"]
-           for r in connected_components(df, local_threshold=0).collect()}
-    star = {r["node"]: r["component"]
-            for r in connected_components(df, local_threshold=0, mode="star").collect()}
+    with dispatch.force("distributed"):
+        lab = {r["node"]: r["component"]
+               for r in connected_components(df).collect()}
+        star = {r["node"]: r["component"]
+                for r in connected_components(df, mode="star").collect()}
     assert star == lab
     # local fast path is identical regardless of mode
     loc = {r["node"]: r["component"]
@@ -483,7 +487,8 @@ def test_connected_components_star_long_path_log_rounds(spark):
 
     edges = [(i, i + 1) for i in range(300)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(8)
-    got = connected_components(df, max_iter=12, local_threshold=0, mode="star").collect()
+    with dispatch.force("distributed"):
+        got = connected_components(df, max_iter=12, mode="star").collect()
     assert len(got) == 301
     assert all(r["component"] == 0 for r in got)
     with pytest.raises(ValueError):

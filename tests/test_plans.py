@@ -695,6 +695,7 @@ def test_kcore_small_regime_broadcasts_survivors(spark):
     shuffle per round (judge round-7 item 3)."""
     from pyspark.sql import functions as F
 
+    from deeptime_spark import dispatch
     from deeptime_spark.operators import graph as G
 
     captured = []
@@ -711,13 +712,11 @@ def test_kcore_small_regime_broadcasts_survivors(spark):
         return orig(df)
 
     G.F.broadcast = spy
-    old_bound = G.DRIVER_GRAPH_MAX_EDGES
-    G.DRIVER_GRAPH_MAX_EDGES = 0  # force the distributed loop under test
     try:
-        G.k_core(edges, k=8)
+        with dispatch.force("distributed"):  # the distributed loop under test
+            G.k_core(edges, k=8)
     finally:
         G.F.broadcast = orig
-        G.DRIVER_GRAPH_MAX_EDGES = old_bound
     # two broadcast survivor sides per peel round, at least one round
     assert len(captured) >= 2
 

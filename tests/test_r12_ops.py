@@ -384,6 +384,7 @@ def test_triangle_driver_dispatch_bit_equal(spark):
     graph with hubs, multi-edges, self-loops, and both orientations."""
     import random
 
+    from deeptime_spark import dispatch
     from deeptime_spark.operators import graph as G
 
     random.seed(11)
@@ -395,15 +396,11 @@ def test_triangle_driver_dispatch_bit_equal(spark):
         r.node: (r.n_triangles, r.degree)
         for r in G.triangle_counts(e, include_degree=True).collect()
     }
-    old = G.DRIVER_TRI_MAX_EDGES
-    try:
-        G.DRIVER_TRI_MAX_EDGES = 0  # force the distributed wedge join
+    with dispatch.force("distributed"):  # the distributed wedge join
         dist = {
             r.node: (r.n_triangles, r.degree)
             for r in G.triangle_counts(e, include_degree=True).collect()
         }
-    finally:
-        G.DRIVER_TRI_MAX_EDGES = old
     assert drv == dist and len(drv) > 100
 
 
@@ -414,6 +411,7 @@ def test_graph_driver_dispatch_bit_equal(spark):
     BFS, a deterministic synchronous vote rule for LP)."""
     import random
 
+    from deeptime_spark import dispatch
     from deeptime_spark.operators import graph as G
 
     random.seed(17)
@@ -423,12 +421,8 @@ def test_graph_driver_dispatch_bit_equal(spark):
 
     def both(fn):
         drv = fn()
-        old = G.DRIVER_GRAPH_MAX_EDGES
-        G.DRIVER_GRAPH_MAX_EDGES = 0  # force the distributed loops
-        try:
+        with dispatch.force("distributed"):
             dist = fn()
-        finally:
-            G.DRIVER_GRAPH_MAX_EDGES = old
         return drv, dist
 
     d, s = both(lambda: {r.node: r.degree for r in G.k_core(e, k=5).collect()})

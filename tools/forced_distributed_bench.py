@@ -8,17 +8,16 @@ never timed (r12 verdict, "What's wrong" #1). This tool times every
 dispatch-gated bench query twice per fixture:
 
 - ``driver``: defaults (the dispatch bounds as shipped);
-- ``distributed``: every dispatch bound forced to 0 through the
-  env overrides (DEEPTIME_DRIVER_{TRI,GRAPH}_MAX_EDGES,
-  DEEPTIME_DRIVER_FIT_MAX_ELEMS, DEEPTIME_CC_LOCAL_THRESHOLD,
-  DEEPTIME_KMEANS_DRIVER_DISPATCH=0) — results are bit-identical by the
+- ``distributed``: every decision forced to the distributed path by
+  ``DEEPTIME_DISPATCH=distributed`` (``FORCE_ENV``, read by
+  deeptime_spark/dispatch.py) — results are bit-identical by the
   operators' cross-path contracts (pinned in tests/), so both modes run
   the SAME queries and the oracle stays green either way.
 
 Fixtures: sf0.1 and the x8 replicated weak-scaling dir
 (tools/scale_bench.py's fixture — built here on first use). Each
-(fixture, mode) runs ``tools/anchor_bench.py`` in its OWN subprocess
-because the deep-estimator bound is captured at import time.
+(fixture, mode) runs ``tools/anchor_bench.py`` in its OWN subprocess so
+every mode starts from a fresh JVM with cold caches.
 
 Usage: python tools/forced_distributed_bench.py [x8]
 Prints one JSON line; record the table in SCALE.md.
@@ -50,13 +49,7 @@ QUERIES = [
     "dedup_components",
 ]
 
-FORCE_ENV = {
-    "DEEPTIME_DRIVER_TRI_MAX_EDGES": "0",
-    "DEEPTIME_DRIVER_GRAPH_MAX_EDGES": "0",
-    "DEEPTIME_DRIVER_FIT_MAX_ELEMS": "0",
-    "DEEPTIME_CC_LOCAL_THRESHOLD": "0",
-    "DEEPTIME_KMEANS_DRIVER_DISPATCH": "0",
-}
+FORCE_ENV = {"DEEPTIME_DISPATCH": "distributed"}
 
 
 def run_anchor(sf_dir: str, mode: str) -> dict:
