@@ -1,7 +1,8 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Runs a representative subset of ``__spark_entry__.queries()`` (heavy scan,
-shuffle, window, LSH, top-k, covariance, and estimator paths) on
+Runs the headline subset of ``__spark_entry__.queries()`` — the queries
+declared ``@query(bench=True)``, listed in ``__spark_entry__.BENCH`` (heavy
+scan, shuffle, window, LSH, top-k, covariance, and estimator paths) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 ``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``.
 
@@ -16,204 +17,6 @@ import os
 import re
 import sys
 import time
-
-
-HEADLINE = [
-    # relational surface
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_supplier_volume",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "nation_order_volume",
-    "brand_volume",
-    # text / dedup
-    "doc_token_stats",
-    "doc_quality",
-    "doc_language_summary",
-    "doc_shingle_count",
-    "minhash_bands",
-    "simhash_pairs",
-    "embedding_near_dup",
-    # similarity
-    "knn_bruteforce",
-    "lsh_topk",
-    "ivf_topk",
-    "ivfpq_topk",
-    # lag / window / markov / stats
-    "event_timeshifted",
-    "event_sliding_avg",
-    "event_moments",
-    "event_transition_counts",
-    "event_sessions",
-    "event_histogram2d",
-    "event_two_step_counts",
-    "event_weighted_counts",
-    "event_confidence_interval",
-    "kernel_gram_events",
-    "dedup_verified_pairs",
-    # estimator pipelines
-    "tica_events",
-    "kmeans_embeddings",
-    "embedding_whiten",
-    "hmm_viterbi_events",
-    # round-4 surface: duplicate clustering, filter rules, LM scoring,
-    # substring fingerprints, range join
-    "dedup_components",
-    "doc_gopher_quality",
-    "doc_gopher_repetition",
-    "doc_winnowing",
-    "doc_lm_score",
-    "event_session_range_join",
-    # round-4 late additions: semantic dedup, chunk/pack layer, and the
-    # end-to-end cleaning composition
-    "semantic_dedup",
-    "doc_span_dedup",
-    "doc_c4_filter",
-    "doc_line_dedup",
-    "doc_chunks",
-    "doc_packing",
-    "corpus_clean_pipeline",
-    # data-mixing surface
-    "domain_mixture",
-    "doc_stratified_sample",
-    "doc_pii_scrub",
-    "corpus_prep_pipeline",
-    # round-4 adapted TPC-H additions (fact-agg + conditional-distinct
-    # shapes; both weak-scale-tested in SCALE.md)
-    "q18_large_volume_customers",
-    "q21_waiting_supplier",
-    # round-5: the heaviest TPC-H join trees (never timed before r5) —
-    # q9 is the largest (lineitem x part x supplier x nation), q7/q8 are
-    # the multi-nation broadcast-dim star shapes
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    # round-5 surface: web/crawl layer, bigram-LM scoring, and the
-    # crawl->shards composition
-    "web_host_stats",
-    "doc_lm2_score",
-    "web_corpus_pipeline",
-    # round-6: physical shard sink/scan round-trip, the tokenize-and-pack
-    # training-sequence builder, and the sketch layer
-    "shards_roundtrip",
-    "token_pack_sequences",
-    "doc_hll_shingles",
-    "doc_hll_rollup",
-    "doc_bloom_decontaminate",
-    "doc_cms_word_counts",
-    "doc_bm25_search",
-    "doc_sparse_cosine",
-    "corpus_profile",
-    "corpus_snapshot_diff",
-    "event_kmv_quantiles",
-    "doc_incremental_dedup",
-    "doc_novelty",
-    "event_funnel",
-    "event_retention",
-    # round-7: prefix families, asymmetric containment, robust anomaly
-    "doc_prefix_dup",
-    "doc_containment_pairs",
-    "event_anomaly_mad",
-    "event_pagerank",
-    "doc_edit_pairs",
-    "event_hits",
-    "doc_pmi_collocations",
-    "event_cusum",
-    "media_ahash_pairs",
-    "doc_compression_ratio",
-    "embedding_silhouette",
-    "event_triangles",
-    "event_communities",
-    "event_kcore",
-    # round-8: sliding-shingle substring spans + excision, hybrid RRF
-    # retrieval, z-order layout, ANN recall gate
-    "doc_dup_substrings",
-    "doc_substring_excise",
-    "doc_hybrid_search",
-    "event_zorder",
-    "embedding_ann_recall",
-    "doc_topic_terms",
-    "doc_weighted_sample",
-    "ivf_index_probe",
-    # round-8 late: EWMA fold, curriculum schedule, persisted postings
-    # index, KMV set-operation overlap
-    "event_ewma",
-    "doc_quality_curriculum",
-    "doc_postings_index",
-    "corpus_overlap_kmv",
-    "media_phash_pairs",
-    "doc_bpe_fertility",
-    "doc_setsim_pairs",
-    "event_bfs",
-    "doc_setsim_drop",
-    "event_kmv_rollup",
-    "jsonl_roundtrip",
-    "event_top_paths",
-    # round-9: torch-free deep estimators (full-batch distributed
-    # training: 2 jobs/epoch VAMPNet, 1 TAE/TVAE, sample-bounded KVADNet)
-    # and the four estimator families promoted to the harness
-    "vampnet_events",
-    "tae_events",
-    "tvae_events",
-    "kvadnet_events",
-    "dedup_recall_gate",
-    "rate_matrix_events",
-    "oom_events",
-    "amm_events",
-    "sensitivity_events",
-    # round-9b: global shuffle (two-level prefix-sum permutation), SQ8
-    # quantization gate, MMR diversified rerank
-    "streaming_constraint_audit",
-    "doc_group_sample",
-    "dedup_threshold_sweep",
-    "customer_scd2_merge",
-    "orders_constraint_audit",
-    "embedding_rp_recall",
-    "doc_ngram_diversity",
-    "event_clustering_coeff",
-    "event_assortativity",
-    "event_harmonic",
-    "event_betweenness",
-    "doc_temperature_mixture",
-    "corpus_global_shuffle",
-    "embedding_sq8_recall",
-    "embedding_mmr_rerank",
-    # round-10: measure-then-dispatch tuned dedup (S-curve banding +
-    # recall-gate fallback on the x4 clone fixture) and the streaming
-    # SCD2 dimension merge (4 micro-batches, versioned snapshot)
-    "corpus_tuned_dedup",
-    "streaming_scd2_merge",
-    # round-10b: unigram-LM tokenizer (EM over the bounded word table +
-    # Arrow Viterbi encode) next to the BPE twin
-    "doc_unigram_fertility",
-    # round-10b: pre-shuffle key-skew diagnostic and blocked entity
-    # resolution (levenshtein scoring over capped blocking joins)
-    "event_skew_profile",
-    "customer_record_linkage",
-    "customer_entity_resolution",
-    "customer_linkage_probe",
-    # round-11: blocking pair-completeness gate (bounded probe + over-cap
-    # accounting), bounded-probe tuned-dedup dispatch, streaming linkage
-    # probe, and the six estimator promotions
-    "customer_linkage_gate",
-    "corpus_tuned_dedup_probe",
-    "streaming_linkage_probe",
-    "customer_delta_pipeline",
-    "customer_k_anonymity",
-    "edmd_events",
-    "kcca_events",
-    "kvad_events",
-    "minibatch_kmeans_events",
-    "tv_derivative_events",
-    "vamp_cv_events",
-    # round-12: score-from-data + transfer-operator propagation
-    # (covariance-aggregate estimator shapes) and the blocking-key
-    # advisor (shared probe truth, n_specs * map-combined cap scans)
-    "vamp_score_data_events",
-    "koopman_propagate_events",
-    "customer_blocking_advisor",
-]
 
 
 def main() -> None:
@@ -273,10 +76,8 @@ def main() -> None:
     except Exception:
         pass
     def run_pass(out: dict[str, float]) -> None:
-        for name in HEADLINE:
-            fn = qs.get(name)
-            if fn is None:
-                continue
+        for name in entrymod.BENCH:
+            fn = qs[name]
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)

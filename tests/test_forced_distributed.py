@@ -22,7 +22,7 @@ from deeptime_spark.decomposition import deep
 from deeptime_spark.operators import dedup
 from deeptime_spark.operators import graph as G
 from test_partition_invariance import SF, normalize
-from tools.forced_distributed_bench import FORCE_ENV, QUERIES
+from tools.forced_distributed_bench import FORCE_ENV
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -207,7 +207,7 @@ def test_dispatch_rejects_unknown_modes(monkeypatch):
         dispatch.on_driver("graph", 10)
 
 
-@pytest.mark.parametrize("name", QUERIES)
+@pytest.mark.parametrize("name", entrymod.DISPATCH)
 def test_gated_query_unchanged_when_forced_distributed(spark, name):
     q = entrymod.queries()[name]
     try:

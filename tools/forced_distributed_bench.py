@@ -5,7 +5,8 @@ DeterministicKMeans Lloyd, connected_components union-find) absorb the
 bench's sf0.1 inputs entirely, so the DISTRIBUTED code paths — the ones
 that matter at 100 TB — were exercised only by bit-equality pytests,
 never timed (r12 verdict, "What's wrong" #1). This tool times every
-dispatch-gated bench query twice per fixture:
+dispatch-gated query (``@query(dispatch=True)``, listed in
+``__spark_entry__.DISPATCH``) twice per fixture:
 
 - ``driver``: defaults (the dispatch bounds as shipped);
 - ``distributed``: every decision forced to the distributed path by
@@ -32,30 +33,14 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
-QUERIES = [
-    # §14 graph kernels
-    "event_triangles",
-    "event_clustering_coeff",
-    "event_kcore",
-    "event_bfs",
-    "event_communities",
-    # §10 deep estimators
-    "vampnet_events",
-    "tae_events",
-    "tvae_events",
-    # §6 DeterministicKMeans
-    "kmeans_embeddings",
-    # connected_components (driver union-find convention)
-    "dedup_components",
-]
-
 FORCE_ENV = {"DEEPTIME_DISPATCH": "distributed"}
 
 
 def run_anchor(sf_dir: str, mode: str) -> dict:
-    """Time QUERIES with tools/anchor_bench.py in a fresh process (1 cold +
-    2 warm trials, the gate's r13 protocol), under FORCE_ENV for
-    ``distributed``."""
+    """Time the DISPATCH queries with tools/anchor_bench.py in a fresh
+    process (1 cold + 2 warm trials, the gate's r13 protocol), under
+    FORCE_ENV for ``distributed``."""
+    import __spark_entry__ as entrymod
     from deeptime_spark.session import PROFILES
 
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
@@ -64,7 +49,7 @@ def run_anchor(sf_dir: str, mode: str) -> dict:
     if mode == "distributed":
         env.update(FORCE_ENV)
     r = subprocess.run(
-        [sys.executable, os.path.join(HERE, "anchor_bench.py"), *QUERIES],
+        [sys.executable, os.path.join(HERE, "anchor_bench.py"), *entrymod.DISPATCH],
         env=env, capture_output=True, text=True, timeout=3600,
     )
     if r.returncode != 0:

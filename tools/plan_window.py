@@ -9,7 +9,9 @@ fresh driver evidence to the front:
 2. then everything else oldest-last-green-round first.
 
 Prints the 50-name window as a Python list literal ready to paste into
-``__spark_entry__._WINDOW_ORDER``, plus the staleness distribution.
+``__spark_entry__._WINDOW_ORDER`` (in the query-registry section at the
+top of the queries, beside ``query`` and ``queries()``), plus the
+staleness distribution. Reads the checkout this script lives in.
 
 Usage: python tools/plan_window.py
 """
@@ -18,16 +20,19 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
 
     qs = list(entrymod.queries().keys())
     evid: dict[str, list[tuple[int, bool]]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
         data = json.load(open(path))
         entries = data.get("queries", data) if isinstance(data, dict) else {}

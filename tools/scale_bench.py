@@ -1,5 +1,6 @@
 """Weak-scaling harness: replicate the sf0.1 tables k-fold (k = 1,2,4,8)
-with id offsets and time representative queries at each multiple.
+with id offsets and time the queries declared ``@query(scale=True)``
+(``__spark_entry__.SCALE``) at each multiple.
 
 On fixed local cores, a linear-work operator's wall time should grow
 ~proportionally with data (slope ~= k); a superlinear slope exposes a
@@ -32,6 +33,8 @@ REPLICATE = {
     "events": ("event_id", "user_id"),
     "documents": ("doc_id",),
     "embeddings": ("vec_id",),
+    # l_orderkey is offset per replica so fact-side groups (q18, q21)
+    # multiply rather than deepen
     "lineitem": ("l_orderkey",),
     # r11: replicate customer so the linkage/ER family gets MEASURED
     # slopes (the r10 rows were flat by fixture construction). The
@@ -45,128 +48,6 @@ REPLICATE = {
 OFFSET = 10_000_000
 TABLE_OFFSET = {"customer": 1_000_000}
 FIXTURE_VERSION = "v2"  # bump when REPLICATE/offsets change (stale dirs rebuild)
-
-QUERIES = [
-    # text / dedup over documents (dup density grows with k)
-    "doc_token_stats", "minhash_bands", "dedup_verified_pairs",
-    "dedup_components", "simhash_pairs", "doc_gopher_repetition",
-    "doc_chunks", "doc_packing", "semantic_dedup",
-    "corpus_clean_pipeline", "doc_decontaminate",
-    # round-4 surface: span/line dedup, C4 rules, mixing, tokenizer,
-    # model-based quality
-    "doc_span_dedup", "doc_line_dedup", "doc_c4_filter",
-    "domain_mixture", "doc_stratified_sample",
-    "bpe_tokens", "doc_quality_classifier",
-    # similarity over embeddings
-    "knn_bruteforce", "ivf_topk", "ivfpq_topk",
-    # relational over lineitem (q18/q21: shuffle-agg + join shapes from
-    # the round-4 adapted TPC-H set; l_orderkey is offset per replica so
-    # fact-side groups multiply rather than deepen)
-    "q1_pricing_summary", "q6_forecast_revenue",
-    "q18_large_volume_customers", "q21_waiting_supplier",
-    # trajectory ops over events
-    "event_transition_counts", "event_moments", "event_sliding_avg",
-    "hmm_viterbi_events",
-    # round-5: estimator pipelines (covariance/counting-bound) + the
-    # heaviest TPC-H join tree + the web layer
-    "tica_events", "tram_events", "vamp_score_events",
-    "q9_product_profit", "web_host_stats", "doc_lm2_score",
-    # round-6: the stage compositions that had only been scaled
-    # individually (crawl->shards, sink assignment), gap-filled resample
-    "web_corpus_pipeline", "shard_manifest", "event_resample",
-    # round-6: tokenize-and-pack, the physical shard round-trip, and the
-    # sketch layer (HLL distinct + Bloom decontamination)
-    "token_pack_sequences", "shards_roundtrip",
-    "doc_hll_shingles", "doc_bloom_decontaminate", "doc_cms_word_counts",
-    "doc_bm25_search", "doc_sparse_cosine",
-    # round-6 late: profiling, snapshot diff, leakage-safe split
-    "corpus_profile", "corpus_snapshot_diff", "doc_leakage_split",
-    "event_kmv_quantiles", "doc_incremental_dedup", "doc_novelty", "event_funnel", "event_retention",
-    # round-7: prefix families, asymmetric containment, robust anomaly,
-    # iterative graph rank, segment-blocked edit-distance join (replica
-    # offsets multiply the planted near-match families linearly)
-    "doc_prefix_dup", "doc_containment_pairs", "event_anomaly_mad",
-    "event_pagerank", "doc_edit_pairs",
-    # round-7 late: HITS, PMI collocations, CUSUM changepoints
-    "event_hits", "doc_pmi_collocations", "event_cusum",
-    "media_ahash_pairs",
-    "doc_compression_ratio",
-    "embedding_silhouette",
-    "event_triangles",
-    "event_communities",
-    "event_kcore",
-    # round-8: sliding-shingle exact-substring spans (dup density and
-    # span count both grow with the replica count)
-    "doc_dup_substrings", "doc_substring_excise",
-    # round-8: hybrid RRF retrieval, z-order layout key, ANN recall gate
-    "doc_hybrid_search", "event_zorder", "embedding_ann_recall",
-    "doc_topic_terms", "doc_weighted_sample", "ivf_index_probe",
-    "doc_hll_rollup",
-    # round-8 late: sequential per-key fold, per-group ntile schedule,
-    # bucket-pruned postings probes, sketch-pair overlap algebra
-    "event_ewma", "doc_quality_curriculum", "doc_postings_index",
-    "corpus_overlap_kmv",
-    # round-8 late batch 2: spectral perceptual hash, tokenizer fertility
-    "media_phash_pairs", "doc_bpe_fertility",
-    # round-8 late batch 3: exact prefix-filter set-similarity join
-    # (replica clone families multiply qualifying pairs)
-    "doc_setsim_pairs",
-    # round-8 late batch 4: BFS frontier loop, exact-dedup composition
-    "event_bfs", "doc_setsim_drop",
-    # round-8 late batch 5: mergeable bottom-k quantile sketch table
-    "event_kmv_rollup",
-    # round-8 late batch 6: JSONL codec round-trip, path mining
-    "jsonl_roundtrip", "event_top_paths",
-    # round-9: torch-free deep estimators (per-traj partial jobs per
-    # epoch — work linear in rows, reduce linear in trajectories) and
-    # the four estimator families promoted to the harness
-    "vampnet_events", "tae_events", "tvae_events", "kvadnet_events", "dedup_recall_gate", "rate_matrix_events", "oom_events",
-    "amm_events", "sensitivity_events",
-    # round-9b: global shuffle permutation, SQ8 recall gate, MMR rerank
-    "corpus_global_shuffle", "embedding_sq8_recall", "embedding_mmr_rerank", "doc_temperature_mixture", "event_betweenness", "event_harmonic", "event_clustering_coeff", "event_assortativity", "doc_ngram_diversity", "embedding_rp_recall", "orders_constraint_audit", "customer_scd2_merge", "dedup_threshold_sweep", "doc_group_sample",
-    # round-10: tuned-dedup dispatch (clone density rises with k by
-    # construction, so the probe measurement and the fallback PPJoin
-    # both scale with the fixture's dup saturation)
-    "corpus_tuned_dedup",
-    # round-10b: unigram tokenizer — corpus-scale work is the same one
-    # word-count aggregate BPE scales by; EM cost is dictionary-bound
-    "doc_unigram_fertility",
-    # round-10b: skew diagnostic (one key-count agg) + blocked record
-    # linkage (blocking joins bounded by the per-block cap; pair volume
-    # grows with block density like the dedup family)
-    "event_skew_profile",
-    "customer_record_linkage",
-    "customer_entity_resolution",
-    "customer_linkage_probe",
-    # round-11: probe-mode tuned dedup (probe = 10 docs/source stays
-    # FIXED while the corpus replicates — the measurement cost is
-    # scale-independent, only the chosen path's corpus work grows) and
-    # the r11 estimator promotions with corpus-scale distributed stages.
-    # customer_linkage_gate is deliberately NOT laddered: its harness
-    # probe is a fixed FRACTION (mod 13) of the corpus, so the exact
-    # all-pairs truth grows k^2 by design — at scale the caller passes a
-    # bounded probe (the documented contract), which this fixture
-    # cannot express without changing the query.
-    "corpus_tuned_dedup_probe",
-    "customer_delta_pipeline",
-    "customer_k_anonymity",
-    "edmd_events",
-    "kcca_events",
-    "kvad_events",
-    "minibatch_kmeans_events",
-    "tv_derivative_events",
-    "vamp_cv_events",
-    # round-12: one covariance aggregate each (score-from-data runs
-    # three of them; the propagation adds a codegen projection pass).
-    # customer_blocking_advisor is NOT laddered for the same reason as
-    # customer_linkage_gate: its harness probe is a fixed FRACTION
-    # (mod 13) of the corpus, so the exact all-pairs truth grows k^2 by
-    # fixture construction; at scale the caller passes a bounded probe
-    # (the documented contract).
-    "vamp_score_data_events",
-    "koopman_propagate_events",
-]
-
 
 def build_dir(spark, k: int) -> str:
     out = f"{ROOT}/x{k}"
@@ -218,12 +99,10 @@ def main() -> None:
     dirs = {k: build_dir(spark, k) for k in ks}
     # optional subset: SPARK_GRAFT_SCALE_QUERIES="tica_events,tram_events"
     only = os.environ.get("SPARK_GRAFT_SCALE_QUERIES", "")
-    run_list = [q for q in QUERIES if q in set(only.split(","))] if only else QUERIES
+    run_list = [q for q in entrymod.SCALE if not only or q in only.split(",")]
     results: dict[str, dict[str, float]] = {}
     for name in run_list:
-        fn = qs.get(name)
-        if fn is None:
-            continue
+        fn = qs[name]
         results[name] = {}
         # warm pass: one untimed run at the smallest multiple so the x1
         # base excludes whole-stage-codegen JIT / Arrow worker spin-up.
