@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from deeptime_spark.local_relation import local_df as _local_df
 from deeptime_spark.session import read_table as _read
+from deeptime_spark.streaming.replay import Replay
 
 # ----------------------------------------------------------------- loaders
 
@@ -35,9 +36,10 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 def _rmtree_quiet(*paths: str) -> None:
-    """Best-effort temp-dir cleanup for the streaming replay queries —
-    repeated bench/verify runs in one long-lived session must not
-    accumulate source/checkpoint dirs."""
+    """Best-effort temp-dir cleanup for the batch queries that write and
+    re-read a table — repeated bench/verify runs in one long-lived
+    session must not accumulate temp dirs. (The streaming queries'
+    dirs belong to their ``Replay``.)"""
     import shutil
 
     for p in paths:
@@ -45,13 +47,16 @@ def _rmtree_quiet(*paths: str) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
-def _drop_view_quiet(spark: SparkSession, sink: str | None) -> None:
-    """finally-block sink cleanup: tolerate a sink that was never created."""
-    if sink:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
+def _ordered_chunks(df: DataFrame, *order: str) -> list[DataFrame]:
+    """``df`` as four single-file frames of consecutive rows in
+    ``order``: the source of the replays whose state depends on arrival
+    order (``Replay.source`` keeps the list order)."""
+    n_rows = df.count()
+    chunked = df.withColumn(
+        "_chunk",
+        ((F.row_number().over(Window.orderBy(*order)) - 1) * 4 / F.lit(n_rows)).cast("int"),
+    )
+    return [chunked.where(F.col("_chunk") == i).drop("_chunk").coalesce(1) for i in range(4)]
 
 
 def _state_expr():
@@ -1634,8 +1639,6 @@ def _q_streaming_incremental_dedup(spark, sf_dir):
     so the union of per-batch results MUST equal the one-shot batch
     probe — the oracle is the batch replica verbatim
     (oracle_doc_incremental_dedup)."""
-    import tempfile
-
     from deeptime_spark.operators.dedup import write_signature_index
     from deeptime_spark.streaming.accumulate import streaming_probe_signature_index
 
@@ -1644,28 +1647,20 @@ def _q_streaming_incremental_dedup(spark, sf_dir):
     new = docs.where(F.col("doc_id") % 3 == 0).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="sig_stream_")
-    idx, src, out, ckpt = (tmp + s for s in ("/index", "/src", "/out", "/ckpt"))
-    try:
+    with Replay(spark) as r:
+        idx, out = r.dir("sig_index_"), r.dir("sig_out_")
         write_signature_index(old, idx, n_hashes=32, bands=8)
-        new.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(new.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        r.wait(
+            streaming_probe_signature_index(
+                spark, r.source([new.repartition(4)]), idx, out,
+                threshold=0.5, n_hashes=32, bands=8, checkpoint=r.dir("sig_ckpt_"),
+            )
         )
-        q = streaming_probe_signature_index(
-            spark, stream, idx, out, threshold=0.5, n_hashes=32, bands=8,
-            checkpoint=ckpt,
-        )
-        q.awaitTermination()
         res = spark.read.parquet(out).select(
             "new_id", "old_id", F.round(F.col("est_jaccard"), 6).alias("est_jaccard")
         )
         schema = res.schema
         rows = res.collect()
-    finally:
-        _rmtree_quiet(tmp)
     return _local_df(spark, rows, schema)
 
 
@@ -1872,12 +1867,6 @@ def _q_streaming_cusum(spark, sf_dir):
     the one-shot batch CUSUM, so this shares event_cusum's PURE-SQL
     oracle (update-mode emissions are monotone, so MAX-folding the
     memory sink recovers the final state)."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window
-
     from deeptime_spark.streaming.accumulate import streaming_cusum
 
     ev = _read(spark, sf_dir, "events").select(
@@ -1892,47 +1881,13 @@ def _q_streaming_cusum(spark, sf_dir):
         .agg(F.floor(F.sum("cents") / F.count(F.lit(1))).alias("c"))
         .collect()
     }
-    w = Window.orderBy("ts", "event_id")
-    n_rows = ev.count()
-    chunked = ev.withColumn(
-        "_chunk", ((F.row_number().over(w) - 1) * 4 / F.lit(n_rows)).cast("int")
-    )
-    src_dir = tempfile.mkdtemp(prefix="cusum_src_")
-    sink = ckpt_dir = None
-    try:
-        for i in range(4):
-            before = set(os.listdir(src_dir))
-            (
-                chunked.where(F.col("_chunk") == i)
-                .drop("_chunk")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src_dir)
-            )
-            for f in set(os.listdir(src_dir)) - before:
-                if f.endswith(".parquet"):
-                    os.utime(os.path.join(src_dir, f), (i * 1000, i * 1000))
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(src_dir)
+    with Replay(spark) as r:
+        out = streaming_cusum(
+            r.source(_ordered_chunks(ev, "ts", "event_id")),
+            centers, drift=100, threshold=10_000,
         )
-        out = streaming_cusum(stream, centers, drift=100, threshold=10_000)
-        sink = "cusum_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="cusum_ckpt_")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
         rows = (
-            spark.table(sink)
+            r.to_memory(out, "update")
             .groupBy("event_type")
             .agg(
                 F.max("n").alias("n"),
@@ -1942,9 +1897,6 @@ def _q_streaming_cusum(spark, sf_dir):
             )
             .collect()
         )
-    finally:
-        _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [
             (
@@ -3711,45 +3663,21 @@ def _q_streaming_interval_join(spark, sf_dir):
     append-mode sink equals the batch range join exactly, and the
     per-user rollup shares a PURE-SQL oracle. The watermark is what
     bounds join state at stream scale (O(key-rate × window))."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.streaming.accumulate import streaming_interval_join
 
     ev = _read(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    src_dir = tempfile.mkdtemp(prefix="ij_src_")
-    sink = ckpt_dir = None
-    try:
-        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        def rd():
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir)
-            )
-
-        signups = rd().where(F.col("event_type") == "signup")
-        purchases = rd().where(F.col("event_type") == "purchase")
+    with Replay(spark) as r:
+        stream = r.source([ev.repartition(4)])
         joined = streaming_interval_join(
-            signups, purchases, within="1 hour", watermark="3650 days"
+            stream.where(F.col("event_type") == "signup"),
+            stream.where(F.col("event_type") == "purchase"),
+            within="1 hour",
+            watermark="3650 days",
         )
-        sink = "ij_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="ij_ckpt_")
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
         rows = (
-            spark.table(sink)
+            r.to_memory(joined, "append")
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_pairs"),
@@ -3761,10 +3689,6 @@ def _q_streaming_interval_join(spark, sf_dir):
             )
             .collect()
         )
-    finally:
-        if sink:
-            _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [
             (
@@ -3791,36 +3715,13 @@ def _q_streaming_sessions(spark, sf_dir):
     equivalence; the oracle is the gap-rule sessionization in SQL
     (new session iff gap >= 30 min, matching session_window's half-open
     [ts, ts+gap) extents)."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.streaming.accumulate import streaming_session_counts
 
     ev = _read(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    src_dir = tempfile.mkdtemp(prefix="sess_src_")
-    sink = ckpt_dir = None
-    try:
-        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        sess = streaming_session_counts(stream, gap="30 minutes")
-        sink = "sessw_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="sess_ckpt_")
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
+    with Replay(spark) as r:
+        sess = streaming_session_counts(r.source([ev.repartition(4)]), gap="30 minutes")
         rows = (
-            spark.table(sink)
+            r.to_memory(sess, "complete")
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_sessions"),
@@ -3828,9 +3729,6 @@ def _q_streaming_sessions(spark, sf_dir):
             )
             .collect()
         )
-    finally:
-        _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [(int(r["user_id"]), int(r["n_sessions"]), int(r["n_events"])) for r in rows],
         "user_id long, n_sessions long, n_events long",
@@ -3847,36 +3745,15 @@ def _q_streaming_window_counts(spark, sf_dir):
     tumbling windows to the epoch, i.e. to the hour for 1-hour windows).
     The append-mode late-row DROP policy is pinned separately in
     tests/test_streaming.py."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.streaming.accumulate import windowed_event_counts
 
     ev = _read(spark, sf_dir, "events").select("event_type", "ts")
-    src_dir = tempfile.mkdtemp(prefix="winc_src_")
-    sink = ckpt_dir = None
-    try:
-        ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    with Replay(spark) as r:
+        counts = windowed_event_counts(
+            r.source([ev.repartition(4)]), window_duration="1 hour", watermark="1 hour"
         )
-        counts = windowed_event_counts(stream, window_duration="1 hour", watermark="1 hour")
-        sink = "winc_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="winc_ckpt_")
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
         rows = (
-            spark.table(sink)
+            r.to_memory(counts, "complete")
             .select(
                 F.unix_timestamp("window_start").alias("window_start_s"),
                 F.unix_timestamp("window_end").alias("window_end_s"),
@@ -3885,9 +3762,6 @@ def _q_streaming_window_counts(spark, sf_dir):
             )
             .collect()
         )
-    finally:
-        _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [
             (int(r["window_start_s"]), int(r["window_end_s"]), str(r["event_type"]), int(r["n"]))
@@ -3906,47 +3780,25 @@ def _q_streaming_dedup_replay(spark, sf_dir):
     arrival order, so a plain SQL oracle can verify the streaming path.
     """
     import os
-    import tempfile
-    import uuid
 
     from deeptime_spark.streaming.accumulate import streaming_drop_exact_duplicates
 
     path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(path).schema
-    # FileStreamSource requires a directory; expose the single parquet
-    # file through a temp dir of symlinks (no data copy).
-    src_dir = tempfile.mkdtemp(prefix="dedup_src_")
-    sink = ckpt_dir = None
-    try:
+    with Replay(spark) as r:
+        # FileStreamSource requires a directory; expose the single parquet
+        # file through a temp dir of symlinks (no data copy).
+        src_dir = r.dir("dedup_src_")
         os.symlink(os.path.abspath(path), os.path.join(src_dir, "part-0.parquet"))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        kept = streaming_drop_exact_duplicates(stream, text_col="text")
-        sink = "stream_dedup_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="dedup_ckpt_")
-        q = (
-            kept.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
+        kept = streaming_drop_exact_duplicates(r.stream(src_dir, schema), text_col="text")
         row = (
-            spark.table(sink)
+            r.to_memory(kept, "append")
             .agg(
                 F.count("*").alias("n_kept"),
                 F.count_distinct("text").alias("n_distinct_text"),
             )
             .collect()[0]
         )
-    finally:
-        _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [(int(row["n_kept"]), int(row["n_distinct_text"]))],
         "n_kept long, n_distinct_text long",
@@ -3961,43 +3813,17 @@ def _q_streaming_transition_counts(spark, sf_dir):
     increments — batch-equivalent to the one-shot lag-1 sliding counts
     (files are written traj-holistic so each trajectory arrives in order
     within one batch, matching the operator's in-order contract)."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.streaming.accumulate import streaming_transition_counts
 
     traj = _event_traj(spark, sf_dir).select("traj_id", "t", "state")
-    src_dir = tempfile.mkdtemp(prefix="stc_src_")
-    sink = ckpt_dir = None
-    try:
-        traj.repartition(4, "traj_id").write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = streaming_transition_counts(stream)
-        sink = "stc_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="stc_ckpt_")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
+    with Replay(spark) as r:
+        out = streaming_transition_counts(r.source([traj.repartition(4, "traj_id")]))
         rows = (
-            spark.table(sink)
+            r.to_memory(out, "append")
             .groupBy("s_from", "s_to")
             .agg(F.sum("n").alias("n"))
             .collect()
         )
-    finally:
-        _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [(int(r["s_from"]), int(r["s_to"]), int(r["n"])) for r in rows],
         "s_from long, s_to long, n long",
@@ -4691,50 +4517,25 @@ def _q_streaming_c4_replay(spark, sf_dir):
     micro-batching is invisible) and emit the same per-doc rows as the
     batch doc_c4_filter query. Batch-equivalence is ROW-FOR-ROW: the
     oracle is the batch SQL verbatim."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.operators.text import c4_line_filter
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    src_dir = tempfile.mkdtemp(prefix="c4_src_")
-    docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out = c4_line_filter(
-        stream, min_words=5, require_terminal_punct=False, min_kept_lines=1
-    ).select(
-        "doc_id",
-        F.md5("clean_text").alias("clean_md5"),
-        "n_lines_total",
-        "n_lines_kept",
-        "passes_c4",
-    )
-    sink = "stream_c4_" + uuid.uuid4().hex[:8]
-    ckpt_dir = tempfile.mkdtemp(prefix="c4_ckpt_")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
+    with Replay(spark) as r:
+        out = c4_line_filter(
+            r.source([docs.repartition(4)]),
+            min_words=5,
+            require_terminal_punct=False,
+            min_kept_lines=1,
+        ).select(
+            "doc_id",
+            F.md5("clean_text").alias("clean_md5"),
+            "n_lines_total",
+            "n_lines_kept",
+            "passes_c4",
         )
-        q.awaitTermination()
-        # the memory sink has fully materialized by now; pin the rows so
-        # the sink view + temp dirs can be dropped (repeated bench/verify
-        # runs in one long-lived session must not accumulate disk or
-        # catalog entries)
-        res = spark.table(sink)
+        res = r.to_memory(out, "append")
         schema = res.schema
         rows = res.collect()
-    finally:
-        spark.catalog.dropTempView(sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, rows, schema)
 
 
@@ -4749,60 +4550,18 @@ def _q_streaming_heavy_hitters(spark, sf_dir):
     function of the processed row sequence, so the oracle replays the
     identical MG loop in doc-id order
     (oracle_ref.py:oracle_streaming_heavy_hitters)."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window
-
     from deeptime_spark.operators.text import tokens
     from deeptime_spark.streaming.accumulate import streaming_heavy_hitters
 
     docs = _read(spark, sf_dir, "documents").select("lang", "doc_id", "text")
-    w = Window.orderBy("doc_id")
-    n_rows = docs.count()
-    chunked = docs.withColumn(
-        "_chunk", ((F.row_number().over(w) - 1) * 4 / F.lit(n_rows)).cast("int")
-    )
-    src_dir = tempfile.mkdtemp(prefix="hh_src_")
-    sink = ckpt_dir = None
-    try:
-        for i in range(4):
-            before = set(os.listdir(src_dir))
-            (
-                chunked.where(F.col("_chunk") == i)
-                .drop("_chunk")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src_dir)
-            )
-            for f in set(os.listdir(src_dir)) - before:
-                if f.endswith(".parquet"):
-                    os.utime(os.path.join(src_dir, f), (i * 1000, i * 1000))
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(src_dir)
-        )
+    with Replay(spark) as r:
+        stream = r.source(_ordered_chunks(docs, "doc_id"))
         words = stream.select(
             "lang", "doc_id", F.posexplode(tokens("text")).alias("pos", "term")
         ).where(F.col("term") != "")
         out = streaming_heavy_hitters(words, k=20)
-        sink = "hh_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="hh_ckpt_")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
         final = (
-            spark.table(sink)
+            r.to_memory(out, "update")
             .groupBy("lang")
             .agg(
                 F.max_by(F.struct("items", "counts"), "n").alias("_s"),
@@ -4822,10 +4581,6 @@ def _q_streaming_heavy_hitters(spark, sf_dir):
             )
         )
         rows = final.collect()
-    finally:
-        if sink:
-            _drop_view_quiet(spark, sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
     return _local_df(spark, 
         [
             (r["lang"], r["term"], int(r["count_lb"]), int(r["n_stream"]))
@@ -4846,50 +4601,24 @@ def _q_streaming_hll_replay(spark, sf_dir):
     driver finish then runs on the final register relation and the
     oracle replays hash, registers, and estimate bit-for-bit
     (oracle_ref.py:oracle_streaming_hll)."""
-    import tempfile
-    import uuid
-
-    from deeptime_spark.operators.sketches import hll_estimate_rows
+    from deeptime_spark.operators.sketches import hll_estimate_rows, hll_registers
     from deeptime_spark.operators.text import shingles
 
     docs = _read(spark, sf_dir, "documents").select("lang", "text")
-    src_dir = tempfile.mkdtemp(prefix="hll_src_")
-    docs.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    from deeptime_spark.operators.sketches import hll_registers
-
-    regs = hll_registers(
-        stream.select("lang", F.explode(shingles(F.col("text"), 5)).alias("v")),
-        "v",
-        ["lang"],
-        p=12,
-    )
-    sink = "stream_hll_" + uuid.uuid4().hex[:8]
-    ckpt_dir = tempfile.mkdtemp(prefix="hll_ckpt_")
-    try:
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
+    with Replay(spark) as r:
+        stream = r.source([docs.repartition(4)])
+        regs = hll_registers(
+            stream.select("lang", F.explode(shingles(F.col("text"), 5)).alias("v")),
+            "v",
+            ["lang"],
+            p=12,
         )
-        q.awaitTermination()
-        final_regs = spark.table(sink)
-        est = hll_estimate_rows(final_regs, ["lang"], p=12)
-    finally:
-        spark.catalog.dropTempView(sink)
-        _rmtree_quiet(src_dir, ckpt_dir)
+        est = hll_estimate_rows(r.to_memory(regs, "complete"), ["lang"], p=12)
     rows = [
         (d["lang"], int(d["n_registers"]), round(float(d["est_distinct"]), 6))
         for d in est
     ]
-    return _local_df(spark, 
+    return _local_df(spark,
         rows, "lang string, n_registers long, est_distinct double"
     )
 
@@ -5457,8 +5186,6 @@ def _q_streaming_linkage_probe(spark, sf_dir):
     oracle verbatim. The daily-delta entity pipeline end-to-end:
     probe -> matched updates feed streaming_scd2_merge, unmatched
     insert as new entities."""
-    import tempfile
-
     from deeptime_spark.streaming.accumulate import (
         streaming_record_linkage_probe,
     )
@@ -5482,42 +5209,34 @@ def _q_streaming_linkage_probe(spark, sf_dir):
         .otherwise(F.col("bal"))
         .alias("bal"),
     )
-    master_dir = tempfile.mkdtemp(prefix="slp_master_")
-    src_dir = tempfile.mkdtemp(prefix="slp_src_")
-    out_dir = tempfile.mkdtemp(prefix="slp_out_")
-    ckpt = tempfile.mkdtemp(prefix="slp_ckpt_")
-    master.write.mode("overwrite").parquet(master_dir)
-    delta.repartition(4, F.col("id")).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = streaming_record_linkage_probe(
-        spark,
-        stream,
-        master_path=master_dir,
-        out_path=out_dir,
-        id_col="id",
-        block_keys=[["nk", "seg"]],
-        string_fields=["name"],
-        exact_fields=["bal"],
-        weights={"name": 1, "bal": 2},
-        threshold=0.9,
-        checkpoint=ckpt,
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_linkage_probe: stream did not finish in 300s")
-    out = spark.read.parquet(out_dir)
-    return out.select(
-        "id_delta",
-        "id_master",
-        F.round("sim_name", 6).alias("sim_name"),
-        "sim_bal",
-        F.round("score", 6).alias("score"),
-    )
+    with Replay(spark) as r:
+        master_dir, out_dir = r.dir("slp_master_"), r.dir("slp_out_")
+        master.write.mode("overwrite").parquet(master_dir)
+        r.wait(
+            streaming_record_linkage_probe(
+                spark,
+                r.source([delta.repartition(4, F.col("id"))]),
+                master_path=master_dir,
+                out_path=out_dir,
+                id_col="id",
+                block_keys=[["nk", "seg"]],
+                string_fields=["name"],
+                exact_fields=["bal"],
+                weights={"name": 1, "bal": 2},
+                threshold=0.9,
+                checkpoint=r.dir("slp_ckpt_"),
+            )
+        )
+        res = spark.read.parquet(out_dir).select(
+            "id_delta",
+            "id_master",
+            F.round("sim_name", 6).alias("sim_name"),
+            "sim_bal",
+            F.round("score", 6).alias("score"),
+        )
+        schema = res.schema
+        rows = res.collect()
+    return _local_df(spark, rows, schema)
 
 
 # Not scale: the harness probe is a fixed fraction (mod 13) of the
@@ -5735,58 +5454,15 @@ def _q_streaming_ewma(spark, sf_dir):
     SHARES event_ewma's pure-SQL list_reduce oracle. Final state
     recovery from the update-mode memory sink: max_by on the cumulative
     row count."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window
-
     from deeptime_spark.streaming.accumulate import streaming_ewma
 
     ev = _read(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
-    w = Window.orderBy("ts", "event_id")
-    n_rows = ev.count()
-    chunked = ev.withColumn(
-        "_chunk", ((F.row_number().over(w) - 1) * 4 / F.lit(n_rows)).cast("int")
-    )
-    src_dir = tempfile.mkdtemp(prefix="ewma_src_")
-    sink = ckpt_dir = None
-    try:
-        for i in range(4):
-            before = set(os.listdir(src_dir))
-            (
-                chunked.where(F.col("_chunk") == i)
-                .drop("_chunk")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src_dir)
-            )
-            for f in set(os.listdir(src_dir)) - before:
-                if f.endswith(".parquet"):
-                    os.utime(os.path.join(src_dir, f), (i * 1000, i * 1000))
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(src_dir)
-        )
-        out = streaming_ewma(stream, alpha=0.25)
-        sink = "ewma_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="ewma_ckpt_")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
+    with Replay(spark) as r:
+        out = streaming_ewma(r.source(_ordered_chunks(ev, "ts", "event_id")), alpha=0.25)
         rows = (
-            spark.table(sink)
+            r.to_memory(out, "update")
             .groupBy("user_id")
             .agg(
                 F.max("n_events").cast("long").alias("n_events"),
@@ -5794,9 +5470,6 @@ def _q_streaming_ewma(spark, sf_dir):
             )
             .collect()
         )
-    finally:
-        _rmtree_quiet(src_dir, ckpt_dir)
-        _drop_view_quiet(spark, sink)
     return _local_df(spark, 
         [
             (int(r["user_id"]), int(r["n_events"]), float(r["ewma_value"]))
@@ -5963,9 +5636,6 @@ def _q_streaming_kmv_rollup(spark, sf_dir):
     all, unlike CUSUM/EWMA), so this SHARES event_kmv_rollup's oracle.
     Final state from the update-mode sink: max_by on the strictly
     increasing rows-seen counter."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.streaming.accumulate import streaming_bottomk_quantiles
 
     ev = _read(spark, sf_dir, "events").select(
@@ -5973,38 +5643,14 @@ def _q_streaming_kmv_rollup(spark, sf_dir):
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    src_dir = tempfile.mkdtemp(prefix="kmvq_src_")
-    sink = ckpt_dir = None
-    try:
+    with Replay(spark) as r:
         # content-addressed sample: chunk boundaries are irrelevant, so
-        # a plain modulo split suffices (no mtime ordering needed)
-        for i in range(4):
-            (
-                ev.where(F.pmod(F.col("event_id"), F.lit(4)) == i)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src_dir)
-            )
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        # a plain modulo split suffices
+        stream = r.source(
+            [ev.where(F.pmod(F.col("event_id"), F.lit(4)) == i).coalesce(1) for i in range(4)]
         )
-        out = streaming_bottomk_quantiles(stream, k=256)
-        sink = "kmvq_" + uuid.uuid4().hex[:8]
-        ckpt_dir = tempfile.mkdtemp(prefix="kmvq_ckpt_")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
         rows = (
-            spark.table(sink)
+            r.to_memory(streaming_bottomk_quantiles(stream, k=256), "update")
             .groupBy("event_type")
             .agg(
                 *[
@@ -6014,9 +5660,6 @@ def _q_streaming_kmv_rollup(spark, sf_dir):
             )
             .collect()
         )
-    finally:
-        _rmtree_quiet(src_dir, ckpt_dir)
-        _drop_view_quiet(spark, sink)
     return _local_df(spark, 
         [
             (
@@ -6455,7 +6098,6 @@ def _q_streaming_scd2_merge(spark, sf_dir):
     timestamps depend on file arrival order and are deliberately not
     part of the contract."""
     import glob
-    import tempfile
 
     from deeptime_spark.streaming.accumulate import streaming_scd2_merge
 
@@ -6489,33 +6131,22 @@ def _q_streaming_scd2_merge(spark, sf_dir):
         "c_custkey long, acctbal_cents long, segment string",
     )
     updates = changed.unionByName(new_row)
-    src_dir = tempfile.mkdtemp(prefix="sscd_src_")
-    dim_dir = tempfile.mkdtemp(prefix="sscd_dim_")
-    ckpt = tempfile.mkdtemp(prefix="sscd_ckpt_")
-    try:
+    with Replay(spark) as r:
         # hash-partition on the key: each key lands in exactly one of
         # the 4 files = one micro-batch (the per-batch unique-key guard)
-        updates.repartition(4, F.col("c_custkey")).write.mode(
-            "overwrite"
-        ).parquet(src_dir)
+        stream = r.source([updates.repartition(4, F.col("c_custkey"))])
+        dim_dir = r.dir("sscd_dim_")
         dim.write.mode("overwrite").parquet(f"{dim_dir}/v0")
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        r.wait(
+            streaming_scd2_merge(
+                spark,
+                stream,
+                key="c_custkey",
+                tracked=["acctbal_cents", "segment"],
+                dim_path=dim_dir,
+                checkpoint=r.dir("sscd_ckpt_"),
+            )
         )
-        q = streaming_scd2_merge(
-            spark,
-            stream,
-            key="c_custkey",
-            tracked=["acctbal_cents", "segment"],
-            dim_path=dim_dir,
-            checkpoint=ckpt,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("streaming_scd2_merge: stream did not finish in 300s")
         latest = max(
             int(p.rsplit("/v", 1)[1]) for p in glob.glob(f"{dim_dir}/v*")
         )
@@ -6536,8 +6167,6 @@ def _q_streaming_scd2_merge(spark, sf_dir):
             .join(open_rows, "c_custkey")
             .collect()
         )
-    finally:
-        _rmtree_quiet(src_dir, dim_dir, ckpt)
     return _local_df(spark, 
         [
             (
@@ -6681,62 +6310,31 @@ def _q_streaming_constraint_audit(spark, sf_dir):
     complete-mode global aggregate — end-of-stream state equals the
     batch constraint_audit counts row-for-row, so the BATCH oracle
     serves both (same SQL minus the non-streamable unique row)."""
-    import tempfile
-    import uuid
-
     from deeptime_spark.streaming.accumulate import streaming_constraint_totals
 
     orders = _read(spark, sf_dir, "orders")
     customer = _read(spark, sf_dir, "customer")
-    src_dir = tempfile.mkdtemp(prefix="sca_src_")
-    ckpt = None
-    try:
-        orders.repartition(4).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        cons = [
-            ("custkey_not_null", "not_null", "o_custkey"),
-            ("custkey_fk_customer", "foreign_key", ("o_custkey", customer, "c_custkey")),
-            ("totalprice_positive", "range", ("o_totalprice", 0.0, 1e9)),
-            ("status_enum", "accepted_values", ("o_orderstatus", ["F", "O", "P"])),
-            ("priority_two_values", "accepted_values", ("o_orderpriority", ["1-URGENT", "2-HIGH"])),
-        ]
-        totals = streaming_constraint_totals(stream, cons)
-        sink = "sca_" + uuid.uuid4().hex[:8]
-        ckpt = tempfile.mkdtemp(prefix="sca_ckpt_")
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_constraint_audit: stream did not finish in 300s"
-            )
-        row = spark.table(sink).first()
-        kinds = {name: kind for name, kind, _ in cons}
-        rows = [
-            (name, kinds[name], int(row["_n"]), int(row[name] or 0),
-             int(row[name] or 0) == 0)
-            for name, _, _ in cons
-        ]
-        return _local_df(spark, 
-            rows,
-            "constraint string, kind string, n_rows long, "
-            "n_violations long, pass boolean",
-        )
-    finally:
-        _rmtree_quiet(src_dir)
-        if ckpt:
-            _rmtree_quiet(ckpt)
+    cons = [
+        ("custkey_not_null", "not_null", "o_custkey"),
+        ("custkey_fk_customer", "foreign_key", ("o_custkey", customer, "c_custkey")),
+        ("totalprice_positive", "range", ("o_totalprice", 0.0, 1e9)),
+        ("status_enum", "accepted_values", ("o_orderstatus", ["F", "O", "P"])),
+        ("priority_two_values", "accepted_values", ("o_orderpriority", ["1-URGENT", "2-HIGH"])),
+    ]
+    with Replay(spark) as r:
+        totals = streaming_constraint_totals(r.source([orders.repartition(4)]), cons)
+        row = r.to_memory(totals, "complete").first()
+    kinds = {name: kind for name, kind, _ in cons}
+    rows = [
+        (name, kinds[name], int(row["_n"]), int(row[name] or 0),
+         int(row[name] or 0) == 0)
+        for name, _, _ in cons
+    ]
+    return _local_df(spark, 
+        rows,
+        "constraint string, kind string, n_rows long, "
+        "n_violations long, pass boolean",
+    )
 
 
 def _blocking_advisor_oracle_sql(cap: int = 20) -> str:

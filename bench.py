@@ -73,8 +73,9 @@ def main() -> None:
         simhash_signatures_df(tiny).write.format("noop").mode("overwrite").save()
         tiny.unpersist()
         spark.catalog.clearCache()
-    except Exception:
-        pass
+    except Exception as e:  # a failed warm-up only makes the cold pass slower
+        print(f"bench warm-up error: {e}", file=sys.stderr)
+
     def run_pass(out: dict[str, float]) -> None:
         for name in entrymod.BENCH:
             fn = qs[name]

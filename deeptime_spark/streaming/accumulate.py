@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from deeptime_spark.streaming import replay
+
 
 class StreamingEstimator:
     """Drive any partial_fit-capable estimator from a stream.
@@ -55,18 +57,29 @@ class StreamingEstimator:
             return
         self.estimator.partial_fit(batch_df)
 
-    def start(self, stream_df: DataFrame, trigger_available_now: bool = True, checkpoint: Optional[str] = None):
-        writer = stream_df.writeStream.foreachBatch(self._process_batch).outputMode("update")
-        if checkpoint:
-            writer = writer.option("checkpointLocation", checkpoint)
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        self.query = writer.start()
+    def start(self, stream_df: DataFrame, checkpoint: Optional[str] = None):
+        self.query = _start_foreach_batch(stream_df, self._process_batch, checkpoint)
         return self.query
 
-    def await_and_fetch(self, timeout: Optional[float] = None):
-        self.query.awaitTermination(timeout)
+    def await_and_fetch(self):
+        """The model once the stream has drained; raises
+        ``replay.StreamReplayTimeout`` (after stopping the stream) rather
+        than return a model fitted on only some of the batches."""
+        replay.wait(self.query)
         return self.estimator.fetch_model()
+
+
+def _start_foreach_batch(stream_df: DataFrame, fn, checkpoint: Optional[str]):
+    """Start ``fn(batch_df, batch_id)`` as an ``availableNow``
+    foreachBatch sink; returns the started StreamingQuery."""
+    writer = (
+        stream_df.writeStream.foreachBatch(fn)
+        .outputMode("update")
+        .trigger(availableNow=True)
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
 
 
 def windowed_event_counts(
@@ -236,14 +249,7 @@ def streaming_probe_signature_index(
             spark, batch_df, index_path, threshold, n_hashes=n_hashes, bands=bands
         ).write.mode("append").parquet(out_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _process, checkpoint)
 
 
 _CUSUM_STATE_SCHEMA = StructType(
@@ -791,14 +797,7 @@ def streaming_scd2_merge(
                 if fs.exists(p):
                     fs.delete(p, True)
 
-    writer = (
-        stream_updates.writeStream.foreachBatch(_process)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_updates, _process, checkpoint)
 
 
 def streaming_record_linkage_probe(
@@ -881,11 +880,4 @@ def streaming_record_linkage_probe(
             master_sides=sides,
         ).write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start_foreach_batch(stream_df, _process, checkpoint)

@@ -40,8 +40,8 @@ def test_streaming_covariance_matches_batch(spark, rng, tmpdir):
     batch_df.write.parquet(tmpdir + "/data")
     stream = spark.readStream.schema(batch_df.schema).parquet(tmpdir + "/data")
     acc = StreamingEstimator(Covariance(lagtime=0))
-    acc.start(stream, trigger_available_now=True, checkpoint=tmpdir + "/ckpt")
-    model = acc.await_and_fetch(timeout=120)
+    acc.start(stream, checkpoint=tmpdir + "/ckpt")
+    model = acc.await_and_fetch()
     np.testing.assert_allclose(model.cov_00, batch_model.cov_00, rtol=1e-10)
     np.testing.assert_allclose(model.mean_0, batch_model.mean_0, rtol=1e-10)
 
