@@ -3364,13 +3364,14 @@ def _q_event_range_frame(spark, sf_dir):
     )
 
 
-@query(bench=True, scale=True)
+@query(bench=True, scale=True, dispatch=True)
 def _q_hmm_viterbi_events(spark, sf_dir):
-    """2-hidden-state HMM over the 5-symbol event dtraj: distributed
-    Baum-Welch (applyInPandas E-step) then per-trajectory viterbi decode.
+    """2-hidden-state HMM over the 5-symbol event dtraj: Baum-Welch then
+    per-trajectory viterbi decode, each on the driver inside the ``hmm``
+    dispatch bound (one fetch each) and as mapInPandas passes above it.
     The trajectory is persisted pre-partitioned by traj_id ONCE and shared
-    by init counting, every EM iteration and the viterbi pass — no
-    re-derivation of the event window per stage."""
+    by init counting, the fit and the viterbi pass — no re-derivation of
+    the event window per stage."""
     from deeptime_spark.hmm import MaximumLikelihoodHMM, init_discrete_metastable_from_data
 
     # explicit partition count: AQE would coalesce the small window
@@ -3384,7 +3385,7 @@ def _q_hmm_viterbi_events(spark, sf_dir):
         traj, n_hidden_states=2, lagtime=1, n_observation_states=5
     )
     model = (
-        MaximumLikelihoodHMM(init, lagtime=1, maxit=3, per_traj_stats=True, assume_colocated=True)
+        MaximumLikelihoodHMM(init, lagtime=1, maxit=3, assume_colocated=True)
         .fit(traj)
         .fetch_model()
     )
@@ -3418,7 +3419,7 @@ def _q_bayes_hmm_events(spark, sf_dir):
         traj, n_hidden_states=2, lagtime=1, n_observation_states=5
     )
     prior = (
-        MaximumLikelihoodHMM(init, lagtime=1, maxit=2, per_traj_stats=True, assume_colocated=True)
+        MaximumLikelihoodHMM(init, lagtime=1, maxit=2, assume_colocated=True)
         .fit(traj)
         .fetch_model()
     )

@@ -37,6 +37,14 @@ BOUNDS = {
     # DeterministicKMeans Lloyd, 1 if the init sample came back full, 0 if it
     # holds the whole relation: driver 0.39 vs 3.07 s at x1
     "kmeans": (0, 0),
+    # MaximumLikelihoodHMM.fit and HiddenMarkovModel.viterbi_df /
+    # state_probabilities_df, trajectory frames. hmm_viterbi_events, warm-min
+    # on 4 cores: driver 1.63 vs 2.45 s at x1 (100k frames), 6.81 vs 4.76 s
+    # at x8 (800k); the lines through both cross near 300k. The distributed
+    # E-step reduces the same per-trajectory rows as the driver: against a
+    # per-partition sum it cost 1.28 vs 1.24 s at x1 and 2.28 vs 2.14 s at
+    # x8 (medians of 4 forced-distributed fits), inside the sum's spread
+    "hmm": (0, 300_000),
 }
 
 
@@ -47,6 +55,18 @@ def on_driver(decision: str, size: int) -> bool:
         raise ValueError(f"{ENV}={mode!r}: expected unset or 'distributed'")
     lo, hi = BOUNDS[decision]
     return not mode and lo <= size <= hi
+
+
+def fetch(decision: str, df):
+    """One bounded fetch for a decision sized in rows: ``df`` as pandas when
+    it has at most the bound's rows, else None. Forced distributed returns
+    None without running a job; otherwise it costs one job of at most
+    bound + 1 rows, instead of a ``count()`` followed by a collect."""
+    lo, hi = BOUNDS[decision]
+    if not on_driver(decision, lo):
+        return None
+    pdf = df.limit(hi + 1).toPandas()
+    return pdf if on_driver(decision, len(pdf)) else None
 
 
 @contextlib.contextmanager

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from deeptime_spark.base import Estimator, Model
-from deeptime_spark.hmm.hmm_model import HiddenMarkovModel
+from deeptime_spark.hmm.hmm_model import HiddenMarkovModel, _blocks, _forward, _lanes
 from deeptime_spark.hmm.output_models import DiscreteOutputModel, GaussianOutputModel
 from deeptime_spark.markov.msm import MarkovStateModel, transition_matrix_nonreversible
 from deeptime_spark.markov.tmatrix_sampling import sample_tmatrix_reversible
@@ -65,36 +65,31 @@ def _sample_rows(w: np.ndarray, u: np.ndarray) -> np.ndarray:
 
 
 def ffbs_sample_path_batch(A: np.ndarray, pobs_list: list, pi: np.ndarray, seeds: list) -> list:
-    """Batched FFBS: vectorized forward filter across the trajectory batch,
-    then one backward-sampling time loop drawing all trajectories' states
-    per step (inverse-CDF with per-trajectory pre-generated uniforms, so
-    each trajectory's draw stream stays a deterministic function of its own
-    seed). Same padding scheme as ``forward_backward_batch``; terminal
-    states are propagated through padded frames."""
-    from deeptime_spark.hmm.hmm_model import _pad_pobs
-
-    pobs, lengths = _pad_pobs(pobs_list)
-    B, T, N = pobs.shape
-    alpha = np.empty((B, T, N))
-    a = pi[None, :] * pobs[:, 0]
-    alpha[:, 0] = a / np.maximum(a.sum(axis=1, keepdims=True), 1e-300)
-    for t in range(1, T):
-        a = (alpha[:, t - 1] @ A) * pobs[:, t]
-        alpha[:, t] = a / np.maximum(a.sum(axis=1, keepdims=True), 1e-300)
-    u = np.zeros((B, T))
-    for b, seed in enumerate(seeds):
-        u[b, : lengths[b]] = np.random.default_rng(seed).random(lengths[b])
-    rows = np.arange(B)
-    path = np.empty((B, T), dtype=np.int64)
-    path[:, T - 1] = _sample_rows(alpha[rows, lengths - 1], u[rows, lengths - 1])
-    for t in range(T - 2, -1, -1):
-        nxt = path[:, t + 1]
-        w = alpha[:, t] * A[:, nxt].T
-        bad = w.sum(axis=1) <= 0
-        if bad.any():
-            w[bad] = alpha[bad, t]
-        path[:, t] = np.where(t >= lengths - 1, nxt, _sample_rows(w, u[:, t]))
-    return [path[b, : lengths[b]] for b in range(B)]
+    """Batched FFBS: the lane-exact forward pass of ``forward_backward_batch``
+    per length class, then one backward-sampling time loop drawing every
+    lane's state per step (inverse-CDF with per-trajectory pre-generated
+    uniforms). A trajectory's path is a function of its own frames and seed
+    alone: the same draw in any batch or partition layout. Terminal states
+    are propagated through padded frames."""
+    paths = [None] * len(pobs_list)
+    for idx, pobs, lengths in _blocks(pobs_list):
+        T, N, B = pobs.shape
+        alpha = _forward(A, pobs, pi)[0].transpose(0, 2, 1)  # (T, lane, N)
+        u = np.zeros((T, B))
+        for k, b in enumerate(idx):
+            u[: lengths[k], k] = np.random.default_rng(seeds[b]).random(lengths[k])
+        lanes = np.arange(B)
+        path = np.empty((T, B), dtype=np.int64)
+        path[T - 1] = _sample_rows(alpha[lengths - 1, lanes], u[lengths - 1, lanes])
+        for t in range(T - 2, -1, -1):
+            nxt = path[t + 1]
+            w = alpha[t] * A[:, nxt].T
+            bad = w.sum(axis=1) <= 0
+            if bad.any():
+                w[bad] = alpha[t][bad]
+            path[t] = np.where(t >= lengths - 1, nxt, _sample_rows(w, u[t]))
+        _lanes(path, idx, lengths, paths)
+    return paths
 
 
 class BayesianHMMPosterior(Model):

@@ -4,10 +4,12 @@ Reference: ``HiddenMarkovModel``
 (/root/reference/src/deeptime/markov/hmm/_hidden_markov_model.py:14-1078),
 ``viterbi`` (:1055), C++ forward/backward (hmm/_hmm_bindings utils).
 
-``forward_backward``/``viterbi`` are the numpy kernels executed *inside*
-per-trajectory Arrow UDFs (sequential per series, parallel across series —
-SURVEY.md §2.9's designed Spark shape). The model object itself is
-driver-side; its DataFrame methods emit distributed transforms.
+``forward_backward``/``viterbi`` are the scalar reference kernels; the
+batched ``forward_backward_batch``/``viterbi_batch`` run many trajectories
+in one vectorized time loop and are lane-exact: a trajectory's result is
+bit-identical alone or in any batch. So a Spark partition (mapInPandas)
+and the driver (inputs inside ``dispatch.BOUNDS["hmm"]``) compute the
+same numbers, and the model's DataFrame methods pick either path.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from deeptime_spark import dispatch
 
 
 def forward_backward(A: np.ndarray, pobs: np.ndarray, pi: np.ndarray):
@@ -64,114 +68,197 @@ def forward_backward(A: np.ndarray, pobs: np.ndarray, pi: np.ndarray):
     return loglik, gamma, counts
 
 
+def _vecmat(x: np.ndarray, M: np.ndarray) -> np.ndarray:
+    """out[j, b] = sum_i x[i, b] * M[i, j] for a state-major (N, B) frame,
+    summed over i = 0..N-1 in that order with elementwise ops only. Unlike
+    ``x @ M`` (BLAS, whose blocking depends on the batch size), each lane's
+    value is the same in any batch."""
+    out = M[0][:, None] * x[0]
+    for i in range(1, M.shape[0]):
+        out += M[i][:, None] * x[i]
+    return out
+
+
+def _statesum(x: np.ndarray) -> np.ndarray:
+    """Sum over the state axis (axis 0 of a (N, ...) array) in index order."""
+    out = x[0].copy()
+    for i in range(1, x.shape[0]):
+        out += x[i]
+    return out
+
+
 def _pad_pobs(pobs_list: list) -> tuple[np.ndarray, np.ndarray]:
-    """Stack variable-length (T_i, N) sequences into a (B, T_max, N) array
-    padded with 1.0. With unit emission probabilities the scaled recursions
-    propagate through the padding as exact no-ops (row-stochastic A keeps
-    beta at 1, scales at ~1), so one vectorized time loop serves the whole
-    batch; masked reductions discard the padded frames."""
+    """Stack variable-length (T_b, N) sequences into one (T_max, N, B) block
+    (time-major, lanes contiguous) padded with 1.0. The kernels never read a
+    lane's padding into its own frames: the forward pass runs front to back,
+    the backward pass starts every lane at its own last frame, and per-lane
+    sums stop there."""
     lengths = np.array([p.shape[0] for p in pobs_list], dtype=np.int64)
     B, T, N = len(pobs_list), int(lengths.max()), pobs_list[0].shape[1]
-    pobs = np.ones((B, T, N))
+    pobs = np.ones((T, N, B))
     for b, p in enumerate(pobs_list):
-        pobs[b, : len(p)] = p
+        pobs[: len(p), :, b] = p
     return pobs, lengths
 
 
-def forward_backward_batch(A: np.ndarray, pobs_list: list, pi: np.ndarray):
-    """Batched scaled forward-backward: one time loop vectorized across a
-    batch of sequences (the per-step work becomes (B, N) x (N, N) BLAS
-    instead of B separate length-T Python loops — the difference between
-    ~10 us/frame interpreter overhead and ~ns/frame).
+def _blocks(pobs_list: list):
+    """Yield (lane indices, padded block, lengths) per power-of-two length
+    class: inside a class the longest lane is under twice the shortest, so
+    a block's padded cells stay under 2x its real frames, and one long
+    trajectory no longer pads every short one to its length. Lane-exact
+    kernels make the grouping invisible in the results."""
+    lengths = np.array([len(p) for p in pobs_list], dtype=np.int64)
+    cls = np.frexp(lengths)[1]  # L in [2^(c-1), 2^c)
+    for c in np.unique(cls):
+        idx = np.flatnonzero(cls == c)
+        pobs, lens = _pad_pobs([pobs_list[i] for i in idx])
+        yield idx, pobs, lens
 
-    Returns (loglik_total, gamma0_sum, counts_sum, gamma_list): totals are
-    summed over the batch (Baum-Welch sufficient statistics are additive);
-    gamma_list keeps per-sequence posteriors for output-model stats.
-    """
-    pobs, lengths = _pad_pobs(pobs_list)
-    B, T, N = pobs.shape
-    alpha = np.empty((B, T, N))
-    scale = np.ones((B, T))
-    a = pi[None, :] * pobs[:, 0]
-    s = np.maximum(a.sum(axis=1), 1e-300)
-    alpha[:, 0] = a / s[:, None]
-    scale[:, 0] = s
-    for t in range(1, T):
-        a = (alpha[:, t - 1] @ A) * pobs[:, t]
-        s = np.maximum(a.sum(axis=1), 1e-300)
-        alpha[:, t] = a / s[:, None]
-        scale[:, t] = s
-    beta = np.empty((B, T, N))
-    beta[:, T - 1] = 1.0
+
+def _lanes(block: np.ndarray, idx, lengths, out: list) -> None:
+    """Scatter a time-major block with lanes last, (T, B) or (T, N, B),
+    back into per-lane (T_b,) or (T_b, N) arrays at positions ``idx``."""
+    lanes = np.moveaxis(block, -1, 0).copy()
+    for k, b in enumerate(idx):
+        out[b] = lanes[k, : lengths[k]]
+
+
+def _forward(A: np.ndarray, pobs: np.ndarray, pi: np.ndarray):
+    """Scaled forward pass over one (T, N, B) block: alpha with each frame
+    normalized to sum 1, and the scale factors (T, B)."""
+    T, N, B = pobs.shape
+    alpha = np.empty((T, N, B))
+    scale = np.empty((T, B))
+    a = pi[:, None] * pobs[0]
+    for t in range(T):
+        if t:
+            a = _vecmat(alpha[t - 1], A)
+            a *= pobs[t]
+        s = np.maximum(_statesum(a), 1e-300)
+        np.divide(a, s, out=alpha[t])
+        scale[t] = s
+    return alpha, scale
+
+
+def _forward_backward_block(A: np.ndarray, pobs: np.ndarray, lengths: np.ndarray, pi: np.ndarray):
+    """Forward-backward over one (T, N, B) block: per-lane loglik (B,),
+    gamma0 (N, B), counts (N, N, B) and gamma (T, N, B). Lane b's numbers
+    depend only on its own frames [0, lengths[b]): beta is exactly 1.0 at
+    its own last frame, counts add xi(t) for t = T-2 .. 0 with exact zeros
+    past that frame, and loglik is a sequential cumulative sum of log
+    scales read at that frame."""
+    T, N, B = pobs.shape
+    alpha, scale = _forward(A, pobs, pi)
+    last = lengths - 1
+    beta = np.empty((T, N, B))
+    beta[T - 1] = 1.0
+    xi_sum = np.zeros((N, N, B))
     for t in range(T - 2, -1, -1):
-        beta[:, t] = ((pobs[:, t + 1] * beta[:, t + 1]) @ A.T) / scale[:, t + 1, None]
+        live = t < last  # lane has a transition t -> t + 1
+        w = pobs[t + 1] * beta[t + 1]
+        w /= scale[t + 1]
+        w *= live
+        beta[t] = np.where(live, _vecmat(w, A.T), 1.0)
+        xi_sum += alpha[t][:, None, :] * w[None, :, :]
     gamma = alpha * beta
-    gsum = gamma.sum(axis=2, keepdims=True)
+    gsum = _statesum(gamma.transpose(1, 0, 2))
     gsum[gsum == 0.0] = 1.0
-    gamma /= gsum
-    t_idx = np.arange(T)
-    valid = t_idx[None, :] < lengths[:, None]  # (B, T)
-    if T > 1:
-        weighted = pobs[:, 1:] * beta[:, 1:] / scale[:, 1:, None]
-        # xi(t) exists for t in [0, len-2]: mask padded tail transitions
-        weighted *= (t_idx[None, 1:] < lengths[:, None])[:, :, None]
-        counts_sum = A * np.einsum("bti,btj->ij", alpha[:, :-1], weighted)
-    else:
-        counts_sum = np.zeros((N, N))
-    loglik = float(np.sum(np.log(scale), where=valid))
-    gamma0_sum = gamma[:, 0].sum(axis=0)
-    gamma_list = [gamma[b, : lengths[b]] for b in range(B)]
-    return loglik, gamma0_sum, counts_sum, gamma_list
+    gamma /= gsum[:, None, :]
+    loglik = np.cumsum(np.log(scale), axis=0)[last, np.arange(B)]
+    return loglik, gamma[0], A[:, :, None] * xi_sum, gamma
+
+
+def forward_backward_batch(A: np.ndarray, pobs_list: list, pi: np.ndarray):
+    """Scaled forward-backward over a batch of sequences, one vectorized
+    time loop per length class (see ``_blocks``) instead of a Python loop
+    per trajectory.
+
+    Returns per-lane (loglik (B,), gamma0 (B, N), counts (B, N, N),
+    gammas list of (T_b, N)). Lane-exact: every lane's numbers are
+    bit-identical to a B=1 call on that sequence alone, whatever else
+    shares the batch, so callers that reduce lanes in a fixed order get
+    results independent of how trajectories were grouped. Agrees with the
+    scalar ``forward_backward`` to rounding (it sums in a different order).
+    """
+    B, N = len(pobs_list), len(pi)
+    loglik, gamma0, counts = np.zeros(B), np.zeros((B, N)), np.zeros((B, N, N))
+    gammas = [None] * B
+    for idx, pobs, lengths in _blocks(pobs_list):
+        ll, g0, c, gamma = _forward_backward_block(A, pobs, lengths, pi)
+        loglik[idx], gamma0[idx], counts[idx] = ll, g0.T, c.transpose(2, 0, 1)
+        _lanes(gamma, idx, lengths, gammas)
+    return loglik, gamma0, counts, gammas
 
 
 def viterbi_batch(A: np.ndarray, pobs_list: list, pi: np.ndarray) -> list:
-    """Batched log-space Viterbi: vectorized time loop + vectorized
-    backtrack. Padded frames get identity backpointers so every path can be
-    traced from the common last frame; the per-sequence terminal scores are
-    checkpointed at each true last frame."""
-    pobs, lengths = _pad_pobs(pobs_list)
-    B, T, N = pobs.shape
+    """Batched log-space Viterbi, one (T, N, B) block per length class.
+    Every step is elementwise or a max/argmax over the from-state axis, so
+    paths are lane-exact. Padded frames get identity backpointers so every
+    path can be traced from the block's last frame; each lane's terminal
+    scores are taken at its own last frame."""
+    paths = [None] * len(pobs_list)
     with np.errstate(divide="ignore"):
-        logA = np.log(A)
-        logp = np.log(np.maximum(pobs, 1e-300))
-        delta = np.log(np.maximum(pi, 1e-300))[None, :] + logp[:, 0]
-    ptr = np.zeros((B, T, N), dtype=np.int32)
-    ident = np.arange(N, dtype=np.int32)
-    final_delta = np.empty((B, N))
-    sel0 = lengths == 1
-    final_delta[sel0] = delta[sel0]
-    for t in range(1, T):
-        cand = delta[:, :, None] + logA[None, :, :]  # (B, from, to)
-        ptr_t = cand.argmax(axis=1).astype(np.int32)  # (B, to)
-        pad = lengths <= t
-        ptr_t[pad] = ident
-        ptr[:, t] = ptr_t
-        delta = cand.max(axis=1) + logp[:, t]
-        sel = lengths - 1 == t
-        if sel.any():
-            final_delta[sel] = delta[sel]
-    path = np.empty((B, T), dtype=np.int64)
-    path[:, T - 1] = final_delta.argmax(axis=1)
-    rows = np.arange(B)
-    for t in range(T - 2, -1, -1):
-        path[:, t] = ptr[rows, t + 1, path[:, t + 1]]
-    return [path[b, : lengths[b]] for b in range(B)]
+        logA = np.log(A)[:, :, None]  # (from, to, lane)
+    for idx, pobs, lengths in _blocks(pobs_list):
+        T, N, B = pobs.shape
+        with np.errstate(divide="ignore"):
+            logp = np.log(np.maximum(pobs, 1e-300))
+            delta = np.log(np.maximum(pi, 1e-300))[:, None] + logp[0]
+        ptr = np.zeros((T, N, B), dtype=np.int32)
+        ident = np.arange(N, dtype=np.int32)[:, None]
+        final_delta = np.where(lengths == 1, delta, 0.0)
+        for t in range(1, T):
+            cand = delta[:, None, :] + logA  # (from, to, lane)
+            ptr[t] = np.where(lengths <= t, ident, cand.argmax(axis=0))
+            delta = cand.max(axis=0) + logp[t]
+            final_delta = np.where(lengths - 1 == t, delta, final_delta)
+        path = np.empty((T, B), dtype=np.int64)
+        path[T - 1] = final_delta.argmax(axis=0)
+        lanes = np.arange(B)
+        for t in range(T - 2, -1, -1):
+            path[t] = ptr[t + 1, path[t + 1], lanes]
+        _lanes(path, idx, lengths, paths)
+    return paths
 
 
-def _partition_groups(batches, obs_col: str):
-    """Materialize one mapInPandas partition and split it into
-    per-trajectory (traj_id, t_array, obs_array) groups (rows of a
-    trajectory are co-located by the upstream repartition)."""
+def _partition_groups(batches, obs_col: str) -> list:
+    """Materialize pandas batches of (traj_id, t, obs) rows — one
+    mapInPandas partition, or a frame fetched to the driver — and split
+    them into per-trajectory (traj_id, t_array, obs_array) groups in
+    traj_id order (rows of a trajectory are co-located by the upstream
+    repartition)."""
     pdfs = [p for p in batches]
     if not pdfs:
-        return None
+        return []
     pdf = pd.concat(pdfs, ignore_index=True).sort_values(["traj_id", "t"])
+    if pdf.empty:
+        return []
     traj = pdf["traj_id"].to_numpy()
     bounds = np.flatnonzero(np.r_[True, traj[1:] != traj[:-1]])
     ts = pdf["t"].to_numpy()
     obs = pdf[obs_col].to_numpy()
     ends = np.r_[bounds[1:], len(traj)]
     return [(traj[b], ts[b:e], obs[b:e]) for b, e in zip(bounds, ends)]
+
+
+def _decode_groups(groups: list, kind: str, A: np.ndarray, pi: np.ndarray, om) -> pd.DataFrame:
+    """Decode (traj_id, t, obs) groups with one lane-exact kernel call:
+    per-frame gamma (``kind="gamma"``) or the Viterbi path, as one frame of
+    (traj_id, t, state_probabilities | hidden_state) rows."""
+    pobs_list = [om.to_state_probability_trajectory(obs) for _, _, obs in groups]
+    out = {
+        "traj_id": np.repeat(
+            np.array([tid for tid, _, _ in groups], dtype=np.int64), [len(t) for _, t, _ in groups]
+        ),
+        "t": np.concatenate([np.empty(0, np.int64), *(t for _, t, _ in groups)]),
+    }
+    if kind == "gamma":
+        gammas = forward_backward_batch(A, pobs_list, pi)[3]
+        out["state_probabilities"] = pd.Series([g for gam in gammas for g in gam], dtype=object)
+    else:
+        paths = viterbi_batch(A, pobs_list, pi)
+        out["hidden_state"] = np.concatenate([np.empty(0, np.int32), *paths]).astype(np.int32)
+    return pd.DataFrame(out)
 
 
 def viterbi(A: np.ndarray, pobs: np.ndarray, pi: np.ndarray) -> np.ndarray:
@@ -243,10 +330,11 @@ class HiddenMarkovModel:
     def _decode_df(
         self, df: DataFrame, kind: str, obs_col: str, colocated: bool = False
     ) -> DataFrame:
-        """Partition-batched decode: co-locate trajectories by hash
-        repartition, then one mapInPandas pass runs the batched recursion
-        over every trajectory in the partition at once (one vectorized time
-        loop per partition instead of a Python loop per frame)."""
+        """Batched decode. Inside the ``hmm`` dispatch bound the frame is
+        fetched once and decoded on the driver into a local frame; above it
+        trajectories are co-located by hash repartition and one mapInPandas
+        pass decodes each partition with one kernel call. Lane-exact
+        kernels make both paths return the same rows."""
         A = self.transition_matrix
         pi = self.initial_distribution
         om = self.output_model
@@ -269,29 +357,14 @@ class HiddenMarkovModel:
 
         def fn(batches):
             groups = _partition_groups(batches, obs_col)
-            if not groups:
-                return
-            pobs_list = [om.to_state_probability_trajectory(o) for _, _, o in groups]
-            if kind == "gamma":
-                _, _, _, gammas = forward_backward_batch(A, pobs_list, pi)
-                yield pd.DataFrame(
-                    {
-                        "traj_id": np.concatenate([np.full(len(t), tid) for tid, t, _ in groups]),
-                        "t": np.concatenate([t for _, t, _ in groups]),
-                        "state_probabilities": [g for gam in gammas for g in gam],
-                    }
-                )
-            else:
-                paths = viterbi_batch(A, pobs_list, pi)
-                yield pd.DataFrame(
-                    {
-                        "traj_id": np.concatenate([np.full(len(t), tid) for tid, t, _ in groups]),
-                        "t": np.concatenate([t for _, t, _ in groups]),
-                        "hidden_state": np.concatenate(paths).astype(np.int32),
-                    }
-                )
+            if groups:
+                yield _decode_groups(groups, kind, A, pi, om)
 
         out = df.select("traj_id", "t", obs_col)
+        local = dispatch.fetch("hmm", out)
+        if local is not None:
+            rows = _decode_groups(_partition_groups([local], obs_col), kind, A, pi, om)
+            return df.sparkSession.createDataFrame(rows, schema)
         if not colocated:
             # pin parallelism: AQE coalescing would serialize the decode
             out = out.repartition(

@@ -3,17 +3,21 @@
 Reference: ``MaximumLikelihoodHMM``
 (/root/reference/src/deeptime/markov/hmm/_maximum_likelihood_hmm.py:16-424).
 
-Spark shape (SURVEY.md §2.9): per EM iteration, ONE Spark job runs the
-E-step — a grouped-map Arrow UDF per (lagged/strided) sub-trajectory that
-executes the scaled forward-backward recursion sequentially and emits a
-single sufficient-statistics row (loglik, gamma_0, Baum-Welch counts,
-output-model stats). The driver sums the ~|trajs| rows and performs the
-M-step (reversible MLE reuse + emission refit). Sequences stay distributed;
-only O(n_hidden^2 + stats_dim) floats per trajectory cross the wire.
+Inside ``dispatch.BOUNDS["hmm"]`` the lagged frame is fetched to the
+driver once and every E-step runs there. Above it (SURVEY.md §2.9's Spark
+shape), each EM iteration is ONE mapInPandas job over the frame
+co-located by trajectory: one lane-exact forward-backward call per
+partition emits one sufficient-statistics row per trajectory (loglik,
+gamma_0, Baum-Welch counts, output-model stats). Either way the driver
+sums the rows in sorted traj_id order and performs the M-step (reversible
+MLE reuse + emission refit), so the fit does not depend on the path or on
+the partition layout. Only O(n_hidden^2 + stats_dim) floats per
+trajectory cross the wire.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Optional, Union
 
 import numpy as np
@@ -22,8 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator
-from deeptime_spark.hmm.hmm_model import HiddenMarkovModel
+from deeptime_spark.hmm.hmm_model import (
+    HiddenMarkovModel,
+    _partition_groups,
+    forward_backward_batch,
+)
 from deeptime_spark.markov.msm import (
     MarkovStateModel,
     transition_matrix_nonreversible,
@@ -64,6 +73,50 @@ def lag_observations_df(
     )
 
 
+def _traj_stats(groups: list, A: np.ndarray, pi: np.ndarray, om) -> tuple:
+    """Per-trajectory sufficient statistics of one E-step for (traj_id, t,
+    obs) groups: one lane-exact forward-backward call over all of them, so
+    each trajectory's row is what it would be alone. Returns (traj_ids (B,),
+    rows (B, 1 + N + N*N + stats_dim)); a row is loglik | gamma0 | counts |
+    output-model stats."""
+    B = len(groups)
+    pobs_list = [om.to_state_probability_trajectory(obs) for _, _, obs in groups]
+    loglik, gamma0, counts, gammas = forward_backward_batch(A, pobs_list, pi)
+    om_stats = [om.collect_stats(obs, g) for (_, _, obs), g in zip(groups, gammas)]
+    rows = np.hstack(
+        [
+            loglik[:, None],
+            gamma0,
+            counts.reshape(B, len(pi) ** 2),
+            np.array(om_stats).reshape(B, om.stats_dim()),
+        ]
+    )
+    return np.array([tid for tid, _, _ in groups], dtype=np.int64), rows
+
+
+def _reduce(traj_ids: np.ndarray, rows: np.ndarray, N: int) -> dict:
+    """Sum per-trajectory rows in sorted traj_id order, one row after
+    another: the totals do not depend on partitioning or on which path
+    computed the rows."""
+    if not len(traj_ids):
+        raise ValueError("no (sub-)trajectories of length > 1 — lagtime too large?")
+    total = np.cumsum(rows[np.argsort(traj_ids, kind="stable")], axis=0)[-1]
+    return {
+        "loglik": float(total[0]),
+        "gamma0": total[1 : 1 + N],
+        "counts": total[1 + N : 1 + N + N * N].reshape(N, N),
+        "om_stats": total[1 + N + N * N :],
+    }
+
+
+def _driver_estep(pdf: pd.DataFrame, obs_col: str):
+    """The E-step on the driver for a fetched lagged frame: trajectories are
+    grouped once, then every EM iteration is one ``_traj_stats`` call over
+    all of them, reduced like the distributed rows."""
+    groups = [g for g in _partition_groups([pdf], obs_col) if len(g[2]) > 1]
+    return lambda A, pi, om: _reduce(*_traj_stats(groups, A, pi, om), len(pi))
+
+
 class MaximumLikelihoodHMM(Estimator):
     """ctor mirrors the reference (:78-99): initial_model, lagtime, stride,
     reversible, stationary, fixed p, accuracy, maxit."""
@@ -80,7 +133,6 @@ class MaximumLikelihoodHMM(Estimator):
         maxit: int = 100,
         maxit_reversible: int = 100_000,
         obs_col: str = "state",
-        per_traj_stats: bool = False,
         assume_colocated: bool = False,
     ):
         super().__init__()
@@ -97,12 +149,6 @@ class MaximumLikelihoodHMM(Estimator):
         self.maxit = maxit
         self.maxit_reversible = maxit_reversible
         self.obs_col = obs_col
-        # per_traj_stats: emit one sufficient-statistics row PER TRAJECTORY
-        # (instead of per partition) and reduce them in sorted traj order —
-        # the result is then independent of the partition layout and
-        # replayable bit-exactly by an external oracle. Default stays
-        # partition-batched (fewer rows, vectorized batch recursion).
-        self.per_traj_stats = per_traj_stats
         # assume_colocated: caller guarantees the input frame is already
         # hash-partitioned (and ideally persisted) by traj_id. At lagtime=1 /
         # stride=1 the lagged frame IS the input frame minus length-1
@@ -118,89 +164,34 @@ class MaximumLikelihoodHMM(Estimator):
     # ------------------------------------------------------------ E-step
 
     def _estep(self, df: DataFrame, A: np.ndarray, pi: np.ndarray, om) -> dict:
-        """One distributed E-step: partition-batched forward-backward
-        (mapInPandas over trajectory-partitioned input — one vectorized
-        recursion per partition, one sufficient-statistics row out),
-        driver-side reduction of the ~n_partitions stat rows."""
-        from deeptime_spark.hmm.hmm_model import _partition_groups, forward_backward_batch
-
-        N = len(pi)
+        """One distributed E-step: one mapInPandas job over the
+        trajectory-partitioned frame, one kernel call per partition
+        (``_traj_stats``), then the driver reduces the statistics rows."""
         obs_col = self.obs_col
-        per_traj = self.per_traj_stats
         schema = StructType(
             [
-                StructField("traj_id", LongType()),
-                StructField("loglik", DoubleType()),
-                StructField("gamma0", ArrayType(DoubleType())),
-                StructField("counts", ArrayType(DoubleType())),
-                StructField("om_stats", ArrayType(DoubleType())),
+                StructField("traj_id", ArrayType(LongType())),
+                StructField("rows", ArrayType(DoubleType())),
             ]
         )
 
         def estep(batches):
-            groups = _partition_groups(batches, obs_col)
-            if groups:
-                # lag_observations_df drops length-1 sub-trajectories up
-                # front; the assume_colocated fast path defers that drop to
-                # here (same statistics either way)
-                groups = [g for g in groups if len(g[2]) > 1]
+            # lag_observations_df drops length-1 sub-trajectories up front;
+            # the assume_colocated fast path defers that drop to here (same
+            # statistics either way)
+            groups = [g for g in _partition_groups(batches, obs_col) if len(g[2]) > 1]
             if not groups:
                 return
-            if per_traj:
-                # one row per trajectory: single-lane recursion keeps each
-                # trajectory's statistics separate for the sorted reduce
-                for tid, _, obs in groups:
-                    pobs = om.to_state_probability_trajectory(obs)
-                    loglik, gamma0, counts, gammas = forward_backward_batch(A, [pobs], pi)
-                    yield pd.DataFrame(
-                        {
-                            "traj_id": [int(tid)],
-                            "loglik": [loglik],
-                            "gamma0": [gamma0.tolist()],
-                            "counts": [counts.ravel().tolist()],
-                            "om_stats": [om.collect_stats(obs, gammas[0]).tolist()],
-                        }
-                    )
-                return
-            pobs_list = [om.to_state_probability_trajectory(o) for _, _, o in groups]
-            loglik, gamma0, counts, gammas = forward_backward_batch(A, pobs_list, pi)
-            om_stats = np.zeros(om.stats_dim())
-            for (_, _, obs), gamma in zip(groups, gammas):
-                om_stats += om.collect_stats(obs, gamma)
-            yield pd.DataFrame(
-                {
-                    "traj_id": [-1],
-                    "loglik": [loglik],
-                    "gamma0": [gamma0.tolist()],
-                    "counts": [counts.ravel().tolist()],
-                    "om_stats": [om_stats.tolist()],
-                }
-            )
+            traj_ids, rows = _traj_stats(groups, A, pi, om)
+            # one packed row per partition: the per-trajectory rows cross
+            # the wire as two flat arrays, not one Spark row each
+            yield pd.DataFrame({"traj_id": [traj_ids], "rows": [rows.ravel()]})
 
-        # one stats row per PARTITION (or per trajectory in per_traj
-        # mode), so the driver reduction is O(partitions x N^2) floats —
-        # negligible up to thousands of partitions. If a deployment ever
-        # runs with 10^5+ partitions, insert a tree level (repartition the
-        # stats rows to sqrt(P) and re-run a summing mapInPandas) before
-        # this collect; the per_traj sorted-reduce replayability is
-        # unaffected because that mode already fixes the reduction order.
-        rows = df.mapInPandas(estep, schema=schema).collect()
-        if not rows:
-            raise ValueError("no (sub-)trajectories of length > 1 — lagtime too large?")
-        if per_traj:
-            rows = sorted(rows, key=lambda r: r["traj_id"])
-        agg = {
-            "loglik": 0.0,
-            "gamma0": np.zeros(N),
-            "counts": np.zeros((N, N)),
-            "om_stats": np.zeros(om.stats_dim()),
-        }
-        for r in rows:
-            agg["loglik"] += r["loglik"]
-            agg["gamma0"] += np.array(r["gamma0"])
-            agg["counts"] += np.array(r["counts"]).reshape(N, N)
-            agg["om_stats"] += np.array(r["om_stats"])
-        return agg
+        pdf = df.mapInPandas(estep, schema=schema).toPandas()
+        traj_ids = np.concatenate([np.empty(0, np.int64), *pdf["traj_id"]])
+        width = 1 + len(pi) + len(pi) ** 2 + om.stats_dim()
+        rows = np.concatenate([np.empty(0), *pdf["rows"]]).reshape(len(traj_ids), width)
+        return _reduce(traj_ids, rows, len(pi))
 
     # ------------------------------------------------------------ M-step
 
@@ -240,32 +231,36 @@ class MaximumLikelihoodHMM(Estimator):
         pi = np.array(init.initial_distribution, dtype=np.float64, copy=True)
         om = init.output_model.copy()
 
-        if self.lagtime == 1 and self.stride == 1 and self.assume_colocated:
+        colocated = self.lagtime == 1 and self.stride == 1 and self.assume_colocated
+        if colocated:
             # input frame == lagged frame at lag 1; caller already co-located
             # (and usually persisted) it by traj_id — no second shuffle, no
             # duplicate cache; singleton trajectories drop inside the E-step
             lagged = df.select("traj_id", "t", self.obs_col)
-            owns_cache = False
         else:
-            lagged = lag_observations_df(df, self.lagtime, self.stride)
-            # the EM loop re-reads the lagged frame every iteration: persist it
-            # ALREADY co-located by trajectory, so each E-step's mapInPandas
-            # reads cached partitions with zero per-iteration shuffle
-            lagged = (
-                lagged.select("traj_id", "t", self.obs_col)
-                .repartition(
-                    df.sparkSession.sparkContext.defaultParallelism, "traj_id"
-                )
-                .persist()
+            lagged = lag_observations_df(df, self.lagtime, self.stride).select(
+                "traj_id", "t", self.obs_col
             )
-            owns_cache = True
+        local = dispatch.fetch("hmm", lagged)
+        owns_cache = local is None and not colocated
+        if owns_cache:
+            # the EM loop re-reads the lagged frame every iteration: persist
+            # it co-located by trajectory, so each E-step's mapInPandas
+            # reads cached partitions with no per-iteration shuffle
+            lagged = lagged.repartition(
+                df.sparkSession.sparkContext.defaultParallelism, "traj_id"
+            ).persist()
+        if local is not None:
+            estep = _driver_estep(local, self.obs_col)
+        else:
+            estep = functools.partial(self._estep, lagged)
         try:
             likelihoods = []
             final_counts = None
             converged = False
             with ProgressCallback(progress, desc="baum-welch", total=self.maxit) as cb:
                 for it in range(self.maxit):
-                    agg = self._estep(lagged, A, pi, om)
+                    agg = estep(A, pi, om)
                     loglik = agg["loglik"]
                     if likelihoods and (loglik - likelihoods[-1]) < self.accuracy:
                         converged = True

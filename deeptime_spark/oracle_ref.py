@@ -2364,12 +2364,13 @@ _BUILDERS["tram_events"] = oracle_tram
 
 
 def oracle_hmm_viterbi() -> str:
-    """HMM mirror: the query runs Baum-Welch in per-trajectory-stats mode
-    (one sufficient-statistics row per trajectory, reduced in sorted traj
-    order), which makes the whole EM + viterbi pipeline independent of the
-    partition layout and replayable here — init MSM from DuckDB counts,
-    the same per-trajectory forward-backward and M-step, the same decode
-    kernel, all in sorted trajectory order. Bit-exact."""
+    """HMM mirror: the query's Baum-Welch reduces one sufficient-statistics
+    row per trajectory in sorted traj order, and its kernels are lane-exact
+    (a trajectory's numbers are the same alone or batched), which makes the
+    whole EM + viterbi pipeline independent of the partition layout and of
+    the dispatch path, and replayable here — init MSM from DuckDB counts,
+    each trajectory's forward-backward run alone (B=1), the same M-step,
+    the same decode kernel, all in sorted trajectory order. Bit-exact."""
     from deeptime_spark.hmm.hmm_model import forward_backward_batch, viterbi_batch
     from deeptime_spark.hmm.init import init_discrete_metastable_from_msm
     from deeptime_spark.hmm.mlhmm import MaximumLikelihoodHMM
@@ -2401,7 +2402,7 @@ def oracle_hmm_viterbi() -> str:
         (int(tid[a]), t_arr[a:b], state[a:b]) for a, b in zip(bounds[:-1], bounds[1:])
     ]
     em_trajs = [(i, ts, obs) for i, ts, obs in trajs if len(obs) > 1]  # lag-1 drop
-    est = MaximumLikelihoodHMM(init, lagtime=1, maxit=3, per_traj_stats=True)
+    est = MaximumLikelihoodHMM(init, lagtime=1, maxit=3)
     likelihoods: list[float] = []
     converged = False
     for _ in range(3):
@@ -2414,9 +2415,9 @@ def oracle_hmm_viterbi() -> str:
         for _, _, obs in em_trajs:  # sorted traj order (duckdb ORDER BY)
             pobs = om.to_state_probability_trajectory(obs)
             ll, g0, cnt, gammas = forward_backward_batch(A, [pobs], pi)
-            agg["loglik"] += ll
-            agg["gamma0"] += g0
-            agg["counts"] += cnt.reshape(2, 2)
+            agg["loglik"] += ll[0]
+            agg["gamma0"] += g0[0]
+            agg["counts"] += cnt[0]
             agg["om_stats"] += om.collect_stats(obs, gammas[0])
         if likelihoods and (agg["loglik"] - likelihoods[-1]) < est.accuracy:
             converged = True
@@ -2437,11 +2438,11 @@ _BUILDERS["hmm_viterbi_events"] = oracle_hmm_viterbi
 
 
 def oracle_bayes_hmm() -> str:
-    """BayesianHMM mirror: deterministic-mode MLHMM prior (per-trajectory
-    stats, sorted reduce) then the same Gibbs chain driven by a numpy
-    sweeper — valid because every FFBS sweep statistic is an integer
-    count (exact, layout-independent sums) and path sampling is seeded
-    per trajectory."""
+    """BayesianHMM mirror: MLHMM prior (per-trajectory stats, sorted
+    reduce) then the same Gibbs chain driven by a numpy sweeper — valid
+    because every FFBS sweep statistic is an integer count (exact,
+    layout-independent sums) and a trajectory's sampled path depends only
+    on its own frames and seed (lane-exact FFBS)."""
     from deeptime_spark.hmm.bayesian_hmm import BayesianHMM, ffbs_sample_path_batch
     from deeptime_spark.hmm.hmm_model import HiddenMarkovModel, forward_backward_batch
     from deeptime_spark.hmm.init import init_discrete_metastable_from_msm
@@ -2472,7 +2473,7 @@ def oracle_bayes_hmm() -> str:
     A = np.array(init.transition_matrix, dtype=np.float64, copy=True)
     pi = np.array(init.initial_distribution, dtype=np.float64, copy=True)
     om = init.output_model.copy()
-    est = MaximumLikelihoodHMM(init, lagtime=1, maxit=2, per_traj_stats=True)
+    est = MaximumLikelihoodHMM(init, lagtime=1, maxit=2)
     likelihoods: list[float] = []
     final_counts = None
     converged = False
@@ -2486,9 +2487,9 @@ def oracle_bayes_hmm() -> str:
         for _, _, obs in em_trajs:
             pobs = om.to_state_probability_trajectory(obs)
             ll, g0, cnt, gammas = forward_backward_batch(A, [pobs], pi)
-            agg["loglik"] += ll
-            agg["gamma0"] += g0
-            agg["counts"] += cnt.reshape(2, 2)
+            agg["loglik"] += ll[0]
+            agg["gamma0"] += g0[0]
+            agg["counts"] += cnt[0]
             agg["om_stats"] += om.collect_stats(obs, gammas[0])
         if likelihoods and (agg["loglik"] - likelihoods[-1]) < est.accuracy:
             converged = True

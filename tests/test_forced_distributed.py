@@ -19,6 +19,7 @@ import __spark_entry__ as entrymod
 from deeptime_spark import dispatch
 from deeptime_spark.clustering import kmeans
 from deeptime_spark.decomposition import deep
+from deeptime_spark.hmm import hmm_model, mlhmm, random_guess
 from deeptime_spark.operators import dedup
 from deeptime_spark.operators import graph as G
 from test_partition_invariance import SF, normalize
@@ -76,6 +77,23 @@ def _deep(est, key):
     return fit
 
 
+def _dtrajs(spark, empty):
+    rows = []
+    for tid in range(0 if empty else 4):
+        obs = HMM0.simulate(150, seed=tid)[1]
+        rows += [(tid, t, int(o)) for t, o in enumerate(obs)]
+    rows += [] if empty else [(9, 0, 1)]  # singleton: dropped by the fit
+    return spark.createDataFrame(rows, "traj_id long, t long, state long")
+
+
+def _hmm_fit(df):
+    m = mlhmm.MaximumLikelihoodHMM(HMM0, lagtime=1, maxit=3).fit(df).fetch_model()
+    return [m.transition_matrix.tolist(), m.initial_distribution.tolist(),
+            m.output_model.output_probabilities.tolist(), m.likelihoods.tolist()]
+
+
+# a fixed initial model: an empty input reaches the EM itself
+HMM0 = random_guess(n_observation_states=3, n_hidden_states=2, seed=11)
 KMEANS = dict(n_clusters=4, seed=3, max_iter=10, order_col="id", sample_size=91)
 
 # decision, module, driver kernel, input builder, run, empty-input outcome
@@ -117,6 +135,14 @@ CASES = {
         lambda df: kmeans.DeterministicKMeans(**KMEANS).fit(df).fetch_model()
         .cluster_centers.tolist(),
         ValueError,
+    ),
+    "hmm-fit": ("hmm", mlhmm, "_driver_estep", _dtrajs, _hmm_fit, ValueError),
+    "hmm-viterbi": (
+        "hmm", hmm_model, "_decode_groups", _dtrajs, lambda df: _rows(HMM0.viterbi_df(df)), [],
+    ),
+    "hmm-gamma": (
+        "hmm", hmm_model, "_decode_groups", _dtrajs,
+        lambda df: _rows(HMM0.state_probabilities_df(df)), [],
     ),
     "union_find": (
         "union_find", dedup, "_union_find_local", _edges,

@@ -5,10 +5,13 @@ perturbed/heuristic init, and require recovery of transition matrix and
 emissions up to hidden-state permutation (test_mlhmm.py style).
 """
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.data.schema import dtraj_from_arrays, trajectory_from_arrays
 from deeptime_spark.hmm import (
     DiscreteOutputModel,
@@ -182,6 +185,7 @@ def test_batched_kernels_match_single(discrete_ground_truth):
     pobs_list = [om.to_state_probability_trajectory(o) for o in obs_list]
     # batched sufficient statistics == sum of per-trajectory results
     ll_b, g0_b, c_b, gammas_b = forward_backward_batch(A, pobs_list, pi)
+    ll_b, g0_b, c_b = ll_b.sum(), g0_b.sum(axis=0), c_b.sum(axis=0)
     ll_s, g0_s, c_s = 0.0, np.zeros(len(pi)), np.zeros_like(A)
     for pobs, gam_b in zip(pobs_list, gammas_b):
         ll, gamma, counts = forward_backward(A, pobs, pi)
@@ -219,7 +223,8 @@ def test_batched_kernels_property(discrete_ground_truth):
         rng = np.random.default_rng(seed)
         obs_list = [rng.integers(0, om.n_observable_states, size=n) for n in lengths]
         pobs_list = [om.to_state_probability_trajectory(o) for o in obs_list]
-        ll_b, g0_b, c_b, gammas_b = forward_backward_batch(A, pobs_list, pi)
+        ll_b, _, _, gammas_b = forward_backward_batch(A, pobs_list, pi)
+        ll_b = ll_b.sum()
         ll_s = 0.0
         for pobs, gam_b in zip(pobs_list, gammas_b):
             ll, gamma, _ = forward_backward(A, pobs, pi)
@@ -232,11 +237,118 @@ def test_batched_kernels_property(discrete_ground_truth):
     check()
 
 
+def _random_hmm(rng, n):
+    A = rng.uniform(size=(n, n))
+    A /= A.sum(axis=1, keepdims=True)
+    pi = rng.uniform(size=n)
+    return A, pi / pi.sum()
+
+
+@pytest.mark.parametrize("n", [2, 3, 4, 5])
+def test_batched_kernels_lane_exact(n):
+    """Every lane of a batch is bit-identical to its B=1 run, whatever
+    shares the batch: under the kernels' own length classes, under one
+    unbucketed block padded to the longest lane, and for Viterbi under a
+    shuffled split into two batches."""
+    from deeptime_spark.hmm.hmm_model import (
+        _forward_backward_block,
+        _pad_pobs,
+        forward_backward_batch,
+        viterbi_batch,
+    )
+
+    rng = np.random.default_rng(100 + n)
+    for trial in range(25):
+        A, pi = _random_hmm(rng, n)
+        if trial % 5 == 0:
+            lengths = [int(rng.integers(1, 60))] * int(rng.integers(1, 8))  # all equal
+        else:
+            lengths = [1] + list(rng.integers(1, 121, size=int(rng.integers(1, 10))))
+        pobs_list = [rng.uniform(size=(L, n)) for L in lengths]
+        alone = [forward_backward_batch(A, [p], pi) for p in pobs_list]
+        ll, g0, counts, gammas = forward_backward_batch(A, pobs_list, pi)
+        block, lens = _pad_pobs(pobs_list)
+        ll_p, g0_p, counts_p, gamma_p = _forward_backward_block(A, block, lens, pi)
+        for b, (ll1, g01, c1, gam1) in enumerate(alone):
+            np.testing.assert_array_equal(ll[b], ll1[0])
+            np.testing.assert_array_equal(g0[b], g01[0])
+            np.testing.assert_array_equal(counts[b], c1[0])
+            np.testing.assert_array_equal(gammas[b], gam1[0])
+            np.testing.assert_array_equal(ll_p[b], ll1[0])
+            np.testing.assert_array_equal(g0_p[:, b], g01[0])
+            np.testing.assert_array_equal(counts_p[:, :, b], c1[0])
+            np.testing.assert_array_equal(gamma_p[: lens[b], :, b], gam1[0])
+        paths = viterbi_batch(A, pobs_list, pi)
+        perm = rng.permutation(len(pobs_list))
+        half = len(perm) // 2
+        split = {}
+        for part in (perm[:half], perm[half:]):
+            if len(part):
+                split.update(zip(part, viterbi_batch(A, [pobs_list[i] for i in part], pi)))
+        for b, p in enumerate(pobs_list):
+            p1 = viterbi_batch(A, [p], pi)[0]
+            np.testing.assert_array_equal(paths[b], p1)
+            np.testing.assert_array_equal(split[b], p1)
+
+
+def test_kernel_blocks_bound_padding(monkeypatch):
+    """One 50k-frame trajectory among 1,000 short ones must not pad the
+    short ones to its length: every padded block the kernel allocates
+    holds at most twice the real frames in it."""
+    from deeptime_spark.hmm import hmm_model
+
+    rng = np.random.default_rng(3)
+    A, pi = _random_hmm(rng, 2)
+    lengths = [50_000] + list(rng.integers(1, 200, size=1000))
+    pobs_list = [rng.uniform(size=(L, 2)) for L in lengths]
+    blocks = []
+    real_pad = hmm_model._pad_pobs
+
+    def spy(sub):
+        pobs, lens = real_pad(sub)
+        blocks.append((pobs.shape[0] * pobs.shape[2], int(lens.sum())))
+        return pobs, lens
+
+    monkeypatch.setattr(hmm_model, "_pad_pobs", spy)
+    ll, _, _, gammas = hmm_model.forward_backward_batch(A, pobs_list, pi)
+    assert sum(real for _, real in blocks) == sum(lengths)
+    assert all(cells <= 2 * real for cells, real in blocks), blocks
+    assert [len(g) for g in gammas] == lengths
+    short = hmm_model.forward_backward_batch(A, pobs_list[1:4], pi)[0]
+    np.testing.assert_array_equal(ll[1:4], short)
+
+
+def test_ffbs_paths_independent_of_batching():
+    """A trajectory's FFBS draw is a function of its frames and seed only:
+    the same path in one batch, alone, or in a shuffled split."""
+    from deeptime_spark.hmm.bayesian_hmm import ffbs_sample_path_batch
+
+    rng = np.random.default_rng(8)
+    for n in (2, 3, 5):
+        A, pi = _random_hmm(rng, n)
+        lengths = [1, 2, 7, 7, 33, 64, 65, 150] + list(rng.integers(1, 100, size=12))
+        pobs_list = [rng.uniform(size=(L, n)) for L in lengths]
+        seeds = [int(s) for s in rng.integers(0, 2**31, size=len(lengths))]
+        together = ffbs_sample_path_batch(A, pobs_list, pi, seeds)
+        perm = rng.permutation(len(lengths))
+        split = {}
+        for part in (perm[:7], perm[7:]):
+            paths = ffbs_sample_path_batch(
+                A, [pobs_list[i] for i in part], pi, [seeds[i] for i in part]
+            )
+            split.update(zip(part, paths))
+        for b, p in enumerate(pobs_list):
+            alone = ffbs_sample_path_batch(A, [p], pi, [seeds[b]])[0]
+            np.testing.assert_array_equal(together[b], alone)
+            np.testing.assert_array_equal(split[b], alone)
+
+
 def test_mlhmm_assume_colocated_equivalent(spark, discrete_ground_truth):
     """The lag-1 co-located fast path (no lag_observations_df join, no
     second repartition/persist, E-step-level singleton drop) must produce
     the exact same model as the default path, including with a length-1
-    trajectory present (which the default path drops up front)."""
+    trajectory present (which the default path drops up front) — on the
+    driver path this small input takes by default and forced distributed."""
     hmm = discrete_ground_truth
     dtrajs = [hmm.simulate(400, seed=200 + s)[1].astype(int) for s in range(4)]
     dtrajs.append(np.array([1]))  # singleton: dropped either way
@@ -244,29 +356,30 @@ def test_mlhmm_assume_colocated_equivalent(spark, discrete_ground_truth):
     coloc = df.repartition(4, "traj_id").persist()
     try:
         init = init_discrete_metastable_from_data(coloc, n_hidden_states=2, lagtime=1)
-        base = (
-            MaximumLikelihoodHMM(init, lagtime=1, maxit=4, per_traj_stats=True)
-            .fit(df)
-            .fetch_model()
-        )
-        fast = (
-            MaximumLikelihoodHMM(
-                init, lagtime=1, maxit=4, per_traj_stats=True, assume_colocated=True
-            )
-            .fit(coloc)
-            .fetch_model()
-        )
-        np.testing.assert_array_equal(base.transition_matrix, fast.transition_matrix)
-        np.testing.assert_array_equal(
-            base.initial_distribution, fast.initial_distribution
-        )
-        np.testing.assert_array_equal(
-            base.output_model.output_probabilities,
-            fast.output_model.output_probabilities,
-        )
-        # decode parity on the colocated frame without the extra shuffle
-        a = base.viterbi_df(df).orderBy("traj_id", "t").collect()
-        b = fast.viterbi_df(coloc, colocated=True).orderBy("traj_id", "t").collect()
-        assert [r["hidden_state"] for r in a] == [r["hidden_state"] for r in b]
+        seen = []
+        for mode in (contextlib.nullcontext(), dispatch.force("distributed")):
+            with mode:
+                base = MaximumLikelihoodHMM(init, lagtime=1, maxit=4).fit(df).fetch_model()
+                fast = (
+                    MaximumLikelihoodHMM(init, lagtime=1, maxit=4, assume_colocated=True)
+                    .fit(coloc)
+                    .fetch_model()
+                )
+                # decode parity on the colocated frame without the extra shuffle
+                a = base.viterbi_df(df).orderBy("traj_id", "t").collect()
+                b = fast.viterbi_df(coloc, colocated=True).orderBy("traj_id", "t").collect()
+            for m in (base, fast):
+                seen.append(
+                    (
+                        m.transition_matrix.tolist(),
+                        m.initial_distribution.tolist(),
+                        m.output_model.output_probabilities.tolist(),
+                    )
+                )
+            assert [r["hidden_state"] for r in a] == [r["hidden_state"] for r in b]
+            seen.append([r["hidden_state"] for r in a])
+        # both fits agree, and the driver path equals the distributed one
+        assert seen[0] == seen[1] == seen[3] == seen[4]
+        assert seen[2] == seen[5]
     finally:
         coloc.unpersist()
