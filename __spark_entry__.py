@@ -1546,9 +1546,7 @@ def _q_doc_leakage_split(spark, sf_dir):
         docs, n_hashes=32, bands=8, with_est=False
     ).persist()
     cands.count()
-    pairs = verify_candidates_jaccard(
-        cands, docs, threshold=0.2, candidates_materialized=True
-    )
+    pairs = verify_candidates_jaccard(cands, docs, threshold=0.2)
     assigned = leakage_safe_split(
         docs, pairs.select("id_a", "id_b"), train_pct=90, val_pct=5, seed=7
     ).persist()
@@ -1793,9 +1791,7 @@ def _q_doc_containment_pairs(spark, sf_dir):
     # ~1.7k candidates
     cands = winnowing_candidates(corpus, k=16, w=64, min_shared=2).persist()
     cands.count()
-    verified = verify_candidates_containment(
-        cands, corpus, threshold=0.6, candidates_materialized=True
-    )
+    verified = verify_candidates_containment(cands, corpus, threshold=0.6)
     return verified.select(
         "id_a",
         "id_b",
@@ -2232,7 +2228,7 @@ def _q_sindy_events(spark, sf_dir):
     return _local_df(spark, rows, "idx long, feature string, coef double")
 
 
-@query(scale=True)
+@query(scale=True, dispatch=True)
 def _q_tram_events(spark, sf_dir):
     """TRAM over two synthetic thermodynamic ensembles built from the
     event dtraj (ensemble = traj parity, bias = scaled value): Spark
@@ -3101,9 +3097,7 @@ def _q_dedup_verified_pairs(spark, sf_dir):
         docs, n_hashes=32, bands=8, with_est=False
     ).persist()
     cands.count()
-    out = verify_candidates_jaccard(
-        cands, docs, threshold=0.2, candidates_materialized=True
-    )
+    out = verify_candidates_jaccard(cands, docs, threshold=0.2)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -3127,9 +3121,7 @@ def _q_dedup_components(spark, sf_dir):
         docs, n_hashes=32, bands=8, with_est=False
     ).persist()
     cands.count()
-    pairs = verify_candidates_jaccard(
-        cands, docs, threshold=0.2, candidates_materialized=True
-    )
+    pairs = verify_candidates_jaccard(cands, docs, threshold=0.2)
     return duplicate_clusters(pairs.select("id_a", "id_b")).select(
         F.col("component").cast("long").alias("component"),
         F.col("n_members").cast("long").alias("n_members"),
@@ -3595,9 +3587,7 @@ def _q_corpus_clean_pipeline(spark, sf_dir):
         s2, n_hashes=32, bands=8, with_est=False
     ).persist()
     cands.count()
-    pairs = verify_candidates_jaccard(
-        cands, s2, threshold=0.2, candidates_materialized=True
-    )
+    pairs = verify_candidates_jaccard(cands, s2, threshold=0.2)
     s3 = drop_near_duplicates(s2, pairs)
     return pack_documents(s3, budget=512)
 

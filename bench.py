@@ -53,9 +53,8 @@ def main() -> None:
         from deeptime_spark.operators.dedup import (
             minhash_lsh_candidates,
             simhash_signatures_df,
+            verify_candidates_jaccard,
         )
-
-        from deeptime_spark.operators.dedup import verify_candidates_jaccard
 
         tiny = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(48).cache()
         tiny.count()
@@ -68,7 +67,7 @@ def main() -> None:
         # ...including the verification shapes (cached-candidate scan,
         # semi-join + n-gram regex pass, pair join + array set algebra)
         verify_candidates_jaccard(
-            tiny_cands, tiny, threshold=0.2, candidates_materialized=True
+            tiny_cands, tiny, threshold=0.2
         ).write.format("noop").mode("overwrite").save()
         simhash_signatures_df(tiny).write.format("noop").mode("overwrite").save()
         tiny.unpersist()

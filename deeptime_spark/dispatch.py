@@ -45,6 +45,14 @@ BOUNDS = {
     # per-partition sum it cost 1.28 vs 1.24 s at x1 and 2.28 vs 2.14 s at
     # x8 (medians of 4 forced-distributed fits), inside the sum's spread
     "hmm": (0, 300_000),
+    # TRAM bias energies, samples with state >= 0: collected as per-state
+    # blocks for the driver fold, else persisted by state and folded by one
+    # mapInPandas job per iteration. tram_events, warm-min on 4 cores: driver
+    # 2.76 vs 12.26 s at x1 (100k samples), 12.54 vs 29.84 s at x8 (800k).
+    # The driver wins at both sizes, so the bound is a memory cap: the
+    # collect raised the Python peak RSS by 77 MB at x1 and 446 MB at x8,
+    # ~0.53 kB per sample, so 2M samples hold ~1.1 GB on the driver
+    "tram_bias": (0, 2_000_000),
 }
 
 

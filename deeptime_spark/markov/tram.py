@@ -9,13 +9,14 @@ equations implemented here are the published ones).
 
 Spark/driver split (SURVEY.md §7.4.5): Spark computes the per-ensemble
 transition counts and state counts; the self-consistent iteration runs on
-the driver in vectorized log-space numpy. Per-sample bias energies live in
-one of two stores (``bias_store``): ``driver`` collects the per-state
-blocks (fastest below ~2M samples), ``spark`` keeps them distributed,
+the driver in vectorized log-space numpy. Per-sample bias energies are
+collected as per-state blocks when the sample count lies inside
+``dispatch.BOUNDS["tram_bias"]``; above it they stay distributed,
 partitioned by Markov state and persisted — each iteration's f-update is
 then ONE shuffle-free mapInPandas fold returning an (N, K+1) table, so
-sample volume never touches the driver (the 100 TB path). ``auto`` picks
-by sample count. Both paths are numerically identical (pinned by test).
+sample volume never touches the driver (the 100 TB path). Both stores
+fold each state's samples in (traj_id, t) order, so the two paths are
+bit-identical (tests/test_forced_distributed.py).
 
 Data model: DataFrame (therm_state, traj_id, t, state, bias: array<double>
 of length n_therm_states) — bias[k] is the configuration's bias energy
@@ -30,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator, Model
 
 
@@ -197,16 +199,20 @@ class _SparkBiasStore:
     markov energies). Persisting the samples pre-partitioned by state
     makes each iteration ONE shuffle-free mapInPandas job emitting an
     (N, K+1) result — the 100 TB path: samples never reach the driver.
+    Each state's block is sorted by (traj_id, t), the order
+    ``TRAM._collect_bias`` uses, so every logsumexp sums in the same order
+    as on the driver.
     """
 
     def __init__(self, df: DataFrame, state_col: str, bias_col: str, K: int, N: int):
         self.K, self.N = K, N
         self.df = (
             df.where(F.col(state_col) >= 0)
-            .select(F.col(state_col).alias("_i"), F.col(bias_col).alias("_b"))
+            .select(F.col(state_col).alias("_i"), "traj_id", "t", F.col(bias_col).alias("_b"))
             # explicit partition count: AQE would coalesce a small shuffle to
             # ~1 partition and serialize the per-iteration Python folds
             .repartition(df.sparkSession.sparkContext.defaultParallelism, "_i")
+            .sortWithinPartitions("_i", "traj_id", "t")
             .persist()
         )
 
@@ -283,24 +289,18 @@ class TRAM(Estimator):
     """ctor mirrors the reference (_tram.py:49-130): lagtime, maxiter,
     maxerr, track_log_likelihoods, callback_interval (progress omitted)."""
 
-    #: sample sets below this stay driver-side ('auto' mode)
-    DRIVER_SAMPLE_LIMIT = 2_000_000
-
     def __init__(self, lagtime: int = 1, count_mode: str = "sliding", maxiter: int = 1000,
                  maxerr: float = 1e-8, state_col: str = "state", therm_col: str = "therm_state",
-                 bias_col: str = "bias", bias_store: str = "auto"):
+                 bias_col: str = "bias"):
         super().__init__()
         if count_mode != "sliding":
             raise ValueError("v1 supports count_mode='sliding'")
-        if bias_store not in ("auto", "driver", "spark"):
-            raise ValueError(f"bias_store must be auto/driver/spark, got {bias_store!r}")
         self.lagtime = lagtime
         self.maxiter = maxiter
         self.maxerr = maxerr
         self.state_col = state_col
         self.therm_col = therm_col
         self.bias_col = bias_col
-        self.bias_store = bias_store
 
     # ------------------------------------------------------- Spark stages
 
@@ -439,17 +439,11 @@ class TRAM(Estimator):
     def fit(self, df: DataFrame) -> "TRAM":
         C, state_counts = self._collect_counts(df)
         K, N = state_counts.shape
-        use_spark = self.bias_store == "spark" or (
-            self.bias_store == "auto"
-            and int(state_counts.sum()) > self.DRIVER_SAMPLE_LIMIT
-        )
-        store = None
-        if use_spark:
-            store = _SparkBiasStore(df, self.state_col, self.bias_col, K, N)
-            bias_by_state = None
+        if dispatch.on_driver("tram_bias", int(state_counts.sum())):
+            self._model = self.fit_arrays(C, state_counts, self._collect_bias(df, K, N))
         else:
-            bias_by_state = self._collect_bias(df, K, N)
-        self._model = self.fit_arrays(C, state_counts, bias_by_state, store)
+            store = _SparkBiasStore(df, self.state_col, self.bias_col, K, N)
+            self._model = self.fit_arrays(C, state_counts, store=store)
         return self
 
     def fit_arrays(self, C, state_counts, bias_by_state=None, store=None) -> "TRAMModel":

@@ -308,10 +308,20 @@ def ngram_jaccard(a_text: Column, b_text: Column, n: int = 3) -> Column:
     return inter / F.greatest(union, F.lit(1))
 
 
+def _candidate_docs(candidates: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
+    """``docs`` restricted (left semi-join) to the ids on either side of
+    a candidate pair."""
+    cand_ids = (
+        candidates.select(F.col("id_a").alias(id_col))
+        .union(candidates.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    return docs.join(cand_ids, id_col, "left_semi")
+
+
 def verify_candidates_jaccard(
     candidates: DataFrame, docs: DataFrame, threshold: float = 0.8,
     text_col: str = "text", id_col: str = "doc_id", n: int = 3,
-    candidates_materialized: bool = False,
 ) -> DataFrame:
     """Join candidate pairs back to PRE-COMPUTED gram arrays and keep
     pairs over the exact n-gram Jaccard threshold.
@@ -323,28 +333,22 @@ def verify_candidates_jaccard(
     The candidate set is tiny relative to the corpus, so the two joins
     broadcast-hash at scale.
 
-    With ``candidates_materialized=True`` the gram frame is restricted to
-    candidate-touched docs and ``persist()``-ed (lazily — no job until the
-    caller's first action); the cache lives until the caller clears it
-    (``spark.catalog.clearCache()``) or the block manager evicts it."""
+    The gram frame is restricted to candidate-touched docs and
+    ``persist()``-ed (lazily — no job until the caller's first action);
+    the cache lives until the caller clears it
+    (``spark.catalog.clearCache()``) or the block manager evicts it.
+    ``candidates`` should itself be persisted or checkpointed: the
+    restriction reads it twice more."""
     from deeptime_spark.operators.text import word_ngrams
 
-    doc_side = docs
-    if candidates_materialized:
-        # gram computation restricted to candidate-touched documents: at
-        # web scale the candidate set is a sliver of the corpus, so a
-        # semi-join (AQE turns it into a broadcast when the id set is
-        # small) keeps the regex pass off the untouched 99% — identical
-        # results, since grams of non-candidate docs are never read. Only
-        # worth it when ``candidates`` is persisted/checkpointed: the id
-        # set adds two more consumers of the candidate subtree, which
-        # would otherwise re-run the whole LSH pipeline.
-        cand_ids = (
-            candidates.select(F.col("id_a").alias(id_col))
-            .union(candidates.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        doc_side = docs.join(cand_ids, id_col, "left_semi")
+    # gram computation restricted to candidate-touched documents: at
+    # web scale the candidate set is a sliver of the corpus, so a
+    # semi-join (AQE turns it into a broadcast when the id set is
+    # small) keeps the regex pass off the untouched 99% — identical
+    # results, since grams of non-candidate docs are never read. The id
+    # set adds two more consumers of the candidate subtree, which would
+    # re-run the whole LSH pipeline if ``candidates`` were not cached.
+    doc_side = _candidate_docs(candidates, docs, id_col)
     from deeptime_spark.operators.layout import spread_for_map_parallelism
 
     # the gram regex pass is the expensive map stage here; spread it off a
@@ -369,22 +373,21 @@ def verify_candidates_jaccard(
         F.col(id_col),
         F.array_distinct(word_ngrams(F.col(text_col), n)).alias("_grams"),
     ).withColumn("_gsz", F.size("_grams"))
-    if candidates_materialized:
-        # BOTH pair joins consume the gram frame; without a cache the
-        # semi-join + regex subtree executes once per branch (measured 2x
-        # the whole verification cost at sf0.1). persist() is LAZY — it
-        # shares the RDD identity across both join branches with no job
-        # at construction time (a discarded result costs nothing). The
-        # two branches CAN schedule gram tasks concurrently before cache
-        # blocks land, recomputing some partitions on the first action —
-        # correctness is unaffected and steady-state reuse still holds;
-        # callers in tight loops that need a hard once-only guarantee
-        # should force materialization (e.g. grams.count()). The frame is
-        # candidate-touched docs only — by construction a sliver of the
-        # corpus — so MEMORY_AND_DISK is safe at scale. CACHE LIFECYCLE IS
-        # THE CALLER'S: unpersist via spark.catalog.clearCache() (the
-        # bench/correctness harnesses do) or blockManager LRU reclaims it.
-        grams = grams.persist()
+    # BOTH pair joins consume the gram frame; without a cache the
+    # semi-join + regex subtree executes once per branch (measured 2x
+    # the whole verification cost at sf0.1). persist() is LAZY — it
+    # shares the RDD identity across both join branches with no job
+    # at construction time (a discarded result costs nothing). The
+    # two branches CAN schedule gram tasks concurrently before cache
+    # blocks land, recomputing some partitions on the first action —
+    # correctness is unaffected and steady-state reuse still holds;
+    # callers in tight loops that need a hard once-only guarantee
+    # should force materialization (e.g. grams.count()). The frame is
+    # candidate-touched docs only — by construction a sliver of the
+    # corpus — so MEMORY_AND_DISK is safe at scale. CACHE LIFECYCLE IS
+    # THE CALLER'S: unpersist via spark.catalog.clearCache() (the
+    # bench/correctness harnesses do) or blockManager LRU reclaims it.
+    grams = grams.persist()
     # jaccard keeps the EXACT r11 float semantics (same int/int division
     # of the same integers: |A∩B| unchanged, greatest(|A∪B|,1) via the
     # size identity above) while the filter's pushed-down join condition
@@ -416,7 +419,6 @@ def verify_candidates_jaccard(
 def verify_candidates_containment(
     candidates: DataFrame, docs: DataFrame, threshold: float = 0.5,
     text_col: str = "text", id_col: str = "doc_id", n: int = 3,
-    candidates_materialized: bool = False,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT verification of candidate pairs — the
     asymmetric companion of ``verify_candidates_jaccard`` for the
@@ -438,15 +440,7 @@ def verify_candidates_containment(
     from deeptime_spark.operators.layout import spread_for_map_parallelism
     from deeptime_spark.operators.text import word_ngrams
 
-    doc_side = docs
-    if candidates_materialized:
-        cand_ids = (
-            candidates.select(F.col("id_a").alias(id_col))
-            .union(candidates.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        doc_side = docs.join(cand_ids, id_col, "left_semi")
-    doc_side = spread_for_map_parallelism(doc_side, id_col)
+    doc_side = spread_for_map_parallelism(_candidate_docs(candidates, docs, id_col), id_col)
     raw = word_ngrams(F.col(text_col), n)
     # hashed-long distinct grams for the intersect (array_intersect has
     # specialized codegen hash sets for primitive element types only;
@@ -470,14 +464,13 @@ def verify_candidates_containment(
         F.expr("transform(_g0, g -> xxhash64(g))").alias("_grams"),
         "_gsz",
     )
-    if candidates_materialized:
-        # same lazy-persist contract as verify_candidates_jaccard: both
-        # pair joins consume the gram frame; lifecycle is the caller's.
-        # (Eager materialization — grams.count() before the joins — was
-        # TRIED r13 and measured FLAT: the cold-cache branch race does
-        # re-run parts of the gram subtree, but the recompute overlaps
-        # otherwise-idle cores while the count adds serial latency.)
-        grams = grams.persist()
+    # same lazy-persist contract as verify_candidates_jaccard: both
+    # pair joins consume the gram frame; lifecycle is the caller's.
+    # (Eager materialization — grams.count() before the joins — was
+    # TRIED r13 and measured FLAT: the cold-cache branch race does
+    # re-run parts of the gram subtree, but the recompute overlaps
+    # otherwise-idle cores while the count adds serial latency.)
+    grams = grams.persist()
     ga = grams.select(
         F.col(id_col).alias("id_a"), F.col("_grams").alias("_ga"), F.col("_gsz").alias("_da")
     )
@@ -816,7 +809,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    mode: str = "label",
 ) -> DataFrame:
     """Distributed connected components over a pair graph by iterative
     min-label propagation — the missing last step of a dedup pipeline
@@ -845,21 +837,9 @@ def connected_components(
     The distributed loop is the path for genuinely huge pair graphs;
     ``dispatch.force("distributed")`` forces it.
 
-    ``mode="star"`` switches the distributed loop to the
-    large-star/small-star edge contraction of Kiveris et al.,
-    "Connected Components in MapReduce and Beyond" (SoCC'14) — the
-    alternation whose round count is logarithmic in component DIAMETER
-    with per-round cost O(|E|), the safe choice for adversarial
-    long-path graphs where plain propagation would need O(d) rounds
-    (the default ``"label"`` mode's pointer doubling already gets
-    O(log n), so "star" is an alternative with a formal bound, not a
-    fix). Output is bit-identical across modes.
-
     Returns (node, component) for every node incident to an edge, where
     ``component`` is the minimum node id in the component.
     """
-    if mode not in ("label", "star"):
-        raise ValueError(f"mode must be 'label' or 'star', got {mode!r}")
     spark = edges.sparkSession
     # materialize the (possibly expensive) upstream pair pipeline exactly
     # ONCE via persist+count. Never limit().collect() an unpersisted
@@ -878,11 +858,6 @@ def connected_components(
         return _local_df(spark, 
             sorted(comp.items()), "node long, component long"
         )
-    if mode == "star":
-        try:
-            return _cc_star(e0, max_iter)
-        finally:
-            e0.unpersist()
     sym = (
         e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -944,119 +919,6 @@ def connected_components(
     finally:
         sym.unpersist()
         e0.unpersist()
-
-
-def _cc_star(e0: DataFrame, max_iter: int) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.
-    SoCC'14, Algorithms 3-4; cf. the public reference implementations in
-    GraphFrames). Each alternation is two groupBy-min + join rounds over
-    the current edge set; edges monotonically contract toward stars
-    rooted at each component's minimum id, in O(log d) alternations.
-
-    Star ops per the paper, over edges held canonically (a < b):
-
-    - **large-star**: for each node u, with m = min(neighbors(u) + [u]),
-      connect every neighbor v > u to m;
-    - **small-star**: for each node u over larger-to-smaller directed
-      edges, with m = min(smaller-neighbors(u) + [u]), connect u and its
-      smaller neighbors to m.
-
-    Convergence = edge-set fixpoint, detected by an exact-count +
-    hash-xor signature (xxhash64 over the canonical pair: a false
-    positive needs two DIFFERENT edge sets in consecutive rounds with
-    equal count and equal 64-bit hash xors — and by the paper's
-    potential-function argument an unchanged set off the fixpoint is
-    impossible, so matching signatures certify the fixpoint).
-    Returns (node, component) for every node incident to an input edge,
-    component = min node id — bit-identical to mode="label"."""
-    spark = e0.sparkSession
-    nodes = (
-        e0.select(F.col("a").alias("node"))
-        .union(e0.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = (
-        e0.where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _sig(e: DataFrame) -> tuple:
-        # count + XOR of per-edge hashes: a valid set signature because
-        # the edge frame is distinct canonical pairs (and it cannot
-        # overflow, unlike SUM under ANSI arithmetic)
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return int(r["n"]), int(r["h"])
-
-    prev = _sig(edges)
-    converged = prev[0] == 0
-    for _ in range(max_iter):
-        if converged:
-            break
-        # large-star: m(u) = min over u and ALL neighbors; attach the
-        # strictly-larger neighbors to m
-        sym = edges.union(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = sym.groupBy("a").agg(F.min("b").alias("_mb"))
-        m = F.least(F.col("a"), F.col("_mb"))
-        large = (
-            sym.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("_u"), m.alias("_v"))
-        )
-        edges = (
-            large.where(F.col("_u") != F.col("_v"))
-            .select(
-                F.least("_u", "_v").alias("a"), F.greatest("_u", "_v").alias("b")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        # small-star: over larger->smaller edges, attach u and its
-        # smaller neighbors to m(u) = min over them and u
-        down = edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        mins2 = down.groupBy("a").agg(F.min("b").alias("_mb"))
-        m2 = F.least(F.col("a"), F.col("_mb"))
-        small = (
-            down.join(mins2, "a")
-            .select(F.col("b").alias("_u"), m2.alias("_v"))
-            .union(
-                mins2.select(F.col("a").alias("_u"), F.least("a", "_mb").alias("_v"))
-            )
-        )
-        edges = (
-            small.where(F.col("_u") != F.col("_v"))
-            .select(
-                F.least("_u", "_v").alias("a"), F.greatest("_u", "_v").alias("b")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        sig = _sig(edges)
-        if sig == prev:
-            converged = True
-        prev = sig
-    if not converged:
-        raise RuntimeError(
-            f"star connected components did not converge in {max_iter} "
-            "alternations (the Kiveris bound is O(log d); raise max_iter)"
-        )
-    # at the fixpoint every edge is (root=a, child=b); roots and
-    # self-loop-only nodes fall out of the left join
-    labels = edges.select(F.col("b").alias("node"), F.col("a").alias("component"))
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
-    )
 
 
 def duplicate_clusters(
@@ -1387,7 +1249,6 @@ def dedup_token_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     span_tokens: int = 10,
-    hash_spans: bool = False,
 ) -> DataFrame:
     """Exact duplicated-SPAN detection across the whole corpus — the
     practical reduction of suffix-array substring dedup (Lee et al.,
@@ -1408,16 +1269,12 @@ def dedup_token_spans(
       occurrences (AQE skew-join splits any residual hot key);
     - per-document rollup (second small shuffle keyed by doc id).
 
-    ``hash_spans=True`` groups on xxhash64(span) instead of the span
-    string — 8 bytes of shuffle width per span instead of the text
-    itself, the right trade at corpus scale (2^-64 collision odds);
-    the default keeps exact strings so results are provably exact.
+    Spans are keyed by their exact strings, so results are exact.
     """
-    span_key = F.xxhash64("_span") if hash_spans else F.col("_span")
     spans = docs.select(
         F.col(id_col),
         F.posexplode(token_spans(text_col, span_tokens)).alias("_span_no", "_span"),
-    ).select(F.col(id_col), "_span_no", span_key.alias("_k"))
+    ).select(F.col(id_col), "_span_no", F.col("_span").alias("_k"))
     firsts = spans.groupBy("_k").agg(
         F.min(F.struct(F.col(id_col).alias("d"), F.col("_span_no").alias("s"))).alias("_w"),
         F.count(F.lit(1)).alias("_cnt"),
@@ -1517,7 +1374,6 @@ def duplicated_substring_spans(
     id_col: str = "doc_id",
     k: int = 20,
     min_occurrences: int = 2,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Exact duplicated-substring spans — the ExactSubstr dedup of Lee
     et al., "Deduplicating Training Data Makes Language Models Better"
@@ -1544,11 +1400,7 @@ def duplicated_substring_spans(
 
     The islands window shuffles once keyed by doc id (position count
     per doc is bounded by doc length — no skew beyond document size).
-
-    ``hash_shingles=True`` keys on ``xxhash64(shingle)`` — 8 bytes of
-    shuffle width per position instead of the k-token text, the right
-    trade at corpus scale (2^-64 collision odds); the default keeps
-    exact strings so results are provably exact.
+    Shingles are keyed by their exact strings, so results are exact.
 
     Returns (id, span_start, span_end, n_span_tokens): token-index
     [start, end] inclusive of each maximal duplicated span, one row per
@@ -1572,8 +1424,7 @@ def duplicated_substring_spans(
     sh = docs.select(
         F.col(id_col), F.posexplode(grams).alias("_pos", "_g")
     )
-    key = F.xxhash64("_g") if hash_shingles else F.col("_g")
-    sh = sh.select(F.col(id_col), F.col("_pos"), key.alias("_k"))
+    sh = sh.select(F.col(id_col), F.col("_pos"), F.col("_g").alias("_k"))
     dup_keys = (
         sh.groupBy("_k")
         .agg(F.count(F.lit(1)).alias("_cnt"))
@@ -1603,7 +1454,6 @@ def drop_duplicated_substrings(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 20,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """ExactSubstr EXCISION (Lee et al. ACL'22): every occurrence of a
     duplicated k-token shingle except its globally FIRST occurrence
@@ -1639,8 +1489,7 @@ def drop_duplicated_substrings(
     docs = spread_for_map_parallelism(docs, id_col)
     grams = _word_ngrams_all(F.coalesce(F.col(text_col), F.lit("")), k)
     sh = docs.select(F.col(id_col), F.posexplode(grams).alias("_pos", "_g"))
-    key = F.xxhash64("_g") if hash_shingles else F.col("_g")
-    sh = sh.select(F.col(id_col), F.col("_pos"), key.alias("_k"))
+    sh = sh.select(F.col(id_col), F.col("_pos"), F.col("_g").alias("_k"))
     firsts = sh.groupBy("_k").agg(
         F.min(
             F.struct(F.col(id_col).alias("d"), F.col("_pos").alias("p"))

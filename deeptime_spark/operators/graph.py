@@ -45,6 +45,12 @@ from deeptime_spark import dispatch
 from deeptime_spark.local_relation import local_df as _local_df
 from pyspark.sql import DataFrame, functions as F
 
+# Node count up to which the iterative operators broadcast their O(|V|)
+# frames into every join; above it the edge relation is persisted
+# hash-partitioned at ``defaultParallelism`` width and the O(|V|) frames
+# shuffle (see :func:`pagerank`).
+BROADCAST_MAX_NODES = 1_000_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -53,8 +59,6 @@ def pagerank(
     weight_col: str | None = None,
     damping: float = 0.85,
     n_iter: int = 20,
-    partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
     personalization: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank by power iteration over an edge DataFrame.
@@ -75,15 +79,14 @@ def pagerank(
     the dangling mass is redistributed by the same vector. Ranks still
     sum to 1 each iteration.
 
-    When ``|V| <= broadcast_threshold`` the per-iteration rank and
+    When ``|V| <= BROADCAST_MAX_NODES`` the per-iteration rank and
     contribution frames are broadcast into their joins: a
     ``localCheckpoint``ed frame carries no size statistics, so Catalyst
     would otherwise plan full shuffle joins for O(|V|)-row relations
     that fit in one broadcast. Above the threshold (the true web-scale
     regime, where |V| itself is distributed-sized) the shuffle path is
     kept: ``trans`` stays cache-partitioned on ``src`` so only the
-    O(|V|) ranks frame moves. Set ``broadcast_threshold=0`` to force
-    the shuffle path.
+    O(|V|) ranks frame moves.
 
     Returns (node, rank) — unnormalized by |V| so scores are the
     stationary probabilities themselves.
@@ -117,7 +120,7 @@ def pagerank(
         .persist()
     )
     n = nodes.count()  # also materializes the persisted node set + agg
-    small = n <= broadcast_threshold
+    small = n <= BROADCAST_MAX_NODES
     if small:
         # O(|V|) frames are broadcast-sized by definition here; keeping
         # them at shuffle-partition width makes every per-iteration
@@ -146,10 +149,7 @@ def pagerank(
         # shuffle regime: pin the O(|E|) side hash-partitioned on src so
         # every iteration's join reuses the cached layout and only the
         # O(|V|) ranks frame moves
-        n_part = partitions or spark.sparkContext.defaultParallelism
-        trans = trans.repartition(n_part, "src")
-    elif partitions:
-        trans = trans.repartition(partitions, "src")
+        trans = trans.repartition(spark.sparkContext.defaultParallelism, "src")
     else:
         # small regime: a ≤|V|²-row relation in ONE partition. Beyond the
         # task-count saving, SinglePartition satisfies the per-iteration
@@ -243,8 +243,6 @@ def hits(
     dst: str = "dst",
     weight_col: str | None = None,
     n_iter: int = 20,
-    partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg, JACM'99) by power iteration.
 
@@ -254,7 +252,7 @@ def hits(
     unlike max-normalization whose argmax can tie). Duplicate edges are
     multiplicity; the aggregated edge relation is persisted once and,
     as in :func:`pagerank`, the O(|V|) score frames broadcast below
-    ``broadcast_threshold`` and shuffle above it.
+    ``BROADCAST_MAX_NODES`` and shuffle above it.
 
     Returns (node, hub, authority) over the full node set (nodes with
     no out-edges have hub 0; no in-edges, authority 0).
@@ -279,7 +277,7 @@ def hits(
         .persist()
     )
     n = nodes.count()
-    small = n <= broadcast_threshold
+    small = n <= BROADCAST_MAX_NODES
     if small:
         # single-partition O(|V|) frames: per-half-step checkpoints cost
         # one task, and SinglePartition satisfies BOTH alternating
@@ -290,10 +288,7 @@ def hits(
         nodes = compact
     ew_raw = ew
     if not small:
-        n_part = partitions or spark.sparkContext.defaultParallelism
-        ew = ew.repartition(n_part, "src")
-    elif partitions:
-        ew = ew.repartition(partitions, "src")
+        ew = ew.repartition(spark.sparkContext.defaultParallelism, "src")
     else:
         ew = ew.coalesce(1)
     ew = ew.persist()
@@ -701,7 +696,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 5,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan,
     Albert & Kumara, "Near linear time algorithm to detect community
@@ -746,8 +740,7 @@ def label_propagation(
             ),
             "node long, label long",
         )
-    n_part = partitions or spark.sparkContext.defaultParallelism
-    und2 = und.repartition(n_part, "a").persist()
+    und2 = und.repartition(spark.sparkContext.defaultParallelism, "a").persist()
     und2.count()
     und.unpersist(blocking=False)
     und = und2
@@ -783,8 +776,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """The k-core of an undirected graph: the maximal subgraph in which
     every node has degree >= k (Seidman, "Network structure and minimum
@@ -801,7 +792,7 @@ def k_core(
     per round is the minimum.
 
     Scale regime (same switch as :func:`pagerank`): when the initial
-    node count is <= ``broadcast_threshold`` the survivor set is
+    node count is <= ``BROADCAST_MAX_NODES`` the survivor set is
     broadcast into BOTH semi-joins — a localCheckpointed frame carries
     no size statistics, so Catalyst would otherwise shuffle the full
     O(|E|) edge relation every peel round (and degeneracy-order peeling
@@ -855,10 +846,9 @@ def k_core(
         .localCheckpoint(eager=True)
     )
     n_alive = alive.count()
-    small = n_alive <= broadcast_threshold
-    if not small or partitions:
-        n_part = partitions or spark.sparkContext.defaultParallelism
-        und = base.repartition(n_part, "a").persist()
+    small = n_alive <= BROADCAST_MAX_NODES
+    if not small:
+        und = base.repartition(spark.sparkContext.defaultParallelism, "a").persist()
         und.count()
         base.unpersist(blocking=False)
 
@@ -911,8 +901,6 @@ def bfs_distances(
     dst: str = "dst",
     max_depth: int = 20,
     directed: bool = False,
-    partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Multi-source BFS hop distances — the traversal primitive under
     k-hop neighborhoods, crawl-frontier expansion, and "distance from
@@ -930,7 +918,7 @@ def bfs_distances(
     convergence failure — the loop exits early when a frontier empties).
 
     Scale regime (the :func:`pagerank` / :func:`k_core` switch): below
-    ``broadcast_threshold`` nodes, the O(frontier) and O(reached)
+    ``BROADCAST_MAX_NODES`` nodes, the O(frontier) and O(reached)
     frames ride broadcast joins against the edge scan — one job per
     round, the O(|E|) side never shuffles; above it, the edge relation
     is persisted hash-partitioned on the source endpoint so every
@@ -977,11 +965,9 @@ def bfs_distances(
         )
     nodes = und.select(F.col("u").alias("node")).distinct()
     n = nodes.count()
-    small = n <= broadcast_threshold
+    small = n <= BROADCAST_MAX_NODES
     if not small:
-        und2 = und.repartition(
-            partitions or und.sparkSession.sparkContext.defaultParallelism, "u"
-        ).persist()
+        und2 = und.repartition(spark.sparkContext.defaultParallelism, "u").persist()
         und2.count()
         und.unpersist(blocking=False)
         und = und2
@@ -1021,12 +1007,11 @@ def _edge_relation_and_nodes(
     src: str,
     dst: str,
     directed: bool,
-    broadcast_threshold: int,
 ):
     """Shared pivot-centrality setup: self-loop-free, optionally
     symmetrized, DISTINCT edge relation (u, v) plus the node frame,
     both persisted (caller unpersists), with the small/shuffle regime
-    flag; above the threshold the relation is re-persisted
+    flag; above ``BROADCAST_MAX_NODES`` the relation is re-persisted
     hash-partitioned on u (the :func:`pagerank` regime switch).
     Returns (rel, nodes, n, small)."""
     spark = edges.sparkSession
@@ -1043,7 +1028,7 @@ def _edge_relation_and_nodes(
         .persist()
     )
     n = nodes.count()
-    small = n <= broadcast_threshold
+    small = n <= BROADCAST_MAX_NODES
     if not small:
         rel2 = rel.repartition(
             spark.sparkContext.defaultParallelism, "u"
@@ -1077,7 +1062,6 @@ def betweenness_centrality(
     n_pivots: int = 8,
     directed: bool = False,
     max_depth: int = 32,
-    broadcast_threshold: int = 1_000_000,
     scale: bool = True,
 ) -> DataFrame:
     """Pivot-sampled betweenness centrality — Brandes' dependency
@@ -1101,7 +1085,7 @@ def betweenness_centrality(
     sweep replays the levels deepest-first: one join of level d against
     the (broadcast) level-d+1 dependency frame per depth, again all
     pivots at once. Per-level frames are localCheckpointed (lineage
-    truncation); below ``broadcast_threshold`` nodes the O(k·|V|)
+    truncation); below ``BROADCAST_MAX_NODES`` nodes the O(k·|V|)
     frontier/dependency frames broadcast against the cached edge scan,
     above it the edge relation is persisted hash-partitioned on the
     source endpoint (the :func:`pagerank` regime switch).
@@ -1115,9 +1099,7 @@ def betweenness_centrality(
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     spark = edges.sparkSession
-    rel, nodes, n, small = _edge_relation_and_nodes(
-        edges, src, dst, directed, broadcast_threshold
-    )
+    rel, nodes, n, small = _edge_relation_and_nodes(edges, src, dst, directed)
     if n == 0:  # no edges survive the self-loop filter
         rel.unpersist(blocking=False)
         nodes.unpersist(blocking=False)
@@ -1237,7 +1219,6 @@ def harmonic_centrality(
     n_pivots: int = 8,
     directed: bool = False,
     max_depth: int = 32,
-    broadcast_threshold: int = 1_000_000,
     scale: bool = True,
 ) -> DataFrame:
     """Pivot-sampled harmonic centrality ``hc(v) = Σ_s 1/d(s,v)`` —
@@ -1263,9 +1244,7 @@ def harmonic_centrality(
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     spark = edges.sparkSession
-    rel, nodes, n, small = _edge_relation_and_nodes(
-        edges, src, dst, directed, broadcast_threshold
-    )
+    rel, nodes, n, small = _edge_relation_and_nodes(edges, src, dst, directed)
     if n == 0:  # no edges survive the self-loop filter
         rel.unpersist(blocking=False)
         nodes.unpersist(blocking=False)

@@ -140,7 +140,6 @@ def compute_moments(
     d_y: Optional[int] = None,
     compute_xx: bool = True,
     compute_yy: bool = True,
-    force_arrow: bool = False,
 ) -> MomentsResult:
     """One Spark job -> MomentsResult. Strategy chosen by feature dim.
 
@@ -151,7 +150,7 @@ def compute_moments(
         d = feature_dim(df, x_col)
     if d_y is None:
         d_y = feature_dim(df, y_col) if y_col else d
-    if not force_arrow and max(d, d_y) <= EXPR_MAX_DIM:
+    if max(d, d_y) <= EXPR_MAX_DIM:
         return _moments_expr(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy)
     return _moments_arrow(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy)
 

@@ -10,7 +10,7 @@ re-running the same batch against the same snapshot reproduces the same
 table bit-for-bit.
 
 Spark shape: one equi-join of the open rows against the update batch
-(broadcast when the batch is small — the daily-delta norm), column
+(the batch broadcast — the daily-delta norm), column
 comparison as a codegen expression, and a union of four disjoint row
 sets (untouched / still-current-unchanged / closed / opened). No window
 functions, no per-row Python; change detection is null-safe equality
@@ -32,7 +32,6 @@ def scd2_merge(
     valid_from: str = "valid_from",
     valid_to: str = "valid_to",
     check_unique_keys: bool = True,
-    broadcast_updates: bool = True,
 ) -> DataFrame:
     """Apply one update batch to an SCD2 dimension snapshot.
 
@@ -45,10 +44,8 @@ def scd2_merge(
     out and breaking the idempotency contract. ``effective_ts`` stamps
     both the close and the open.
 
-    ``broadcast_updates=True`` (default) plan-pins the update batch as
-    the broadcast side — correct for the daily-delta norm. For a batch
-    too large to broadcast (backfills, initial loads) pass ``False``
-    and let AQE pick the join strategy; semantics are identical.
+    The update batch is plan-pinned as the broadcast side — correct for
+    the daily-delta norm.
 
     Semantics (Kimball type 2):
 
@@ -86,9 +83,7 @@ def scd2_merge(
     ts = F.lit(effective_ts)
     closed_hist = dim.where(F.col(valid_to).isNotNull())
     open_rows = dim.where(F.col(valid_to).isNull())
-    u = updates.select([F.col(c).alias(f"_u_{c}") for c in attr_cols])
-    if broadcast_updates:
-        u = F.broadcast(u)
+    u = F.broadcast(updates.select([F.col(c).alias(f"_u_{c}") for c in attr_cols]))
     j = open_rows.join(u, open_rows[key] == F.col(f"_u_{key}"), "left")
     diff = F.lit(False)
     for c in tracked:

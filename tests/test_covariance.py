@@ -6,7 +6,7 @@ import pytest
 
 from deeptime_spark.covariance import Covariance, KoopmanWeightingEstimator
 from deeptime_spark.data import trajectory_from_arrays
-from deeptime_spark.operators.moments import compute_moments
+from deeptime_spark.operators.moments import _moments_arrow, _moments_expr, feature_dim
 
 
 @pytest.fixture(scope="module")
@@ -85,8 +85,9 @@ def test_partial_fit_merges_like_single_pass(spark, data):
 
 
 def test_arrow_path_matches_expr_path(spark, df):
-    m_expr = compute_moments(df, y_col=None, force_arrow=False)
-    m_arrow = compute_moments(df, y_col=None, force_arrow=True)
+    d = feature_dim(df, "x")
+    m_expr = _moments_expr(df, "x", None, None, d, d, True, True)
+    m_arrow = _moments_arrow(df, "x", None, None, d, d, True, True)
     assert abs(m_expr.weight_sum - m_arrow.weight_sum) < 1e-9
     np.testing.assert_allclose(m_expr.sx, m_arrow.sx, rtol=1e-10)
     np.testing.assert_allclose(m_expr.mxx, m_arrow.mxx, rtol=1e-10)

@@ -20,6 +20,7 @@ from deeptime_spark import dispatch
 from deeptime_spark.clustering import kmeans
 from deeptime_spark.decomposition import deep
 from deeptime_spark.hmm import hmm_model, mlhmm, random_guess
+from deeptime_spark.markov.tram import TRAM
 from deeptime_spark.operators import dedup
 from deeptime_spark.operators import graph as G
 from test_partition_invariance import SF, normalize
@@ -92,6 +93,24 @@ def _hmm_fit(df):
             m.output_model.output_probabilities.tolist(), m.likelihoods.tolist()]
 
 
+def _tram_samples(spark, empty):
+    rng = np.random.default_rng(5)
+    rows = []
+    for k in range(0 if empty else 2):
+        states = rng.integers(0, 3, size=400)
+        rows += [(k, k, t, int(s), [0.0, 0.4 * int(s) + 0.1 * float(rng.normal())])
+                 for t, s in enumerate(states)]
+    return spark.createDataFrame(
+        rows, "therm_state int, traj_id long, t long, state int, bias array<double>"
+    ).repartition(3)
+
+
+def _tram_fit(df):
+    m = TRAM(lagtime=1, maxiter=30).fit(df).fetch_model()
+    return [m.biased_conf_energies.tolist(), m.markov_state_energies.tolist(),
+            m.therm_state_energies.tolist(), m.transition_matrices.tolist()]
+
+
 # a fixed initial model: an empty input reaches the EM itself
 HMM0 = random_guess(n_observation_states=3, n_hidden_states=2, seed=11)
 KMEANS = dict(n_clusters=4, seed=3, max_iter=10, order_col="id", sample_size=91)
@@ -144,6 +163,7 @@ CASES = {
         "hmm", hmm_model, "_decode_groups", _dtrajs,
         lambda df: _rows(HMM0.state_probabilities_df(df)), [],
     ),
+    "tram_bias": ("tram_bias", TRAM, "_collect_bias", _tram_samples, _tram_fit, ValueError),
     "union_find": (
         "union_find", dedup, "_union_find_local", _edges,
         lambda e: _rows(dedup.connected_components(e, "src", "dst")), [],

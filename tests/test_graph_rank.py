@@ -388,17 +388,72 @@ def test_k_core_raises_on_max_iter_exhaustion(spark):
     assert k_core(df, 2, max_iter=20).count() == 0
 
 
-def test_k_core_shuffle_regime_matches_broadcast(spark, rng):
-    from deeptime_spark.operators.graph import k_core
+def _flat(rows):
+    """(node, v1, v2, ...) rows -> {(node, i): v_i}, for pytest.approx."""
+    return {(r[0], i): v for r in rows for i, v in enumerate(r[1:])}
 
+
+# every operator with a broadcast/shuffle regime switch, with its dense
+# replica where this module has one
+REGIME_SWITCHED = {
+    "pagerank": (
+        lambda G, e: G.pagerank(e, n_iter=10),
+        lambda edges: {(v, 0): r for v, r in _dense_pagerank(edges, n_iter=10).items()},
+    ),
+    "hits": (
+        lambda G, e: G.hits(e, n_iter=10),
+        lambda edges: _flat((v, h, a) for v, (h, a) in _dense_hits(edges, n_iter=10).items()),
+    ),
+    "k_core": (
+        lambda G, e: G.k_core(e, 3),
+        lambda edges: {(v, 0): d for v, d in _brute_kcore(edges, 3).items()},
+    ),
+    "bfs_distances": (lambda G, e: G.bfs_distances(e, sources=[0], max_depth=6), None),
+    "betweenness_centrality": (lambda G, e: G.betweenness_centrality(e, n_pivots=4), None),
+    "harmonic_centrality": (lambda G, e: G.harmonic_centrality(e, n_pivots=4), None),
+}
+
+
+@pytest.fixture(scope="module")
+def regime_edges(rng):
+    # drawn once: the session rng feeds later modules' inputs too
     edges = [(int(rng.integers(0, 25)), int(rng.integers(0, 25))) for _ in range(120)]
+    return [(s, d) for s, d in edges if s != d]
+
+
+@pytest.mark.parametrize("name", sorted(REGIME_SWITCHED))
+def test_shuffle_regime_matches_broadcast(spark, regime_edges, monkeypatch, name):
+    """Distributed path, both sides of ``BROADCAST_MAX_NODES``: the
+    broadcast regime (no repartition) and the shuffle regime (the edge
+    relation repartitioned) agree with each other and with the replica."""
+    from deeptime_spark import dispatch
+    from deeptime_spark.operators import graph as G
+
+    run, replica = REGIME_SWITCHED[name]
+    edges = regime_edges
     df = spark.createDataFrame(edges, "src long, dst long")
-    small = {r["node"]: r["degree"] for r in k_core(df, 3).collect()}
-    large = {
-        r["node"]: r["degree"]
-        for r in k_core(df, 3, broadcast_threshold=0, partitions=4).collect()
-    }
-    assert small == large == _brute_kcore(edges, 3)
+    kernels = [k for k in vars(G) if k.startswith("_driver_")]
+    assert kernels
+    for kernel in kernels:
+        monkeypatch.setattr(G, kernel, lambda *a, _k=kernel: pytest.fail(f"{_k} ran"))
+    repartitions = []
+    real_repartition = type(df).repartition
+
+    def spy(self, *args, **kwargs):
+        repartitions.append(args)
+        return real_repartition(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "repartition", spy)
+    with dispatch.force("distributed"):
+        broadcast = _flat(run(G, df).collect())
+        assert repartitions == []
+        monkeypatch.setattr(G, "BROADCAST_MAX_NODES", 0)
+        shuffle = _flat(run(G, df).collect())
+        assert repartitions
+    assert broadcast
+    assert shuffle == pytest.approx(broadcast, abs=1e-12)
+    if replica is not None:
+        assert broadcast == pytest.approx(replica(edges), abs=1e-12)
 
 
 def test_triangle_counts_low_id_hub(spark):

@@ -65,18 +65,27 @@ def test_jaccard_verification(spark, neardup_docs):
 
 
 def test_jaccard_verification_materialized_restriction(spark, neardup_docs):
-    """candidates_materialized=True (gram computation semi-joined down to
-    candidate-touched docs) must return the exact same verified pairs."""
+    """Grams computed only for candidate-touched docs (semi-join, lazy
+    persist) give every pair the Jaccard the per-pair ``ngram_jaccard``
+    computes from the raw texts, and keep exactly the pairs over the
+    threshold."""
+    from pyspark.sql import functions as F
+
     cands = dedup.minhash_lsh_candidates(neardup_docs, n_hashes=64, bands=16).persist()
     try:
-        base = dedup.verify_candidates_jaccard(cands, neardup_docs, threshold=0.5)
-        fast = dedup.verify_candidates_jaccard(
-            cands, neardup_docs, threshold=0.5, candidates_materialized=True
+        texts = neardup_docs.select("doc_id", "text")
+        per_pair = (
+            cands.join(texts.toDF("id_a", "ta"), "id_a")
+            .join(texts.toDF("id_b", "tb"), "id_b")
+            .select("id_a", "id_b", dedup.ngram_jaccard(F.col("ta"), F.col("tb")).alias("j"))
+            .collect()
         )
-        key = lambda r: (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-        assert sorted(map(key, base.collect())) == sorted(map(key, fast.collect()))
+        want = sorted((r["id_a"], r["id_b"], r["j"]) for r in per_pair if r["j"] >= 0.5)
+        got = dedup.verify_candidates_jaccard(cands, neardup_docs, threshold=0.5)
+        assert want
+        assert sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in got.collect()) == want
     finally:
-        cands.unpersist()
+        spark.catalog.clearCache()
 
 
 def test_simhash_near_duplicates(spark, neardup_docs):
@@ -455,44 +464,6 @@ def test_connected_components_long_chain_converges_fast(spark):
         got = connected_components(df, max_iter=12).collect()
     assert len(got) == 201
     assert all(r["component"] == 0 for r in got)
-
-
-def test_connected_components_star_mode_equivalence(spark):
-    """mode="star" (Kiveris large-star/small-star) must be bit-identical
-    to the default label-propagation mode on mixed graph shapes."""
-    from deeptime_spark.operators.dedup import connected_components
-
-    edges = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (20, 21),
-             (5, 6), (6, 5), (30, 31), (31, 32), (32, 30), (7, 7)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(4)
-    with dispatch.force("distributed"):
-        lab = {r["node"]: r["component"]
-               for r in connected_components(df).collect()}
-        star = {r["node"]: r["component"]
-                for r in connected_components(df, mode="star").collect()}
-    assert star == lab
-    # local fast path is identical regardless of mode
-    loc = {r["node"]: r["component"]
-           for r in connected_components(df, mode="star").collect()}
-    assert loc == star
-
-
-def test_connected_components_star_long_path_log_rounds(spark):
-    """A 300-node path (diameter 300) must converge in O(log d)
-    alternations — 12 is far above log2(300) ~ 8.2 but far below the
-    O(d) a naive propagation would need."""
-    import pytest
-
-    from deeptime_spark.operators.dedup import connected_components
-
-    edges = [(i, i + 1) for i in range(300)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long").repartition(8)
-    with dispatch.force("distributed"):
-        got = connected_components(df, max_iter=12, mode="star").collect()
-    assert len(got) == 301
-    assert all(r["component"] == 0 for r in got)
-    with pytest.raises(ValueError):
-        connected_components(df, mode="frobnicate")
 
 
 def test_gopher_quality_rules(spark):
@@ -888,13 +859,6 @@ def test_dedup_token_spans_first_occurrence_wins(spark):
     assert out[2]["n_dup_spans"] == 2 and out[2]["n_spans"] == 2
     assert out[3]["n_dup_spans"] == 1
     assert out[3]["dup_span_frac"] == 1.0
-
-
-def test_dedup_token_spans_hashed_matches_exact(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = dedup.dedup_token_spans(docs, span_tokens=10).orderBy("doc_id").collect()
-    hashed = dedup.dedup_token_spans(docs, span_tokens=10, hash_spans=True).orderBy("doc_id").collect()
-    assert [tuple(r) for r in exact] == [tuple(r) for r in hashed]
 
 
 def test_drop_duplicate_lines_across_docs(spark):
@@ -1609,12 +1573,6 @@ def test_duplicated_substring_spans_bruteforce(spark, rng):
             for r in duplicated_substring_spans(df, k=k).collect()
         )
         assert got == _brute_dup_substring_spans(docs, k), k
-    # hash-keyed variant must agree (collision-free at this size)
-    got_h = sorted(
-        tuple(r)
-        for r in duplicated_substring_spans(df, k=5, hash_shingles=True).collect()
-    )
-    assert got_h == _brute_dup_substring_spans(docs, 5)
 
 
 def test_duplicated_substring_spans_edges(spark):
@@ -1651,12 +1609,6 @@ def test_drop_duplicated_substrings_keeps_first(spark):
     assert got[3] == ("p q r s t", 5, 0)
     assert got[4] == ("", 0, 0)
     assert got[5] == ("", 0, 5)
-    # hash-keyed variant identical
-    got_h = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in drop_duplicated_substrings(df, k=3, hash_shingles=True).collect()
-    }
-    assert got_h == got
 
 
 def test_cluster_term_lift_known_corpus(spark):
