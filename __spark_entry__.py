@@ -1016,7 +1016,7 @@ def _q_sensitivity_events(spark, sf_dir):
 
 @query
 def _q_msm_its_events(spark, sf_dir):
-    """Implied-timescales curve: concurrent per-lag counting jobs ->
+    """Implied-timescales curve: one counting pass over all lags ->
     driver eigenvalues (validation.py)."""
     from deeptime_spark.validation import implied_timescales_from_dtrajs
 

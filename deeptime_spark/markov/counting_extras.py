@@ -19,6 +19,7 @@ from typing import Optional
 
 import numpy as np
 from deeptime_spark.local_relation import local_df as _local_df
+from deeptime_spark.markov.transition_counting import lagged_pairs
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -56,15 +57,11 @@ def girsanov_reweighted_counts_df(
     weights (reference api.py:217-299): each sliding window contributes
     the PRODUCT of its per-step weights — accumulated as a window sum of
     log-weights (one pass), then exp, then a weighted groupBy."""
-    w = Window.partitionBy(traj_col).orderBy(time_col)
-    # log-weight running sum over the lag window: sum_{k=0..tau-1} ln w_{t+k}
-    logw = F.log(F.col(weight_col))
-    win_sum = F.sum(logw).over(w.rowsBetween(0, lagtime - 1))
-    pairs = (
-        df.withColumn("s_to", F.lead(state_col, lagtime).over(w))
-        .withColumn("_pw", F.exp(win_sum))
-        .where(F.col("s_to").isNotNull() & (F.col(state_col) >= 0) & (F.col("s_to") >= 0))
-    )
+    w = Window.partitionBy(traj_col).orderBy(time_col).rowsBetween(0, lagtime - 1)
+    # log-weight running sum over the lag window: sum_{k=0..tau-1} ln w_{t+k},
+    # taken before lagged_pairs drops the invalid rows
+    weighted = df.withColumn("_pw", F.exp(F.sum(F.log(F.col(weight_col))).over(w)))
+    pairs = lagged_pairs(weighted, lagtime, state_col, by=(traj_col,), time_col=time_col)
     return pairs.groupBy(F.col(state_col).alias("s_from"), F.col("s_to")).agg(
         F.sum("_pw").alias("n")
     )
@@ -107,11 +104,8 @@ def bootstrap_counts(
     lut = _local_df(df.sparkSession, 
         [(block_ids[i], int(m)) for i, m in enumerate(mult) if m > 0], ["block_id", "_mult"]
     )
-    w = Window.partitionBy("block_id").orderBy("t")
-    pairs = (
-        blocked.join(F.broadcast(lut), "block_id")
-        .withColumn("s_to", F.lead(state_col, lagtime).over(w))
-        .where(F.col("s_to").isNotNull() & (F.col(state_col) >= 0) & (F.col("s_to") >= 0))
+    pairs = lagged_pairs(
+        blocked.join(F.broadcast(lut), "block_id"), lagtime, state_col, by=("block_id",)
     )
     rows = pairs.groupBy(F.col(state_col).alias("s_from"), F.col("s_to")).agg(
         F.sum("_mult").alias("n")

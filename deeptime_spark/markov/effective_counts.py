@@ -20,9 +20,11 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from deeptime_spark.markov.transition_counting import count_models, lagged_pairs
 
 
 def statistical_inefficiency(X, truncate_acf: bool = True, mact: float = 1.0) -> float:
@@ -59,23 +61,15 @@ def statistical_inefficiency(X, truncate_acf: bool = True, mact: float = 1.0) ->
     return 1.0 / (2.0 * corrtime)
 
 
-def _conditional_pairs_df(df: DataFrame, lag: int, state_col: str = "state") -> DataFrame:
-    """(s_from, traj_id, t, s_to): the time-ordered conditional target
-    sequences, one lead-window pass."""
-    w = Window.partitionBy("traj_id").orderBy("t")
-    return (
-        df.withColumn("s_to", F.lead(state_col, lag).over(w))
-        .where(F.col("s_to").isNotNull() & (F.col(state_col) >= 0) & (F.col("s_to") >= 0))
-        .select(F.col(state_col).alias("s_from"), "traj_id", "t", "s_to")
-    )
-
-
 def statistical_inefficiencies_df(
     df: DataFrame, lag: int, truncate_acf: bool = True, mact: float = 2.0, state_col: str = "state"
 ) -> DataFrame:
     """(s_from, s_to, ineff) for every observed transition: grouped-map per
-    starting state running the reference indicator-series numerics."""
-    pairs = _conditional_pairs_df(df, lag, state_col)
+    starting state running the reference indicator-series numerics over the
+    time-ordered conditional target sequences ``(s_from, traj_id, t, s_to)``."""
+    pairs = lagged_pairs(df, lag, state_col).select(
+        F.col(state_col).alias("s_from"), "traj_id", "t", "s_to"
+    )
     schema = StructType(
         [
             StructField("s_from", IntegerType()),
@@ -117,24 +111,13 @@ def effective_count_matrix(
     inefficiencies, with 'row' (recommended) / 'all' / 'none' averaging."""
     if average not in ("row", "all", "none"):
         raise ValueError(f"unknown average mode {average!r}")
-    from deeptime_spark.markov.transition_counting import transition_counts_df
-
-    counts = {
-        (r["s_from"], r["s_to"]): r["n"]
-        for r in transition_counts_df(df, lag, "sliding", state_col=state_col).collect()
-    }
-    ineffs = {
-        (r["s_from"], r["s_to"]): r["ineff"]
-        for r in statistical_inefficiencies_df(
-            df, lag, truncate_acf=truncate_acf, mact=mact, state_col=state_col
-        ).collect()
-    }
-    n = n_states or (max(max(i, j) for i, j in counts) + 1)
-    C = np.zeros((n, n))
-    I = np.zeros((n, n))
-    for (i, j), c in counts.items():
-        C[i, j] = c
-        I[i, j] = ineffs.get((i, j), 1.0)
+    C = count_models(df, [lag], n_states=n_states, state_col=state_col)[0].count_matrix
+    # every observed transition has an inefficiency: both come from lagged_pairs
+    I = np.zeros_like(C)
+    for r in statistical_inefficiencies_df(
+        df, lag, truncate_acf=truncate_acf, mact=mact, state_col=state_col
+    ).collect():
+        I[r["s_from"], r["s_to"]] = r["ineff"]
     if average == "none":
         return I * C
     if average == "all":

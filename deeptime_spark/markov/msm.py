@@ -253,6 +253,9 @@ class MaximumLikelihoodMSM(Estimator):
         return self.fit_from_counts(counts)
 
     def fit_from_counts(self, counts: TransitionCountModel) -> "MaximumLikelihoodMSM":
+        """MLE on the largest connected submodel of ``counts``; raises
+        ValueError naming the lagtime when that submodel has no counts
+        (``TransitionCountModel.submodel_largest``)."""
         sub = counts.submodel_largest(directed=True)
         C = np.asarray(_densify(sub.count_matrix), dtype=np.float64)
         constraint = self.stationary_distribution_constraint

@@ -153,7 +153,7 @@ class OOMReweightedMSM(Estimator):
 
     def fit(self, df: DataFrame) -> "OOMReweightedMSM":
         tau = self.lagtime
-        rows = transition_counts_df(df, tau, "sliding", state_col=self.state_col).collect()
+        rows = transition_counts_df(df, tau, state_col=self.state_col).collect()
         n = max(max(r["s_from"], r["s_to"]) for r in rows) + 1
         Ct = np.zeros((n, n))
         for r in rows:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator, Model
+from deeptime_spark.markov.transition_counting import lagged_pairs
 
 
 def _logsumexp(a: np.ndarray, axis=None) -> np.ndarray:
@@ -132,11 +133,9 @@ def restrict_connected(df: DataFrame, lagtime: int = 1, state_col: str = "state"
     if connectivity not in ("summed_count_matrix", "post_hoc_RE", "BAR_variance"):
         raise ValueError(f"unknown connectivity {connectivity!r}")
 
-    w = Window.partitionBy(therm_col, "traj_id").orderBy("t")
     pair_rows = (
-        df.withColumn("_s_to", F.lead(state_col, lagtime).over(w))
-        .where(F.col("_s_to").isNotNull() & (F.col(state_col) >= 0) & (F.col("_s_to") >= 0))
-        .groupBy(F.col(therm_col).alias("k"), F.col(state_col).alias("i"), F.col("_s_to").alias("j"))
+        lagged_pairs(df, lagtime, state_col, by=(therm_col, "traj_id"))
+        .groupBy(F.col(therm_col).alias("k"), F.col(state_col).alias("i"), F.col("s_to").alias("j"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
@@ -306,11 +305,9 @@ class TRAM(Estimator):
 
     def _collect_counts(self, df: DataFrame):
         sc, tc = self.state_col, self.therm_col
-        w = Window.partitionBy(tc, "traj_id").orderBy("t")
         pairs = (
-            df.withColumn("_s_to", F.lead(sc, self.lagtime).over(w))
-            .where(F.col("_s_to").isNotNull() & (F.col(sc) >= 0) & (F.col("_s_to") >= 0))
-            .groupBy(F.col(tc).alias("k"), F.col(sc).alias("i"), F.col("_s_to").alias("j"))
+            lagged_pairs(df, self.lagtime, sc, by=(tc, "traj_id"))
+            .groupBy(F.col(tc).alias("k"), F.col(sc).alias("i"), F.col("s_to").alias("j"))
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
@@ -320,6 +317,8 @@ class TRAM(Estimator):
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
+        if not scounts:
+            raise ValueError("TRAM found no sample with state >= 0 to count")
         K = max(r["k"] for r in scounts) + 1
         N = max(r["i"] for r in scounts) + 1
         C = np.zeros((K, N, N))
@@ -437,6 +436,8 @@ class TRAM(Estimator):
     # --------------------------------------------------------------- fit
 
     def fit(self, df: DataFrame) -> "TRAM":
+        """Fit on (therm_state, traj_id, t, state, bias) samples. Raises
+        ValueError when no sample has state >= 0 (empty or unassigned input)."""
         C, state_counts = self._collect_counts(df)
         K, N = state_counts.shape
         if dispatch.on_driver("tram_bias", int(state_counts.sum())):

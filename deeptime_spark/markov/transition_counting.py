@@ -12,11 +12,15 @@ cardinality is n_states^2 — tiny — so the reduce side is trivially
 broadcast-collectable; AQE handles the skew that hot states produce on the
 map side. The collected COO becomes a driver-side dense/sparse matrix at the
 natural distributed/local IR boundary (SURVEY.md §3.2).
+
+``lagged_pairs`` is the one builder of lagged state pairs; each Markov
+counter applies its own aggregate to it. ``count_models`` counts many lags
+in one pass keyed by ``(lag, s_from, s_to)`` (the ITS / CK models).
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -102,8 +106,18 @@ class TransitionCountModel(Model):
         )
 
     def submodel_largest(self, directed: bool = True) -> "TransitionCountModel":
-        """Largest connected submodel (reference :364-405)."""
-        return self.submodel(self.connected_sets(directed=directed)[0])
+        """Largest connected submodel (reference :364-405). Raises ValueError
+        naming the lagtime when it has no states (empty or all-negative
+        dtraj) or no counts (no transition at this lag, e.g. trajectories
+        shorter than the lag): every MSM fit starts here."""
+        sets = self.connected_sets(directed=directed)
+        sub = self.submodel(sets[0]) if sets else None
+        if sub is None or sub.total_count == 0:
+            raise ValueError(
+                f"no transition counts at lagtime {self.lagtime}: the largest "
+                "connected set of the count matrix is empty or has no counts"
+            )
+        return sub
 
     def states_to_symbols(self, states: np.ndarray) -> np.ndarray:
         return self.state_symbols[np.asarray(states)]
@@ -113,34 +127,31 @@ class TransitionCountModel(Model):
         return np.array([lookup[s] for s in symbols if s in lookup], dtype=int)
 
 
-def transition_counts_df(
+def lagged_pairs(
     df: DataFrame,
     lagtime: int,
-    count_mode: str = "sliding",
     state_col: str = "state",
-    traj_col: str = "traj_id",
+    by: Sequence[str] = ("traj_id",),
     time_col: str = "t",
 ) -> DataFrame:
-    """Distributed transition-count DataFrame ``(s_from, s_to, n)``.
-
-    The Spark-side stage of TransitionCountEstimator.fit (which collects
-    this and builds the dense driver matrix): ``lead(state, tau)`` per
-    trajectory then ``groupBy(s_from, s_to)`` — one shuffle, n_states^2
-    keys. Exposed separately so huge state spaces can keep counts
-    distributed and so the harness can verify the counting query itself.
-    """
-    tau = lagtime
-    w = Window.partitionBy(traj_col).orderBy(time_col)
-    pairs = df.withColumn("s_to", F.lead(state_col, tau).over(w)).where(F.col("s_to").isNotNull())
-    if count_mode == "sample":
-        pairs = pairs.where(F.col(time_col) % tau == 0)
-    pairs = pairs.where((F.col(state_col) >= 0) & (F.col("s_to") >= 0))
-    counted = pairs.groupBy(F.col(state_col).alias("s_from"), F.col("s_to")).agg(
-        F.count(F.lit(1)).alias("n")
+    """The input rows plus ``s_to = lead(state, lagtime)`` over
+    ``partitionBy(*by).orderBy(time_col)``, keeping only valid pairs: the
+    partner exists and both states are >= 0. The lead runs before the
+    filter, so unassigned (-1) frames still occupy their time slots."""
+    w = Window.partitionBy(*by).orderBy(time_col)
+    return df.withColumn("s_to", F.lead(state_col, lagtime).over(w)).where(
+        (F.col(state_col) >= 0) & (F.col("s_to") >= 0)
     )
-    if count_mode == "sliding-effective":
-        counted = counted.withColumn("n", F.col("n") / tau)
-    return counted
+
+
+def transition_counts_df(df: DataFrame, lagtime: int, state_col: str = "state") -> DataFrame:
+    """Distributed sliding transition-count DataFrame ``(s_from, s_to, n)``:
+    ``lagged_pairs`` then ``groupBy(s_from, s_to)`` — one shuffle, n_states^2
+    keys. Exposed so huge state spaces can keep counts distributed and so
+    the harness can verify the counting query itself."""
+    return lagged_pairs(df, lagtime, state_col).groupBy(
+        F.col(state_col).alias("s_from"), F.col("s_to")
+    ).agg(F.count(F.lit(1)).alias("n"))
 
 
 def two_step_counts_df(
@@ -167,31 +178,88 @@ def two_step_counts_df(
     )
 
 
+COUNT_MODES = ("sliding", "sliding-effective", "sample")
+
+
+def _lag_counts_df(
+    df: DataFrame, lagtimes: Sequence[int], count_mode: str, state_col: str
+) -> DataFrame:
+    """``(lag, s_from, s_to, n)`` for every lag from one window (one lead
+    per lag) and one groupBy. Frames whose partner at a lag is invalid
+    (trajectory tail, negative state, off-stride in 'sample' mode) count
+    under ``s_to = NULL``, so each lag's rows also sum to the state
+    histogram and no second scan is needed for it."""
+    sc = state_col
+    w = Window.partitionBy("traj_id").orderBy("t")
+
+    def partner(tau: int):
+        lead = F.col(f"_lead{tau}")
+        valid = lead >= 0
+        if count_mode == "sample":
+            valid = valid & (F.col("t") % tau == 0)
+        return F.struct(F.lit(tau).alias("lag"), F.when(valid, lead).alias("s_to"))
+
+    return (
+        df.select(sc, "t", *[F.lead(sc, tau).over(w).alias(f"_lead{tau}") for tau in lagtimes])
+        .where(F.col(sc) >= 0)  # after the leads: -1 frames still occupy time slots
+        .select(F.col(sc).alias("s_from"), F.inline(F.array(*map(partner, lagtimes))))
+        .groupBy("lag", "s_from", "s_to")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def count_models(
+    df: DataFrame,
+    lagtimes: Sequence[int],
+    count_mode: str = "sliding",
+    n_states: Optional[int] = None,
+    state_col: str = "state",
+) -> list[TransitionCountModel]:
+    """One ``TransitionCountModel`` per lagtime, all counted in ONE Spark
+    pass (``_lag_counts_df``, one collect) over a dtraj frame
+    ``(traj_id, t, state)``. Negative states (unassigned, reference :148)
+    are excluded; count_mode is one of ``COUNT_MODES``."""
+    if count_mode not in COUNT_MODES:
+        raise ValueError(f"count_models supports {COUNT_MODES}, got {count_mode!r}")
+    lags = list(dict.fromkeys(lagtimes))
+    rows = _lag_counts_df(df, lags, count_mode, state_col).collect() if lags else []
+    n = n_states or max((r["s_from"] for r in rows), default=-1) + 1
+    hist = np.zeros(n, dtype=np.int64)
+    C = {tau: np.zeros((n, n), dtype=np.float64) for tau in lags}
+    for r in rows:
+        if r["lag"] == lags[0]:
+            hist[r["s_from"]] += r["n"]
+        if r["s_to"] is not None:
+            scale = 1.0 / r["lag"] if count_mode == "sliding-effective" else 1.0
+            C[r["lag"]][r["s_from"], r["s_to"]] = r["n"] * scale
+    return [
+        TransitionCountModel(C[tau], counting_mode=count_mode, lagtime=tau, state_histogram=hist)
+        for tau in lagtimes
+    ]
+
+
 class TransitionCountEstimator(Estimator):
     """ctor mirrors the reference (:423-460): lagtime, count_mode in
-    {'sliding', 'sliding-effective', 'sample'}, n_states override, sparse.
+    {'sliding', 'sliding-effective', 'sample', 'effective'}, n_states
+    override (counts are dense).
 
     ``fit(df)`` expects the dtraj schema (traj_id, t, state). Negative
     states (unassigned, reference :148) are excluded from counting.
     """
-
-    SPARSE_OCCUPANCY_THRESHOLD = 1.0 / 3.0
 
     def __init__(
         self,
         lagtime: int,
         count_mode: str = "sliding",
         n_states: Optional[int] = None,
-        sparse: Optional[bool] = None,
         state_col: str = "state",
     ):
         super().__init__()
-        if count_mode not in ("sliding", "sliding-effective", "sample", "effective"):
+        if count_mode not in COUNT_MODES + ("effective",):
             raise ValueError(f"unsupported count_mode {count_mode!r}")
         self.lagtime = lagtime
         self.count_mode = count_mode
         self.n_states = n_states
-        self.sparse = sparse
         self.state_col = state_col
 
     def fit(self, df: DataFrame) -> "TransitionCountEstimator":
@@ -210,43 +278,5 @@ class TransitionCountEstimator(Estimator):
                 C, counting_mode="effective", lagtime=tau, state_histogram=hist
             )
             return self
-        # ONE Spark job for transitions AND the state histogram: frames
-        # whose lagged partner is invalid (trajectory tail, negative
-        # state, off-stride in 'sample' mode) aggregate under s_to=NULL —
-        # they contribute to the histogram only. Saves the second full
-        # scan the reference pays via a separate count_states pass.
-        w = Window.partitionBy("traj_id").orderBy("t")
-        valid = F.col("_lead").isNotNull() & (F.col("_lead") >= 0)
-        if self.count_mode == "sample":
-            valid = valid & (F.col("t") % tau == 0)
-        fused = (
-            df.withColumn("_lead", F.lead(sc, tau).over(w))  # lead BEFORE the
-            .where(F.col(sc) >= 0)  # negative-state filter: -1 frames still occupy time slots
-            .withColumn("_s_to", F.when(valid, F.col("_lead")))
-            .groupBy(F.col(sc).alias("s_from"), F.col("_s_to").alias("s_to"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        scale = 1.0 / tau if self.count_mode == "sliding-effective" else 1.0
-        counted = [r for r in fused if r["s_to"] is not None]
-        hist_n = max((r["s_from"] for r in fused), default=-1) + 1
-        hist = np.zeros(hist_n, dtype=np.int64)
-        for r in fused:
-            hist[r["s_from"]] += r["n"]
-        n = self.n_states or max(
-            len(hist), (max((max(r["s_from"], r["s_to"]) for r in counted), default=-1) + 1)
-        )
-        rows = np.array([r["s_from"] for r in counted], dtype=int)
-        cols = np.array([r["s_to"] for r in counted], dtype=int)
-        vals = np.array([r["n"] for r in counted], dtype=np.float64) * scale
-        C = np.zeros((n, n), dtype=np.float64)
-        np.add.at(C, (rows, cols), vals)
-        if len(hist) < n:
-            hist = np.pad(hist, (0, n - len(hist)))
-        self._model = TransitionCountModel(
-            C,
-            counting_mode=self.count_mode,
-            lagtime=tau,
-            state_histogram=hist,
-        )
+        self._model = count_models(df, [tau], self.count_mode, self.n_states, sc)[0]
         return self

@@ -313,7 +313,7 @@ def oracle_effective_counts() -> str:
     n = C.shape[0]
     I = np.ones((n, n))
     # conditional target sequences: for each s_from, the time-ordered s_to
-    # sequence per trajectory (mirrors _conditional_pairs_df + the grouped
+    # sequence per trajectory (mirrors statistical_inefficiencies_df's grouped
     # per_state kernel: trajs iterated in sorted order, the j-list is the
     # UNIQUE TARGETS OF THE WHOLE s_from GROUP, and every traj contributes
     # an indicator series for every such j — all-zero series included)

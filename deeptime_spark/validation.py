@@ -6,15 +6,14 @@ Reference: ``implied_timescales``/``ImpliedTimescales``
 (markov/_observables.py:9-88).
 
 These are the meta-entry points that multiply queries (SURVEY.md §3.3):
-each lagtime is an independent Spark counting job; the fan-out runs through
-a thread pool over the shared SparkSession so jobs overlap, and all
-comparison math is driver-side on the small models.
+every lagtime is counted in one Spark pass keyed by (lag, s_from, s_to)
+(``transition_counting.count_models``), and all comparison math is
+driver-side on the small models.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-from typing import Callable, Optional, Sequence
+from typing import Optional, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -90,38 +89,26 @@ def implied_timescales(models, n_its: Optional[int] = None) -> ImpliedTimescales
     return ImpliedTimescales(lagtimes, its, its_stats)
 
 
-def fit_msms_at_lags(
-    df: DataFrame,
-    lagtimes: Sequence[int],
-    estimator_factory: Optional[Callable[[int], object]] = None,
-    n_jobs: int = 4,
-    state_col: str = "state",
-) -> list:
-    """Fit one MSM per lagtime — the driver-loop fan-out behind ITS/CK
-    curves. Each fit is an independent Spark counting job; jobs are
-    submitted concurrently through a thread pool over the shared session
-    (the Spark-native replacement for the reference's multiprocessing
-    pool, SURVEY.md §3.3)."""
+def fit_msms_at_lags(df: DataFrame, lagtimes: Sequence[int], state_col: str = "state") -> list:
+    """One reversible MLE MSM per lagtime — the models behind ITS/CK curves.
+    All lags are counted in ONE Spark pass (``count_models``); only the
+    per-lag MLE runs on the driver. Raises ValueError naming the lag when a
+    lag has no transition counts."""
     from deeptime_spark.markov.msm import MaximumLikelihoodMSM
+    from deeptime_spark.markov.transition_counting import count_models
 
-    if estimator_factory is None:
-        def estimator_factory(tau):
-            return MaximumLikelihoodMSM(reversible=True, lagtime=tau, state_col=state_col)
-
-    def fit_one(tau: int):
-        return estimator_factory(tau).fit(df, lagtime=tau).fetch_model()
-
-    with ThreadPoolExecutor(max_workers=min(n_jobs, len(lagtimes))) as pool:
-        return list(pool.map(fit_one, lagtimes))
+    return [
+        MaximumLikelihoodMSM(reversible=True).fit_from_counts(c).fetch_model()
+        for c in count_models(df, lagtimes, state_col=state_col)
+    ]
 
 
 def implied_timescales_from_dtrajs(
-    df: DataFrame, lagtimes: Sequence[int], n_its: Optional[int] = None, n_jobs: int = 4,
-    state_col: str = "state",
+    df: DataFrame, lagtimes: Sequence[int], n_its: Optional[int] = None, state_col: str = "state"
 ) -> ImpliedTimescales:
-    """ITS curve straight from a dtraj DataFrame: per-lag counting jobs ->
-    driver spectral math."""
-    return implied_timescales(fit_msms_at_lags(df, lagtimes, n_jobs=n_jobs, state_col=state_col), n_its=n_its)
+    """ITS curve straight from a dtraj DataFrame: one counting pass over
+    all lags -> driver spectral math."""
+    return implied_timescales(fit_msms_at_lags(df, lagtimes, state_col=state_col), n_its=n_its)
 
 
 class MembershipsObservable:

@@ -10,6 +10,6 @@ def spark():
     yield s
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture
 def rng():
     return np.random.default_rng(42)

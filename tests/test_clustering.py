@@ -11,8 +11,9 @@ from deeptime_spark.markov import MaximumLikelihoodMSM
 
 
 @pytest.fixture(scope="module")
-def blobs(rng):
+def blobs():
     # 3 well-separated gaussian blobs
+    rng = np.random.default_rng(42)
     centers = np.array([[0.0, 0.0], [10.0, 0.0], [0.0, 10.0]])
     X = np.concatenate([rng.normal(size=(400, 2)) * 0.5 + c for c in centers])
     rng.shuffle(X)

@@ -10,7 +10,8 @@ from deeptime_spark.operators.moments import _moments_arrow, _moments_expr, feat
 
 
 @pytest.fixture(scope="module")
-def data(rng):
+def data():
+    rng = np.random.default_rng(42)
     return [rng.normal(size=(500, 4)) @ np.diag([1.0, 2.0, 0.5, 3.0]), rng.normal(size=(300, 4))]
 
 

@@ -415,8 +415,8 @@ REGIME_SWITCHED = {
 
 
 @pytest.fixture(scope="module")
-def regime_edges(rng):
-    # drawn once: the session rng feeds later modules' inputs too
+def regime_edges():
+    rng = np.random.default_rng(42)
     edges = [(int(rng.integers(0, 25)), int(rng.integers(0, 25))) for _ in range(120)]
     return [(s, d) for s, d in edges if s != d]
 

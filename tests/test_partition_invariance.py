@@ -40,6 +40,13 @@ SWEEP = [
     "shard_manifest",
     "web_host_stats",
     "doc_sql_surface",
+    # the Markov counting queries: integer counts or fits that are
+    # bit-exact functions of them
+    "event_transition_counts",
+    "effective_counts_events",
+    "msm_its_events",
+    "msm_ck_events",
+    "tram_events",
 ]
 
 

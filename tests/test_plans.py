@@ -77,6 +77,12 @@ def test_transition_counts_bounded_shuffles(spark):
     # aggregation — lagtime must not add passes
     plan = plan_of(entrymod._q_event_transition_counts(spark, SF))
     assert n_exchanges(plan) <= 2, plan
+    # counting many lags in one pass adds no exchange over counting one
+    from deeptime_spark.markov.transition_counting import _lag_counts_df
+
+    traj = entrymod._event_traj(spark, SF).select("traj_id", "t", "state")
+    one, three = (plan_of(_lag_counts_df(traj, lags, "sliding", "state")) for lags in ([1], [1, 2, 3]))
+    assert n_exchanges(three) == n_exchanges(one), three
 
 
 def test_cluster_transform_map_only(spark):
