@@ -2609,10 +2609,10 @@ def _q_vamp_cv_events(spark, sf_dir):
     blocks of 10 frames split 50/50 per fold by
     pmod(xxhash64(block_id, seed+fold), 2) — content-addressed, so the
     split is independent of partitioning AND replayable through the
-    spark_hashes XXH64 replica; folds run as concurrent Spark jobs. Per
-    fold one train covariance fit + one held-out covariance scoring.
-    Oracle rebuilds blocks and fold masks from the DuckDB trajectory and
-    replays the identical fit+score (oracle_ref.py:oracle_vamp_cv)."""
+    spark_hashes XXH64 replica. All folds run as one grouped pass (one
+    moments aggregate keyed by fold and split). Oracle rebuilds blocks and
+    fold masks from the DuckDB trajectory and replays the identical
+    fit+score (oracle_ref.py:oracle_vamp_cv)."""
     from deeptime_spark.decomposition.vamp import vamp_score_cv
 
     traj = _event_traj(spark, sf_dir)

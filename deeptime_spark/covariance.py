@@ -87,6 +87,7 @@ class Covariance(Estimator):
     stride. ``fit(df)`` expects the trajectory schema; a ``weight`` column
     is used when ``weight_col`` is given (lazy Koopman weights are just a
     projection column computed in the same select — see KoopmanWeighting).
+    ``fit`` raises ``ValueError`` when no (lagged) frame is left to aggregate.
     """
 
     def __init__(
@@ -148,7 +149,9 @@ class Covariance(Estimator):
             d_y=d if y_col else None,
             compute_xx=self.compute_c00,
             compute_yy=self.compute_ctt or self.reversible,
-        )
+        ).get(())
+        if m is None:
+            raise ValueError(f"no frame to aggregate at lagtime {self.lagtime}, stride {self.stride}")
         self._moments = m if self._moments is None else self._moments.combine(m)
         self._model = None
         return self
@@ -161,23 +164,27 @@ class Covariance(Estimator):
         if self._model is None:
             if self._moments is None:
                 raise RuntimeError("call fit() first")
-            c00, c0t, ctt, mean_x, mean_y = self._moments.covariances(
-                remove_mean=self.remove_data_mean,
-                bessels_correction=self.bessels_correction,
-                symmetrize=self.reversible,
-            )
-            self._model = CovarianceModel(
-                cov_00=c00 if self.compute_c00 else None,
-                cov_0t=c0t if self.compute_c0t else None,
-                cov_tt=ctt if self.compute_ctt else None,
-                mean_0=mean_x,
-                mean_t=mean_y,
-                bessels_correction=self.bessels_correction,
-                symmetrized=self.reversible,
-                lagtime=self.lagtime,
-                weight_sum=self._moments.weight_sum,
-            )
+            self._model = self.model_from_moments(self._moments)
         return self._model
+
+    def model_from_moments(self, moments: MomentsResult) -> CovarianceModel:
+        """Driver finalize of one moments set under this estimator's settings."""
+        c00, c0t, ctt, mean_x, mean_y = moments.covariances(
+            remove_mean=self.remove_data_mean,
+            bessels_correction=self.bessels_correction,
+            symmetrize=self.reversible,
+        )
+        return CovarianceModel(
+            cov_00=c00 if self.compute_c00 else None,
+            cov_0t=c0t if self.compute_c0t else None,
+            cov_tt=ctt if self.compute_ctt else None,
+            mean_0=mean_x,
+            mean_t=mean_y,
+            bessels_correction=self.bessels_correction,
+            symmetrized=self.reversible,
+            lagtime=self.lagtime,
+            weight_sum=moments.weight_sum,
+        )
 
 
 def covar(df: DataFrame, remove_mean: bool = True, bessels_correction: bool = True,

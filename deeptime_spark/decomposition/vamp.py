@@ -42,17 +42,18 @@ class VAMP(EstimatorTransformer):
         self.epsilon = epsilon
         self.x_col = x_col
 
-    def fit(self, df: DataFrame) -> "VAMP":
-        cov = Covariance(
+    def covariance_estimator(self) -> Covariance:
+        """The estimator of the mean-free C00, C0t and Ctt a fit decomposes."""
+        return Covariance(
             lagtime=self.lagtime,
             compute_c00=True,
             compute_c0t=True,
             compute_ctt=True,
-            remove_data_mean=True,
-            reversible=False,
             x_col=self.x_col,
-        ).fit_fetch(df)
-        self._model = self.fit_from_covariances(cov)
+        )
+
+    def fit(self, df: DataFrame) -> "VAMP":
+        self._model = self.fit_from_covariances(self.covariance_estimator().fit_fetch(df))
         return self
 
     def fit_from_covariances(self, cov: CovarianceModel) -> CovarianceKoopmanModel:
@@ -156,48 +157,49 @@ def vamp_score_cv(
     dim: Optional[int] = None,
     epsilon: float = 1e-6,
     random_state: int = 42,
-    n_jobs: int = 4,
     x_col: str = "x",
 ) -> np.ndarray:
     """Cross-validated VAMP score (reference _score.py:226-319,
     McGibbon & Pande 2015): per fold, trajectory blocks of ``blocksize``
-    (default lagtime) are randomly split 50/50 into train/validation;
+    (default ``max(10 * lagtime, lagtime + 1)``) are split 50/50 into train
+    and validation by ``pmod(xxhash64(block_id, fold + random_state), 2)``;
     the model fits on train blocks and is scored against validation
-    covariances. Folds run as concurrent Spark jobs through a thread pool
-    (the Spark replacement for the reference's multiprocessing pool).
+    covariances. All folds run as one grouped pass: one lag over the blocks,
+    the folds exploded after it, one ``compute_moments(by=("fold", "split"))``;
+    fits and scores are driver-side. Cost: the explode sends n x the lagged
+    rows through map-side partial aggregation; the shuffle stays at 2n rows
+    per partition. Raises ``ValueError`` for ``n < 1`` and, naming the fold,
+    when a fold's train or test split has no lagged pair.
 
     Deviation: blocks are non-overlapping and lagged pairs never cross
     block boundaries (the reference's sliding blocks overlap by one lag
     window to conserve counts) — a small-bias, shuffle-free formulation.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    from deeptime_spark.operators.lag import blocksplit, timeshifted
+    from deeptime_spark.operators.moments import compute_moments, feature_dim
 
-    from deeptime_spark.covariance import Covariance
-    from deeptime_spark.operators.lag import blocksplit
-
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     bs = blocksize or max(10 * lagtime, lagtime + 1)
-    blocked = blocksplit(df, blocksize=bs, traj_col="traj_id")
-    # treat (traj) blocks as pseudo-trajectories so lagging respects block
-    # boundaries; block_id is already globally unique
-    blocked = blocked.withColumn("_bhash", F.xxhash64("block_id")).persist()
-    try:
-        blocked.count()
-
-        def one_fold(fold: int) -> float:
-            is_test = F.pmod(F.xxhash64(F.col("block_id"), F.lit(random_state + fold)), F.lit(2)) == 0
-            train = blocked.where(~is_test).withColumnRenamed("block_id", "_tid")
-            test = blocked.where(is_test).withColumnRenamed("block_id", "_tid")
-            train_t = train.drop("traj_id").withColumnRenamed("_tid", "traj_id")
-            test_t = test.drop("traj_id").withColumnRenamed("_tid", "traj_id")
-            model = VAMP(lagtime=lagtime, dim=dim, epsilon=epsilon, x_col=x_col).fit(train_t).fetch_model()
-            cov_test = Covariance(
-                lagtime=lagtime, compute_c00=True, compute_c0t=True, compute_ctt=True,
-                remove_data_mean=True, x_col=x_col,
-            ).fit_fetch(test_t)
-            return vamp_score(model, r=r, covariances_test=cov_test, dim=dim)
-
-        with ThreadPoolExecutor(max_workers=min(n_jobs, n)) as pool:
-            scores = list(pool.map(one_fold, range(n)))
-    finally:
-        blocked.unpersist()
+    vamp = VAMP(lagtime=lagtime, dim=dim, epsilon=epsilon, x_col=x_col)
+    cov = vamp.covariance_estimator()
+    d = feature_dim(df, x_col)
+    y_col = x_col + "_lagged"
+    pairs = timeshifted(blocksplit(df, blocksize=bs), lagtime, cols=(x_col,), traj_col="block_id")
+    folds = pairs.select(
+        "block_id", x_col, y_col, F.explode(F.array(*[F.lit(i) for i in range(n)])).alias("fold")
+    ).withColumn(
+        # integer fold + seed: the spark_hashes replica hashes it as IntegerType
+        "split", F.pmod(F.xxhash64("block_id", F.col("fold") + F.lit(random_state)), F.lit(2))
+    )
+    moments = compute_moments(folds, x_col=x_col, y_col=y_col, d=d, d_y=d, by=("fold", "split"))
+    scores = []
+    for fold in range(n):
+        train, test = moments.get((fold, 1)), moments.get((fold, 0))
+        if train is None or test is None:
+            side = "train" if train is None else "test"
+            raise ValueError(f"vamp_score_cv fold {fold}: the {side} split has no lagged pair")
+        model = vamp.fit_from_covariances(cov.model_from_moments(train))
+        cov_test = cov.model_from_moments(test)
+        scores.append(vamp_score(model, r=r, covariances_test=cov_test, dim=dim))
     return np.array(scores)

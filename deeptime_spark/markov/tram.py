@@ -127,6 +127,7 @@ def restrict_connected(df: DataFrame, lagtime: int = 1, state_col: str = "state"
       energies, capped at ``max_samples_per_state`` per (i, k) block),
       plus intra-ensemble transition edges; largest UNDIRECTED component
       kept. States outside the set are marked -1 (TRAM drops them).
+    Raises ``ValueError`` when no valid transition exists at ``lagtime``.
     """
     from deeptime_spark.numeric.graph import connected_components
 
@@ -139,6 +140,8 @@ def restrict_connected(df: DataFrame, lagtime: int = 1, state_col: str = "state"
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
+    if not pair_rows:
+        raise ValueError(f"restrict_connected found no valid transition at lagtime {lagtime}")
     n = max(max(r["i"], r["j"]) for r in pair_rows) + 1
 
     if connectivity == "summed_count_matrix":

@@ -17,11 +17,17 @@ Spark realization — two physical strategies behind one logical op:
 2. **Arrow path** (large d): ``mapInPandas`` accumulates the per-partition
    outer-product partials in numpy (BLAS ``X.T @ X`` per batch — same
    algebra the reference's C++ uses), yielding one flattened row per
-   partition; the driver sums the ~num_partitions partial rows. Raw-moment
+   partition and key; the driver sums the ~num_partitions partial rows
+   of each key. Raw-moment
    sums commute, so merge order is irrelevant (the Chan mean-free form is
    only needed for streaming mean-removed accumulation; at fp64 with
    tree-style partial sums raw moments are numerically adequate, matching
    the reference's own fp64 policy in _moments.py:1-13).
+
+Grouped form: ``by`` columns key the aggregate (``groupBy(*by)`` on the
+expression path, one accumulator per key and partition on the Arrow path),
+so many independent moment sets — e.g. every cross-validation fold's train
+and test split — come from one pass. ``by=()`` is the global aggregate.
 
 Both strategies return identical ``MomentsResult`` sufficient statistics;
 mean removal, Bessel correction (_running_moments.py:69-83) and
@@ -32,7 +38,7 @@ finalizers.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -140,8 +146,11 @@ def compute_moments(
     d_y: Optional[int] = None,
     compute_xx: bool = True,
     compute_yy: bool = True,
-) -> MomentsResult:
-    """One Spark job -> MomentsResult. Strategy chosen by feature dim.
+    by: Sequence[str] = (),
+) -> dict[tuple, MomentsResult]:
+    """One Spark aggregate -> ``{key: MomentsResult}`` per value of the ``by``
+    columns (``by=()``: the global aggregate, key ``()``); keys with no rows
+    are absent, so an empty input gives ``{}``. Strategy chosen by feature dim.
 
     ``d_y`` allows a rectangular cross moment (x and y of different widths,
     e.g. SINDy's Theta'Xdot); it defaults to ``d``.
@@ -150,13 +159,13 @@ def compute_moments(
         d = feature_dim(df, x_col)
     if d_y is None:
         d_y = feature_dim(df, y_col) if y_col else d
-    if max(d, d_y) <= EXPR_MAX_DIM:
-        return _moments_expr(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy)
-    return _moments_arrow(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy)
+    path = _moments_expr if max(d, d_y) <= EXPR_MAX_DIM else _moments_arrow
+    return path(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy, tuple(by))
 
 
-def _moments_expr(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy) -> MomentsResult:
-    """Codegen path: one global agg of sum-of-product expressions."""
+def _moments_expr(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy, by=()):
+    """Codegen path: one ``groupBy(*by)`` aggregate of sum-of-product
+    expressions (``groupBy()`` is the plan ``df.agg`` runs)."""
     x = [F.col(x_col)[i] for i in range(d)]
     y = [F.col(y_col)[i] for i in range(d_y)] if y_col else None
     w = F.col(weight_col) if weight_col else F.lit(1.0)
@@ -176,112 +185,89 @@ def _moments_expr(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy) 
             aggs += [
                 F.sum(w * y[i] * y[j]).alias(f"myy_{i}_{j}") for i in range(d_y) for j in range(i, d_y)
             ]
-    row = df.agg(*aggs).first().asDict()
 
-    def sym(prefix, n):
-        m = np.zeros((n, n))
-        for i in range(n):
-            for j in range(i, n):
-                m[i, j] = m[j, i] = row[f"{prefix}_{i}_{j}"]
-        return m
+    def sym(row, prefix, n):
+        return np.array([[row[f"{prefix}_{min(i, j)}_{max(i, j)}"] for j in range(n)]
+                         for i in range(n)])
 
-    sx = np.array([row[f"sx_{i}"] for i in range(d)])
-    res = MomentsResult(
-        weight_sum=float(row["w"]),
-        sx=sx,
-        mxx=sym("mxx", d) if compute_xx else np.zeros((d, d)),
-    )
-    if y is not None:
-        res.sy = np.array([row[f"sy_{i}"] for i in range(d_y)])
-        mxy = np.zeros((d, d_y))
-        for i in range(d):
-            for j in range(d_y):
-                mxy[i, j] = row[f"mxy_{i}_{j}"]
-        res.mxy = mxy
-        res.myy = sym("myy", d_y) if compute_yy else None
-    return res
+    out = {}
+    for row in df.groupBy(*by).agg(*aggs).collect():
+        if row["w"] is None:  # the global aggregate of no rows
+            continue
+        res = MomentsResult(
+            weight_sum=float(row["w"]),
+            sx=np.array([row[f"sx_{i}"] for i in range(d)]),
+            mxx=sym(row, "mxx", d) if compute_xx else np.zeros((d, d)),
+        )
+        if y is not None:
+            res.sy = np.array([row[f"sy_{i}"] for i in range(d_y)])
+            res.mxy = np.array([[row[f"mxy_{i}_{j}"] for j in range(d_y)] for i in range(d)])
+            res.myy = sym(row, "myy", d_y) if compute_yy else None
+        out[tuple(row[k] for k in by)] = res
+    return out
 
 
-def _moments_arrow(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy) -> MomentsResult:
+def _moments_arrow(df, x_col, y_col, weight_col, d, d_y, compute_xx, compute_yy, by=()):
     """Arrow path: per-partition BLAS partials, driver-side merge.
 
-    Emits ONE row per partition (a few thousand rows even on a 1000-executor
-    cluster), each O(d^2) — the classic treeAggregate shape.
+    Emits ONE row per (partition, key) — a few thousand rows even on a
+    1000-executor cluster, each O(d^2) — the classic treeAggregate shape.
     """
     has_y = y_col is not None
-    cols = [x_col] + ([y_col] if has_y else []) + ([weight_col] if weight_col else [])
+    by = list(by)
+    cols = by + [x_col] + ([y_col] if has_y else []) + ([weight_col] if weight_col else [])
     narrow = df.select(*cols)
-
+    shapes = {"sx": (d,), "sy": (d_y,), "mxx": (d, d), "mxy": (d, d_y), "myy": (d_y, d_y)}
     out_schema = StructType(
-        [
-            StructField("w", DoubleType()),
-            StructField("sx", ArrayType(DoubleType())),
-            StructField("sy", ArrayType(DoubleType())),
-            StructField("mxx", ArrayType(DoubleType())),
-            StructField("mxy", ArrayType(DoubleType())),
-            StructField("myy", ArrayType(DoubleType())),
-        ]
+        [narrow.schema[k] for k in by]
+        + [StructField("w", DoubleType())]
+        + [StructField(a, ArrayType(DoubleType())) for a in shapes]
     )
+
+    def partial(pdf) -> MomentsResult:
+        X = np.stack(pdf[x_col].to_numpy())
+        wv = pdf[weight_col].to_numpy() if weight_col else None
+        Xw = X if wv is None else X * wv[:, None]
+        m = MomentsResult(
+            weight_sum=float(len(X) if wv is None else wv.sum()),
+            sx=Xw.sum(axis=0),
+            mxx=Xw.T @ X if compute_xx else np.zeros((d, d)),
+        )
+        if has_y:
+            Y = np.stack(pdf[y_col].to_numpy())
+            Yw = Y if wv is None else Y * wv[:, None]
+            m.sy = Yw.sum(axis=0)
+            m.mxy = Xw.T @ Y
+            m.myy = Yw.T @ Y if compute_yy else None
+        return m
+
+    def flat(a):
+        return None if a is None else a.ravel().tolist()
 
     def acc(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        w_sum = 0.0
-        sx = np.zeros(d)
-        sy = np.zeros(d_y)
-        mxx = np.zeros((d, d))
-        mxy = np.zeros((d, d_y))
-        myy = np.zeros((d_y, d_y))
-        seen = False
+        parts: dict = {}  # one accumulator per key in this partition
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            seen = True
-            X = np.stack(pdf[x_col].to_numpy())
-            wv = pdf[weight_col].to_numpy() if weight_col else None
-            if wv is None:
-                w_sum += len(X)
-                Xw = X
-            else:
-                w_sum += float(wv.sum())
-                Xw = X * wv[:, None]
-            sx += Xw.sum(axis=0)
-            if compute_xx:
-                mxx += Xw.T @ X
-            if has_y:
-                Y = np.stack(pdf[y_col].to_numpy())
-                Yw = Y if wv is None else Y * wv[:, None]
-                sy += Yw.sum(axis=0)
-                mxy += Xw.T @ Y
-                if compute_yy:
-                    myy += Yw.T @ Y
-        if seen:
+            groups = pdf.groupby(by, sort=False, dropna=False) if by else [((), pdf)]
+            for key, g in groups:
+                if len(g) == 0:
+                    continue
+                m = partial(g)
+                parts[key] = parts[key].combine(m) if key in parts else m
+        if parts:
             yield pd.DataFrame(
-                {
-                    "w": [w_sum],
-                    "sx": [sx.tolist()],
-                    "sy": [sy.tolist()],
-                    "mxx": [mxx.ravel().tolist()],
-                    "mxy": [mxy.ravel().tolist()],
-                    "myy": [myy.ravel().tolist()],
-                }
+                [
+                    [*key, m.weight_sum] + [flat(getattr(m, a)) for a in shapes]
+                    for key, m in parts.items()
+                ],
+                columns=out_schema.fieldNames(),
             )
 
-    partials = narrow.mapInPandas(acc, schema=out_schema).collect()
-    if not partials:
-        raise ValueError("empty DataFrame")
-    res = MomentsResult(weight_sum=0.0, sx=np.zeros(d), mxx=np.zeros((d, d)))
-    if has_y:
-        res.sy = np.zeros(d_y)
-        res.mxy = np.zeros((d, d_y))
-        res.myy = np.zeros((d_y, d_y)) if compute_yy else None
-    for p in partials:
-        res.weight_sum += p["w"]
-        res.sx += np.array(p["sx"])
-        res.mxx += np.array(p["mxx"]).reshape(d, d)
-        if has_y:
-            res.sy += np.array(p["sy"])
-            res.mxy += np.array(p["mxy"]).reshape(d, d_y)
-            if compute_yy:
-                res.myy += np.array(p["myy"]).reshape(d_y, d_y)
-    return res
+    out: dict = {}
+    for p in narrow.mapInPandas(acc, schema=out_schema).collect():
+        arrays = {a: None if p[a] is None else np.reshape(p[a], s) for a, s in shapes.items()}
+        m = MomentsResult(weight_sum=p["w"], **arrays)
+        key = tuple(p[k] for k in by)
+        out[key] = out[key].combine(m) if key in out else m
+    return out

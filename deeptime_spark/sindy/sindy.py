@@ -235,7 +235,9 @@ class SINDy(Estimator):
             d_y=d,
             compute_xx=True,
             compute_yy=False,
-        )
+        ).get(())
+        if m is None:
+            raise ValueError("SINDy found no frame to fit")
         Xi = self.optimizer.solve(m.mxx, m.mxy)
         self._model = SINDyModel(Xi, lib, lib.get_feature_names_out(), x_col=self.x_col)
         return self

@@ -3,10 +3,17 @@ mirroring the reference's own test tolerances: SURVEY.md §5)."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from deeptime_spark.covariance import Covariance, KoopmanWeightingEstimator
 from deeptime_spark.data import trajectory_from_arrays
-from deeptime_spark.operators.moments import _moments_arrow, _moments_expr, feature_dim
+from deeptime_spark.operators.moments import (
+    EXPR_MAX_DIM,
+    _moments_arrow,
+    _moments_expr,
+    compute_moments,
+    feature_dim,
+)
 
 
 @pytest.fixture(scope="module")
@@ -87,11 +94,51 @@ def test_partial_fit_merges_like_single_pass(spark, data):
 
 def test_arrow_path_matches_expr_path(spark, df):
     d = feature_dim(df, "x")
-    m_expr = _moments_expr(df, "x", None, None, d, d, True, True)
-    m_arrow = _moments_arrow(df, "x", None, None, d, d, True, True)
+    m_expr = _moments_expr(df, "x", None, None, d, d, True, True)[()]
+    m_arrow = _moments_arrow(df, "x", None, None, d, d, True, True)[()]
     assert abs(m_expr.weight_sum - m_arrow.weight_sum) < 1e-9
     np.testing.assert_allclose(m_expr.sx, m_arrow.sx, rtol=1e-10)
     np.testing.assert_allclose(m_expr.mxx, m_arrow.mxx, rtol=1e-10)
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "weighted"])
+@pytest.mark.parametrize("d", [4, 30], ids=["expr", "arrow"])
+def test_grouped_moments_equal_filtered_moments(spark, d, weighted):
+    """compute_moments(by=("g",))[k] is the aggregate of the rows with g == k,
+    on both physical paths; keys without rows are absent."""
+    rng = np.random.default_rng(5)
+    n = 600
+    X = rng.normal(size=(n, d)) + 1.0
+    Y = rng.normal(size=(n, d)) + 1.0
+    w = rng.random(n) + 0.1
+    g = rng.integers(0, 3, size=n)
+    gdf = spark.createDataFrame(
+        [(int(g[i]), X[i].tolist(), Y[i].tolist(), float(w[i])) for i in range(n)],
+        "g int, x array<double>, y array<double>, weight double",
+    ).repartition(3)
+    wcol = "weight" if weighted else None
+    assert (d > EXPR_MAX_DIM) == (d == 30)
+    grouped = compute_moments(gdf, "x", "y", wcol, by=("g",))
+    assert set(grouped) == {(0,), (1,), (2,)}
+    for (k,), m in grouped.items():
+        ref = compute_moments(gdf.where(F.col("g") == k), "x", "y", wcol)
+        assert set(ref) == {()}
+        ref = ref[()]
+        if weighted:
+            np.testing.assert_allclose(m.weight_sum, ref.weight_sum, rtol=1e-12)
+        else:
+            assert m.weight_sum == ref.weight_sum == np.sum(g == k)
+        for a in ("sx", "mxx", "sy", "mxy", "myy"):
+            np.testing.assert_allclose(getattr(m, a), getattr(ref, a), rtol=1e-12)
+    assert set(compute_moments(gdf.where(F.col("g") != 1), "x", "y", wcol, by=("g",))) == {(0,), (2,)}
+    assert compute_moments(gdf.limit(0), "x", "y", wcol, d=d, d_y=d, by=("g",)) == {}
+    assert compute_moments(gdf.limit(0), "x", "y", wcol, d=d, d_y=d) == {}
+
+
+def test_lagged_covariance_without_lagged_pair_raises_value_error(spark):
+    short = trajectory_from_arrays(spark, [np.arange(6.0).reshape(3, 2)])
+    with pytest.raises(ValueError, match="no frame to aggregate at lagtime 5"):
+        Covariance(lagtime=5, compute_c0t=True).fit(short)
 
 
 def test_koopman_weighting_uniform_on_equilibrium_data(spark, rng):

@@ -1,6 +1,11 @@
 """TICA/VAMP/DMD vs closed-form oracles (linear Koopman system fixture,
 mirroring /root/reference/tests/decomposition/test_vamp.py:64-89)."""
 
+import os
+import re
+import subprocess
+import uuid
+
 import numpy as np
 import pytest
 
@@ -151,3 +156,53 @@ def test_vamp_score_cv_folds(spark, rng):
     assert np.all(np.isfinite(scores))
     # bounded by the maximal VAMP2 score for rank-2 + constant
     assert np.all(scores > 1.0) and np.all(scores <= 3.0 + 1e-6)
+
+
+def test_vamp_score_cv_jobs_land_in_the_callers_group_and_do_not_grow_with_folds(spark):
+    from deeptime_spark.decomposition.vamp import vamp_score_cv
+
+    rs = np.random.default_rng(3)
+    df = trajectory_from_arrays(spark, [rs.normal(size=(200, 2)) for _ in range(3)])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = []
+    try:
+        for n in (2, 6):
+            ungrouped = set(tracker.getJobIdsForGroup(None))
+            group = f"vamp-cv-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "vamp_score_cv")
+            assert vamp_score_cv(df, lagtime=1, n=n, blocksize=20).shape == (n,)
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
+            assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[0] > 0
+    assert jobs[0] == jobs[1], jobs
+
+
+def test_vamp_score_cv_with_an_empty_split_names_the_fold(spark):
+    from deeptime_spark.decomposition.vamp import vamp_score_cv
+
+    # 3 frames are one block: every fold leaves its train or test split empty
+    df = trajectory_from_arrays(spark, [np.arange(6.0).reshape(3, 2)])
+    with pytest.raises(ValueError, match="fold 0"):
+        vamp_score_cv(df, lagtime=1, n=2, blocksize=10)
+
+
+def test_only_the_linkage_advisor_imports_concurrent_futures():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tracked = subprocess.run(
+        ["git", "ls-files", "deeptime_spark/*.py"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert tracked
+    pattern = re.compile(r"^\s*(from\s+concurrent\.futures\s+import|import\s+concurrent\.futures)", re.M)
+    offenders = [
+        path
+        for path in tracked
+        if path != "deeptime_spark/operators/linkage.py"
+        and os.path.exists(os.path.join(root, path))
+        and pattern.search(open(os.path.join(root, path), encoding="utf-8").read())
+    ]
+    assert offenders == []

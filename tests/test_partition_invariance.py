@@ -47,6 +47,10 @@ SWEEP = [
     "msm_its_events",
     "msm_ck_events",
     "tram_events",
+    # the covariance-family queries on the grouped moments core
+    "vamp_cv_events",
+    "vamp_score_data_events",
+    "tica_events",
 ]
 
 

@@ -107,6 +107,17 @@ def test_tram_spark_bias_store_matches_driver(spark, tram_df):
         np.testing.assert_array_equal(getattr(m_spark, attr), getattr(m_driver, attr))
 
 
+def test_restrict_connected_without_valid_transition_raises_value_error(spark):
+    from deeptime_spark.markov.tram import restrict_connected
+
+    df = spark.createDataFrame(
+        [(0, 0, t, -1, [0.0, 0.5]) for t in range(5)],
+        "therm_state int, traj_id long, t long, state int, bias array<double>",
+    )
+    with pytest.raises(ValueError, match="no valid transition at lagtime 1"):
+        restrict_connected(df, lagtime=1)
+
+
 def test_restrict_connected_post_hoc_re(spark):
     import numpy as np
 
