@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from deeptime_spark.local_relation import local_df as _local_df
+from deeptime_spark.operators.moments import features
 from deeptime_spark.session import read_table as _read
 from deeptime_spark.streaming.replay import Replay
 
@@ -174,7 +175,7 @@ def entry(spark: SparkSession) -> DataFrame:
     traj = _event_traj(spark, "/root/testdata/sf0.001")
     v = F.col("value") / 100.0
     feat = traj.select(
-        "traj_id", "t", F.array(v, v * v, v * v * v).alias("x")
+        "traj_id", "t", features(v, v * v, v * v * v)
     )
     model = TICA(lagtime=2, dim=2).fit(feat).fetch_model()
     out = model.transform(feat, out_col="proj")
@@ -452,10 +453,10 @@ def _q_event_timeshifted(spark, sf_dir):
 
 @query(bench=True, scale=True)
 def _q_event_moments(spark, sf_dir):
-    from deeptime_spark.operators.lag import with_lagged
+    from deeptime_spark.operators.lag import timeshifted
 
     traj = _event_traj(spark, sf_dir)
-    lagged = with_lagged(traj, 1, cols=("vc",))
+    lagged = timeshifted(traj, 1, cols=("vc",))
     vc, vcl = F.col("vc"), F.col("vc_lagged")
     return lagged.agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -474,7 +475,7 @@ def _q_event_derivative(spark, sf_dir):
     from deeptime_spark.sindy import with_derivative
 
     traj = _event_traj(spark, sf_dir)
-    feat = traj.select("traj_id", "t", F.array(F.col("value")).alias("x"))
+    feat = traj.select("traj_id", "t", features(F.col("value")))
     out = with_derivative(feat, dt=1.0)
     return out.select("traj_id", "t", F.col("x_dot")[0].alias("dvalue"))
 
@@ -897,7 +898,7 @@ def _q_kvadnet_events(spark, sf_dir):
     from deeptime_spark.decomposition.deep import KVADNet
 
     traj = _event_traj(spark, sf_dir).select(
-        "traj_id", "t", F.array(F.col("value") / F.lit(100.0)).alias("x")
+        "traj_id", "t", features(F.col("value") / F.lit(100.0))
     )
     m = (
         KVADNet(lagtime=1, layers=[1, 16, 2], sigma=1.0, n_epochs=10,
@@ -2215,7 +2216,7 @@ def _q_sindy_events(spark, sf_dir):
     from deeptime_spark.sindy import SINDy, STLSQ
 
     traj = _event_traj(spark, sf_dir)
-    feat = traj.select("traj_id", "t", F.array(F.col("value") / 100.0).alias("x"))
+    feat = traj.select("traj_id", "t", features(F.col("value") / 100.0))
     model = (
         SINDy(optimizer=STLSQ(threshold=0.0, alpha=0.0))
         .fit(feat, dt=1.0)
@@ -2307,7 +2308,7 @@ def _q_vamp_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v, v * v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v, v * v * v))
     model = VAMP(lagtime=2).fit(feat).fetch_model()
     sv = model.singular_values
     return _local_df(spark, 
@@ -2326,7 +2327,7 @@ def _q_vamp_score_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v, v * v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v, v * v * v))
     model = VAMP(lagtime=2).fit(feat).fetch_model()
     rows = [
         ("vamp1", round(float(model.score(1)), 6)),
@@ -2350,7 +2351,7 @@ def _q_vamp_score_data_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v, v * v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v, v * v * v))
     rows = [
         ("vamp1_dim2", round(float(vamp_score_data(feat, 2, dim=2, r=1.0)), 6)),
         ("vamp2_dim2", round(float(vamp_score_data(feat, 2, dim=2, r=2.0)), 6)),
@@ -2384,7 +2385,7 @@ def _q_koopman_propagate_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v, v * v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v, v * v * v))
     model = VAMP(lagtime=2, dim=2).fit(feat).fetch_model()
     sv = np.round(model.singular_values, 9)
     qm = TransferOperatorModel(
@@ -2417,7 +2418,7 @@ def _q_dmd_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v))
     model = DMD(lagtime=1).fit(feat).fetch_model()
     ev = np.sort_complex(model.eigenvalues)
     return _local_df(spark, 
@@ -2437,7 +2438,7 @@ def _q_kedmd_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v))
     model = KernelEDMD(GaussianKernel(1.0), epsilon=1e-6, n_eigs=3, max_samples=500).fit(
         feat, lagtime=2
     ).fetch_model()
@@ -2464,7 +2465,7 @@ def _q_edmd_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v))
     model = (
         EDMD(basis=Monomials(p=3, d=1, include_bias=False), lagtime=1)
         .fit(feat)
@@ -2498,7 +2499,7 @@ def _q_kcca_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v))
     model = (
         KernelCCA(GaussianKernel(1.0), n_eigs=3, max_samples=400)
         .fit(feat, lagtime=2)
@@ -2529,7 +2530,7 @@ def _q_kvad_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v))
     model = (
         KVAD(GaussianKernel(1.0), lagtime=2, dim=2, max_samples=400)
         .fit(feat)
@@ -2617,7 +2618,7 @@ def _q_vamp_cv_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v))
     scores = vamp_score_cv(
         feat, lagtime=1, n=4, blocksize=10, r="VAMP2", random_state=42
     )
@@ -2649,7 +2650,7 @@ def _q_koopman_weights_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v))
     model = KoopmanWeightingEstimator(lagtime=2).fit(feat).fetch_model()
     out = model.transform(feat)
     return out.select("traj_id", "t", F.round("weight", 6).alias("weight"))
@@ -2662,7 +2663,7 @@ def _q_regspace_events(spark, sf_dir):
     from deeptime_spark.clustering.regspace import RegularSpace
 
     traj = _event_traj(spark, sf_dir)
-    feat = traj.select("traj_id", "t", F.array(F.col("value") / 100.0).alias("x"))
+    feat = traj.select("traj_id", "t", features(F.col("value") / 100.0))
     # exact=True streams frames in (traj_id, t) order — the reference's own
     # sequential leader-scan semantics, deterministic and oracle-replayable;
     # the distributed two-level mode stays pytest-covered (packing invariant)
@@ -2998,7 +2999,7 @@ def _q_tica_events(spark, sf_dir):
 
     traj = _event_traj(spark, sf_dir)
     v = F.col("value") / 100.0
-    feat = traj.select("traj_id", "t", F.array(v, v * v, v * v * v).alias("x"))
+    feat = traj.select("traj_id", "t", features(v, v * v, v * v * v))
     model = TICA(lagtime=2, dim=2).fit(feat).fetch_model()
     out = model.transform(feat, out_col="proj")
     return out.select(

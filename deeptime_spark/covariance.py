@@ -132,12 +132,7 @@ class Covariance(Estimator):
         return strided(df, self.stride), None
 
     def partial_fit(self, df: DataFrame) -> "Covariance":
-        # Probe the feature width on the UNLAGGED input: compute_moments'
-        # auto-probe would take(1) on the lagged frame, whose lead()
-        # window forces a full shuffle-stage materialization just to
-        # read one array length (measured ~1 s x 2 probes per fit at
-        # sf0.1 — guide §1.2: don't compute what you throw away). The
-        # lagged column is lead(x), so d_y == d by construction.
+        # read on the unlagged input; the lagged column is lead(x), so d_y == d
         d = feature_dim(df, self.x_col)
         lagged, y_col = self._lagged(df)
         m = compute_moments(

@@ -21,6 +21,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from deeptime_spark.operators.moments import features
+
 TRAJECTORY_SCHEMA = StructType(
     [
         StructField("traj_id", LongType(), False),
@@ -103,7 +105,7 @@ def trajectory_from_events(events: DataFrame) -> DataFrame:
     """
     ev = events.select(
         F.col("user_id").cast("long").alias("traj_id"),
-        F.array(F.col("value").cast("double")).alias("x"),
+        features(F.col("value").cast("double")),
         "ts",
         "event_id",
     )
@@ -154,9 +156,9 @@ def to_dataset(data, lagtime: int | None = None, spark: SparkSession | None = No
         spark = spark or SparkSession.getActiveSession()
         df = trajectory_from_arrays(spark, data)
     if lagtime is not None:
-        from deeptime_spark.operators.lag import with_lagged
+        from deeptime_spark.operators.lag import timeshifted
 
-        df = with_lagged(df, lagtime, cols=("x",))
+        df = timeshifted(df, lagtime)
     return df
 
 

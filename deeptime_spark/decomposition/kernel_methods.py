@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from deeptime_spark.base import Estimator, Model
 from deeptime_spark.kernels import Kernel
 from deeptime_spark.numeric.eigen import sort_eigs, spd_eig
-from deeptime_spark.operators.lag import with_lagged
+from deeptime_spark.operators.lag import timeshifted
 
 
 def spd_truncated_svd(M: np.ndarray, dim: Optional[int] = None, eps: float = 1e-10):
@@ -51,7 +51,7 @@ def _collect_pairs(df: DataFrame, lagtime: int, x_col: str, max_samples: int, se
     per-partition top-k plus a driver merge, no full sort and no extra
     count pass over the corpus.
     """
-    pairs = with_lagged(df, lagtime, cols=(x_col,))
+    pairs = timeshifted(df, lagtime, cols=(x_col,))
     key = F.md5(
         F.concat_ws("_", F.col("traj_id").cast("string"), F.col("t").cast("string"))
     )

@@ -23,10 +23,11 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deeptime_spark.base import Estimator, Model
+from deeptime_spark.operators.lag import lagged
 
 
 def count_states(df: DataFrame, state_col: str = "state", ignore_negative: bool = True) -> np.ndarray:
@@ -138,8 +139,7 @@ def lagged_pairs(
     ``partitionBy(*by).orderBy(time_col)``, keeping only valid pairs: the
     partner exists and both states are >= 0. The lead runs before the
     filter, so unassigned (-1) frames still occupy their time slots."""
-    w = Window.partitionBy(*by).orderBy(time_col)
-    return df.withColumn("s_to", F.lead(state_col, lagtime).over(w)).where(
+    return lagged(df, {"s_to": (state_col, lagtime)}, by=by, order=time_col).where(
         (F.col(state_col) >= 0) & (F.col("s_to") >= 0)
     )
 
@@ -166,10 +166,8 @@ def two_step_counts_df(
     SURVEY §2.7 row 70): double-lead window then ONE groupBy over
     (s0, s1, s2) — n_states^3 keys, still tiny at the MSM layer."""
     tau = lagtime
-    w = Window.partitionBy(traj_col).orderBy(time_col)
     pairs = (
-        df.withColumn("s1", F.lead(state_col, tau).over(w))
-        .withColumn("s2", F.lead(state_col, 2 * tau).over(w))
+        lagged(df, {"s1": (state_col, tau), "s2": (state_col, 2 * tau)}, (traj_col,), time_col)
         .where(F.col("s1").isNotNull() & F.col("s2").isNotNull())
         .where((F.col(state_col) >= 0) & (F.col("s1") >= 0) & (F.col("s2") >= 0))
     )
@@ -190,7 +188,6 @@ def _lag_counts_df(
     under ``s_to = NULL``, so each lag's rows also sum to the state
     histogram and no second scan is needed for it."""
     sc = state_col
-    w = Window.partitionBy("traj_id").orderBy("t")
 
     def partner(tau: int):
         lead = F.col(f"_lead{tau}")
@@ -200,7 +197,8 @@ def _lag_counts_df(
         return F.struct(F.lit(tau).alias("lag"), F.when(valid, lead).alias("s_to"))
 
     return (
-        df.select(sc, "t", *[F.lead(sc, tau).over(w).alias(f"_lead{tau}") for tau in lagtimes])
+        lagged(df, {f"_lead{tau}": (sc, tau) for tau in lagtimes})
+        .select(sc, "t", *[f"_lead{tau}" for tau in lagtimes])
         .where(F.col(sc) >= 0)  # after the leads: -1 frames still occupy time slots
         .select(F.col(sc).alias("s_from"), F.inline(F.array(*map(partner, lagtimes))))
         .groupBy("lag", "s_from", "s_to")

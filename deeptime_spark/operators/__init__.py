@@ -1,5 +1,5 @@
 from deeptime_spark.operators.lag import (  # noqa: F401
-    with_lagged,
+    lagged,
     timeshifted,
     sliding_window,
     blocksplit,

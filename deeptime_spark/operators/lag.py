@@ -11,17 +11,19 @@ Reference semantics (SURVEY.md §2.2):
 - ``blocksplit_trajs`` / ``cvsplit_trajs``
   (/root/reference/src/deeptime/decomposition/_score.py:156,204).
 
-Spark realization: one ``lead`` window per lag over
-``Window.partitionBy(traj_id).orderBy(t)``. Catalyst merges window
-expressions sharing a spec into a single physical window pass, so lagging k
-columns costs one shuffle (by traj_id) total — and zero extra shuffle if the
-input is already hash-partitioned by traj_id (e.g. bucketed storage at scale).
-Chunking in the reference (chunksize=1000) is subsumed by Spark partitioning.
+Spark realization: ``lagged`` is the one place the package shifts a
+column in time — every ``lead`` (positive offset) or ``lag`` (negative) is a
+column of ONE projection over ``Window.partitionBy(*by).orderBy(t)``, so
+any number of partners costs one window pass and one shuffle by the
+trajectory key (none if the input is already partitioned by it). A partner
+never crosses a ``by`` group. ``timeshifted``, the Markov counters and
+SINDy's finite differences build on it. Chunking in the reference
+(chunksize=1000) is subsumed by Spark partitioning.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,35 +37,22 @@ def _traj_window(traj_col: str = TRAJ_COL, time_col: str = TIME_COL):
     return Window.partitionBy(traj_col).orderBy(time_col)
 
 
-def with_lagged(
+def lagged(
     df: DataFrame,
-    lagtime: int,
-    cols: Sequence[str] = (FEATURES_COL,),
-    traj_col: str = TRAJ_COL,
-    time_col: str = TIME_COL,
-    suffix: str = "_lagged",
-    drop_incomplete: bool = True,
+    partners: Mapping[str, tuple[str, int]],
+    by: Sequence[str] = (TRAJ_COL,),
+    order: str = TIME_COL,
 ) -> DataFrame:
-    """Add ``<col>_lagged = lead(col, lagtime)`` per trajectory.
-
-    Equivalent to the reference's ``traj[:-tau], traj[tau:]`` pairing
-    (util/data.py:333-341): row ``t`` carries ``(x_t, x_{t+tau})``; rows whose
-    lead falls off the end of the trajectory are dropped when
-    ``drop_incomplete`` (they correspond to ``traj[:-tau]`` truncation).
-
-    Assumes frame indices are dense (0..T-1) within each trajectory, matching
-    the reference's positional-lag convention. One window pass; no shuffle if
-    already partitioned by traj_col.
-    """
-    if lagtime < 0:
-        raise ValueError(f"lagtime must be >= 0, got {lagtime}")
-    w = _traj_window(traj_col, time_col)
-    out = df
-    for c in cols:
-        out = out.withColumn(c + suffix, F.lead(c, lagtime).over(w))
-    if drop_incomplete and lagtime > 0:
-        out = out.where(F.col(cols[0] + suffix).isNotNull())
-    return out
+    """The input rows plus one column per partner ``name: (col, offset)``:
+    ``lead(col, offset)`` for ``offset >= 0``, ``lag(col, -offset)`` below,
+    within each ``by`` group ordered by ``order`` (positional: frame indices
+    are assumed dense). All partners share one window; a partner that falls
+    off its group is NULL."""
+    w = Window.partitionBy(*by).orderBy(order)
+    return df.withColumns({
+        name: (F.lead(col, k) if k >= 0 else F.lag(col, -k)).over(w)
+        for name, (col, k) in partners.items()
+    })
 
 
 def timeshifted(
@@ -76,15 +65,19 @@ def timeshifted(
 ) -> DataFrame:
     """``timeshifted_split`` semantics (util/data.py:55-152) as one DataFrame.
 
-    Returns rows ``(traj_id, t, x, x_lagged)`` where ``x_lagged = x[t+tau]``,
-    restricted to ``t % stride == 0`` (reference stride semantics: stride
-    subsamples the *start* frames, the lag is applied on the unstrided series,
-    see util/data.py:120-126).
+    Returns the input rows plus ``<col>_lagged = <col>[t+tau]`` for each of
+    ``cols`` (the reference's ``traj[:-tau], traj[tau:]`` pairing,
+    util/data.py:333-341), dropping rows whose partner falls off the end of
+    the trajectory, restricted to ``t % stride == 0`` (reference stride
+    semantics: stride subsamples the *start* frames, the lag is applied on
+    the unstrided series, see util/data.py:120-126).
     """
-    out = with_lagged(df, lagtime, cols=cols, traj_col=traj_col, time_col=time_col)
-    if stride > 1:
-        out = out.where(F.col(time_col) % stride == 0)
-    return out
+    if lagtime < 0:
+        raise ValueError(f"lagtime must be >= 0, got {lagtime}")
+    out = lagged(df, {c + "_lagged": (c, lagtime) for c in cols}, (traj_col,), time_col)
+    if lagtime > 0:
+        out = out.where(F.col(cols[0] + "_lagged").isNotNull())
+    return strided(out, stride, time_col)
 
 
 def strided(df: DataFrame, stride: int, time_col: str = TIME_COL) -> DataFrame:

@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from typing import Iterator, Optional, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
@@ -129,12 +129,27 @@ class MomentsResult:
         return c00, c0t, ctt, mean_x, (mean_y if has_y else None)
 
 
+WIDTH_KEY = "width"  # schema-metadata key holding an array column's width
+
+
+def features(*exprs, name: str = "x") -> Column:
+    """``F.array(*exprs)`` as column ``name``, with its width in the schema
+    metadata (``WIDTH_KEY``) so ``feature_dim`` reads it without a job."""
+    return F.array(*exprs).alias(name, metadata={WIDTH_KEY: len(exprs)})
+
+
 def feature_dim(df: DataFrame, col: str = "x") -> int:
-    """Probe the array width from one row (tiny limit-1 job)."""
-    row = df.select(F.size(F.col(col)).alias("d")).first()
-    if row is None:
-        raise ValueError("empty DataFrame")
-    return int(row["d"])
+    """Width of the array column ``col``, the package's one width reader:
+    the ``WIDTH_KEY`` schema metadata when present (no job; projections,
+    filters, lags and explodes keep it), else a one-row probe job. Raises
+    ``ValueError`` naming ``col`` when the probe finds no row or a NULL."""
+    width = df.schema[col].metadata.get(WIDTH_KEY)
+    if width is not None:
+        return int(width)
+    row = df.select(F.size(F.col(col))).first()
+    if row is None or row[0] is None or row[0] < 0:
+        raise ValueError(f"feature_dim: no row or a NULL {col!r} to read its width from")
+    return int(row[0])
 
 
 def compute_moments(

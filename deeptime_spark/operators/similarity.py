@@ -18,6 +18,7 @@ from typing import Optional, Sequence
 import numpy as np
 import pandas as pd
 from deeptime_spark.local_relation import local_df as _local_df
+from deeptime_spark.operators.moments import feature_dim
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -128,12 +129,12 @@ def random_hyperplane_buckets(
     sign(X @ planes^T) BLAS gemm per batch for ALL tables — Spark's
     higher-order functions are interpreted per element, so 64-d+ columns
     are ~10x faster on the BLAS path with identical buckets.
+
+    ``d`` (the embedding width) defaults to ``feature_dim(emb, vec_col)``,
+    a one-row probe job unless the column carries its width.
     """
     if d is None:
-        # dimension probe: one single-row job. Callers that know the
-        # embedding dimension should pass ``d`` to skip it.
-        first = emb.select(F.size(vec_col)).first()
-        d = int(first[0])
+        d = feature_dim(emb, vec_col)
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_tables * n_planes, d))
     if d <= 24:
@@ -312,7 +313,7 @@ def lsh_topk(
     """
     # probe the dimension on the (broadcast-small) query side once, so
     # the corpus-side bucketing launches no probe job against the big table
-    d = int(queries.select(F.size(vec_col)).first()[0])
+    d = feature_dim(queries, vec_col)
     cb = random_hyperplane_buckets(corpus, n_planes, seed, vec_col, n_tables=n_tables, d=d)
     qb = random_hyperplane_buckets(
         queries.select(F.col(query_id_col), F.col(vec_col)), n_planes, seed, vec_col,
@@ -709,10 +710,7 @@ def sq8_quantize(
     index persists next to the codes.
     """
     vec = F.col(vec_col).cast("array<double>")
-    d_row = corpus.select(F.size(vec).alias("d")).first()
-    if d_row is None:
-        raise ValueError("sq8_quantize: empty corpus")
-    d = int(d_row["d"])
+    d = feature_dim(corpus, vec_col)
     aggs = []
     for i in range(d):
         aggs.append(F.min(F.element_at(vec, i + 1)).alias(f"_mn{i}"))
@@ -937,19 +935,13 @@ def random_projection(
     projection once rather than recompute it per run.
 
     Returns (id_col, vec_col) with ``array<double>`` length out_dim.
+    Without ``d`` the width comes from ``feature_dim``, which raises
+    ``ValueError`` on an empty input or a NULL sampled vector.
     """
     if out_dim < 1:
         raise ValueError(f"out_dim must be >= 1, got {out_dim}")
     if d is None:
-        first = emb.select(F.size(vec_col)).first()
-        if first is None:
-            raise ValueError("random_projection: empty input")
-        if first[0] is None:
-            raise ValueError(
-                "random_projection: sampled row has a NULL vector — "
-                "filter nulls upstream or pass d explicitly"
-            )
-        d = int(first[0])
+        d = feature_dim(emb, vec_col)
     rng = np.random.default_rng(seed)
     proj_T = np.ascontiguousarray(
         (rng.normal(size=(out_dim, d)) / float(np.sqrt(out_dim))).T

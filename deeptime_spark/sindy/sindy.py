@@ -16,12 +16,13 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deeptime_spark.base import Estimator, Model
 from deeptime_spark.basis import Monomials
-from deeptime_spark.operators.moments import compute_moments
+from deeptime_spark.operators.lag import lagged
+from deeptime_spark.operators.moments import compute_moments, feature_dim
 
 
 def finite_difference_coefficients(deriv_order: int, offsets: np.ndarray) -> np.ndarray:
@@ -50,13 +51,11 @@ def with_derivative(
 ) -> DataFrame:
     """np.gradient-equivalent time derivative per trajectory: second-order
     central differences in the interior, second-order one-sided stencils at
-    trajectory edges. One window pass (lead/lag share the window spec), all
-    JVM zip_with arithmetic."""
-    w = Window.partitionBy(traj_col).orderBy(time_col)
-    xp = F.lead(x_col, 1).over(w)
-    xm = F.lag(x_col, 1).over(w)
-    xp2 = F.lead(x_col, 2).over(w)
-    xm2 = F.lag(x_col, 2).over(w)
+    trajectory edges. One window pass (the four +-1, +-2 partners come from
+    one ``lagged`` projection), all JVM zip_with arithmetic."""
+    shifts = {"_xp": 1, "_xm": -1, "_xp2": 2, "_xm2": -2}
+    df = lagged(df, {n: (x_col, k) for n, k in shifts.items()}, by=(traj_col,), order=time_col)
+    xp, xm, xp2, xm2 = (F.col(n) for n in shifts)
     two_dt = F.lit(2.0 * dt)
 
     central = F.zip_with(xp, xm, lambda a, b: (a - b) / two_dt)
@@ -77,7 +76,7 @@ def with_derivative(
         .when(xm.isNotNull() & xp.isNotNull(), central)
         .otherwise(F.lit(None))
     )
-    return df.withColumn(out_col, expr).where(F.col(out_col).isNotNull())
+    return df.withColumn(out_col, expr).where(F.col(out_col).isNotNull()).drop(*shifts)
 
 
 class STLSQ:
@@ -216,17 +215,13 @@ class SINDy(Estimator):
     def fit(self, df: DataFrame, xdot_col: Optional[str] = None, dt: float = 1.0) -> "SINDy":
         """Featurize -> ONE gramian aggregate -> driver STLSQ. When no
         derivative column is given it is computed by the window FD pass."""
-        from deeptime_spark.operators.moments import feature_dim
-
         d = feature_dim(df, self.x_col)
         lib = self.library or Monomials(p=2, d=d)
         if xdot_col is None:
             df = with_derivative(df, x_col=self.x_col, dt=dt)
             xdot_col = "x_dot"
         phi = lib(df, x_col=self.x_col, out_col="_phi")
-        # widths are known (library arity; xdot has x's width): passing
-        # them skips compute_moments' two take(1) probes, which on the
-        # FD-window frame would each materialize a full shuffle stage
+        # widths are known: the library's arity, and x_dot has x's width
         m = compute_moments(
             phi,
             x_col="_phi",

@@ -1,18 +1,24 @@
 """Covariance/moments vs numpy oracles (reference algebra re-run in numpy,
 mirroring the reference's own test tolerances: SURVEY.md §5)."""
 
+import uuid
+
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from conftest import matching_defs
 from deeptime_spark.covariance import Covariance, KoopmanWeightingEstimator
 from deeptime_spark.data import trajectory_from_arrays
+from deeptime_spark.operators.lag import blocksplit, timeshifted
 from deeptime_spark.operators.moments import (
     EXPR_MAX_DIM,
     _moments_arrow,
     _moments_expr,
     compute_moments,
     feature_dim,
+    features,
 )
 
 
@@ -150,3 +156,63 @@ def test_koopman_weighting_uniform_on_equilibrium_data(spark, rng):
     ws = np.array([r["weight"] for r in wdf.collect()])
     assert abs(ws.mean() - 1.0) < 0.05
     assert ws.std() < 0.2
+
+
+def _windowed_features(spark, annotated):
+    """``(traj_id, t, x)`` whose ``t`` comes from a ``row_number`` window,
+    the shape of the harness's event trajectories: a one-row probe of it
+    re-runs the window's shuffle."""
+    rs = np.random.default_rng(9)
+    rows = [(i % 4, float(i), float(v)) for i, v in enumerate(rs.normal(size=400))]
+    ev = spark.createDataFrame(rows, "traj_id long, ts double, v double")
+    w = Window.partitionBy("traj_id").orderBy("ts")
+    traj = ev.select("traj_id", (F.row_number().over(w) - 1).alias("t"), "v")
+    v = F.col("v")
+    x = features(v, v * v) if annotated else F.array(v, v * v).alias("x")
+    return traj.select("traj_id", "t", x)
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"cov-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "covariance jobs")
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_features_width_survives_lag_blocks_and_filters(spark):
+    feat = _windowed_features(spark, annotated=True)
+    pairs = timeshifted(blocksplit(feat, blocksize=10), 1, traj_col="block_id")
+    folds = pairs.select("x", F.explode(F.array(F.lit(0), F.lit(1))).alias("fold"))
+    widths, jobs = _jobs(spark, lambda: [feature_dim(feat), feature_dim(folds.where("fold > 0"))])
+    assert (widths, jobs) == ([2, 2], 0)
+
+
+def test_covariance_fit_on_a_features_frame_runs_no_width_probe(spark):
+    feat = _windowed_features(spark, annotated=True)
+    est = Covariance(lagtime=1, compute_c0t=True)
+    _, fit_jobs = _jobs(spark, lambda: est.fit(feat))
+    pairs = timeshifted(feat, 1)
+    _, aggregate_jobs = _jobs(
+        spark, lambda: compute_moments(pairs, y_col="x_lagged", d=2, d_y=2, compute_yy=False)
+    )
+    assert fit_jobs == aggregate_jobs > 0
+
+
+def test_covariance_fit_without_width_metadata_gives_the_same_model(spark):
+    est = Covariance(lagtime=1, compute_c0t=True)
+    bare = est.fit(_windowed_features(spark, annotated=False)).fetch_model()
+    annotated = est.fit(_windowed_features(spark, annotated=True)).fetch_model()
+    for attr in ("cov_00", "cov_0t", "mean_0", "mean_t"):
+        np.testing.assert_allclose(getattr(annotated, attr), getattr(bare, attr), rtol=1e-12)
+
+
+def test_only_feature_dim_probes_an_array_width():
+    assert matching_defs(r"F\.size\(.*\)\)\.first\(\)") == {
+        ("deeptime_spark/operators/moments.py", "feature_dim")
+    }

@@ -1,14 +1,13 @@
 """TICA/VAMP/DMD vs closed-form oracles (linear Koopman system fixture,
 mirroring /root/reference/tests/decomposition/test_vamp.py:64-89)."""
 
-import os
 import re
-import subprocess
 import uuid
 
 import numpy as np
 import pytest
 
+from conftest import python_sources
 from deeptime_spark.basis import Monomials
 from deeptime_spark.data import trajectory_from_arrays
 from deeptime_spark.data.generators import linear_koopman_system
@@ -191,18 +190,12 @@ def test_vamp_score_cv_with_an_empty_split_names_the_fold(spark):
 
 
 def test_only_the_linkage_advisor_imports_concurrent_futures():
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tracked = subprocess.run(
-        ["git", "ls-files", "deeptime_spark/*.py"],
-        cwd=root, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    assert tracked
+    sources = python_sources("deeptime_spark")
+    assert sources
     pattern = re.compile(r"^\s*(from\s+concurrent\.futures\s+import|import\s+concurrent\.futures)", re.M)
     offenders = [
         path
-        for path in tracked
-        if path != "deeptime_spark/operators/linkage.py"
-        and os.path.exists(os.path.join(root, path))
-        and pattern.search(open(os.path.join(root, path), encoding="utf-8").read())
+        for path, text in sources.items()
+        if path != "deeptime_spark/operators/linkage.py" and pattern.search(text)
     ]
     assert offenders == []

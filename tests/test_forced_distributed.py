@@ -9,13 +9,13 @@ result, on real inputs and on empty ones.
 
 import os
 import random
-import subprocess
 
 import numpy as np
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+from conftest import python_sources
 from deeptime_spark import dispatch
 from deeptime_spark.clustering import kmeans
 from deeptime_spark.decomposition import deep
@@ -26,21 +26,14 @@ from deeptime_spark.operators import graph as G
 from test_partition_invariance import SF, normalize
 from tools.forced_distributed_bench import FORCE_ENV
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 
 def test_only_dispatch_module_reads_deeptime_env():
-    tracked = subprocess.run(
-        ["git", "ls-files", "deeptime_spark/*.py"],
-        cwd=ROOT, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    assert tracked
+    sources = python_sources("deeptime_spark")
+    assert sources
     offenders = [
         path
-        for path in tracked
-        if path != "deeptime_spark/dispatch.py"
-        and os.path.exists(os.path.join(ROOT, path))
-        and "DEEPTIME_" in open(os.path.join(ROOT, path), encoding="utf-8").read()
+        for path, text in sources.items()
+        if path != "deeptime_spark/dispatch.py" and "DEEPTIME_" in text
     ]
     assert offenders == []
 

@@ -2,12 +2,17 @@
 (util/data.py:55-152): pairs never cross trajectory boundaries; stride
 subsamples start frames; sliding windows clip at edges."""
 
+import contextlib
+import io
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import matching_defs
 from deeptime_spark.data import trajectory_from_arrays
-from deeptime_spark.operators import with_lagged, timeshifted, sliding_window, blocksplit, cvsplit
+from deeptime_spark.operators import lagged, timeshifted, sliding_window, blocksplit, cvsplit
 
 
 @pytest.fixture(scope="module")
@@ -18,7 +23,7 @@ def small_df(spark):
 
 def test_lagged_pairs_match_numpy_slicing(spark, small_df):
     tau = 3
-    rows = with_lagged(small_df, tau).orderBy("traj_id", "t").collect()
+    rows = timeshifted(small_df, tau).orderBy("traj_id", "t").collect()
     # trajectory 0: pairs (t, t+3) for t in 0..6; trajectory 1: t in 0..1
     assert len(rows) == 7 + 2
     for r in rows:
@@ -26,7 +31,7 @@ def test_lagged_pairs_match_numpy_slicing(spark, small_df):
 
 
 def test_pairs_never_cross_trajectories(spark, small_df):
-    rows = with_lagged(small_df, 4).collect()
+    rows = timeshifted(small_df, 4).collect()
     for r in rows:
         # traj 1 holds values 100..104; lagged values must stay in-trajectory
         if r["x"][0] >= 100:
@@ -42,9 +47,39 @@ def test_stride_subsamples_start_frames(spark, small_df):
 
 
 def test_lag_zero_identity(spark, small_df):
-    rows = with_lagged(small_df, 0).collect()
+    rows = timeshifted(small_df, 0).collect()
     assert len(rows) == 15
     assert all(r["x"] == r["x_lagged"] for r in rows)
+
+
+def test_lagged_partners_share_one_window_and_stay_in_their_group(spark, small_df):
+    out = lagged(small_df, {"ahead": ("x", 2), "behind": ("x", -1)})
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain()
+    assert len(re.findall(r"\bWindow \[", buf.getvalue())) == 1, buf.getvalue()
+    trajs = {0: list(range(10)), 1: list(range(100, 105))}
+    want = {
+        (tid, t): (
+            [float(v[t + 2])] if t + 2 < len(v) else None,
+            [float(v[t - 1])] if t >= 1 else None,
+        )
+        for tid, v in trajs.items()
+        for t in range(len(v))
+    }
+    got = {(r["traj_id"], r["t"]): (r["ahead"], r["behind"]) for r in out.collect()}
+    assert got == want
+
+
+def test_only_the_lag_module_builds_lead_and_lag_windows():
+    lag_module = ("deeptime_spark/operators/lag.py", "lagged")
+    assert matching_defs(r"F\.lead\(") == {lag_module}
+    # dedup's island-gap windows order by token position, not by frame
+    assert matching_defs(r"F\.lag\(") == {
+        lag_module,
+        ("deeptime_spark/operators/dedup.py", "duplicated_substring_spans"),
+        ("deeptime_spark/operators/dedup.py", "drop_duplicated_substrings"),
+    }
 
 
 def test_sliding_window_clips_at_edges(spark, small_df):
@@ -187,9 +222,6 @@ def test_range_join_matches_naive(spark):
 
 def test_range_join_plans_as_equi_join(spark):
     """The whole point: no BroadcastNestedLoopJoin in the physical plan."""
-    import contextlib
-    import io
-
     from deeptime_spark.operators.lag import range_join
 
     pdf = spark.range(100).select(F.lit(1).alias("k"), F.col("id").alias("t"))

@@ -6,30 +6,22 @@ bench.py times. ``resolve_conf`` is pure: only the read_table check
 starts a JVM.
 """
 
-import os
-import subprocess
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from conftest import python_sources
 from deeptime_spark.session import BARE, PROFILES, read_table, resolve_conf
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_only_session_module_builds_a_session():
     needle = "SparkSession" + ".builder"
-    tracked = subprocess.run(
-        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
-    ).stdout.split()
-    assert tracked
+    sources = python_sources()
+    assert sources
     offenders = [
         path
-        for path in tracked
-        if path != "deeptime_spark/session.py"
-        and os.path.exists(os.path.join(ROOT, path))
-        and needle in open(os.path.join(ROOT, path), encoding="utf-8").read()
+        for path, text in sources.items()
+        if path != "deeptime_spark/session.py" and needle in text
     ]
     assert offenders == []
 

@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_ann_recall_known_sets(spark):
@@ -346,3 +347,25 @@ def test_random_projection_validation(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError):
         random_projection(empty, out_dim=4)
+
+
+def _width_readers():
+    from deeptime_spark.operators import moments, similarity
+
+    return {
+        "feature_dim": lambda df: moments.feature_dim(df, "embedding"),
+        "random_hyperplane_buckets": lambda df: similarity.random_hyperplane_buckets(df),
+        "lsh_topk": lambda df: similarity.lsh_topk(df, df),
+        "sq8_quantize": lambda df: similarity.sq8_quantize(df),
+        "random_projection": lambda df: similarity.random_projection(df, out_dim=2),
+    }
+
+
+@pytest.mark.parametrize("rows", [[], [(0, 0, None)]], ids=["empty", "null_vector"])
+@pytest.mark.parametrize("reader", sorted(_width_readers()))
+def test_width_readers_raise_a_value_error_naming_the_column(spark, reader, rows):
+    """Every operator that learns an embedding width asks feature_dim, so
+    an empty frame or a NULL sampled vector is one typed error."""
+    df = spark.createDataFrame(rows, "vec_id long, query_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="'embedding'"):
+        _width_readers()[reader](df)

@@ -9,7 +9,6 @@ source row read once per scan of its micro-batch.
 
 import inspect
 import os
-import subprocess
 import tempfile
 from urllib.parse import urlparse
 
@@ -20,9 +19,9 @@ from deeptime_spark.covariance import Covariance
 from deeptime_spark.data.schema import trajectory_from_arrays
 from deeptime_spark.streaming import replay
 from deeptime_spark.streaming.accumulate import StreamingEstimator
+from conftest import python_sources
 from test_partition_invariance import SF
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STREAMING = sorted(n for n in entrymod.queries() if n.startswith("streaming_"))
 # Spark counts a micro-batch's input rows once per scan of the batch.
 # These replays scan each batch more than once: the interval join has
@@ -98,20 +97,14 @@ def test_estimator_timeout_stops_the_stream_and_raises(spark, rng, monkeypatch, 
 
 
 def test_only_replay_module_reads_or_awaits_streams():
-    tracked = subprocess.run(
-        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
-    ).stdout.split()
-    assert tracked
+    sources = python_sources()
+    assert sources
     offenders = [
         path
-        for path in tracked
+        for path, text in sources.items()
         if path != "deeptime_spark/streaming/replay.py"
         and not path.startswith("tests/")
-        and os.path.exists(os.path.join(ROOT, path))
-        and any(
-            needle in open(os.path.join(ROOT, path), encoding="utf-8").read()
-            for needle in ("readStream", "awaitTermination")
-        )
+        and any(needle in text for needle in ("readStream", "awaitTermination"))
     ]
     assert offenders == []
 
