@@ -45,6 +45,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from deeptime_spark.operators.lag import FEATURES_COL
+
 EXPR_MAX_DIM = 24  # above this, d^2 codegen expressions stop paying off
 
 
@@ -132,10 +134,14 @@ class MomentsResult:
 WIDTH_KEY = "width"  # schema-metadata key holding an array column's width
 
 
-def features(*exprs, name: str = "x") -> Column:
-    """``F.array(*exprs)`` as column ``name``, with its width in the schema
-    metadata (``WIDTH_KEY``) so ``feature_dim`` reads it without a job."""
-    return F.array(*exprs).alias(name, metadata={WIDTH_KEY: len(exprs)})
+def features(*exprs) -> Column:
+    """``F.array(*exprs)`` as the trajectory feature column ``x``, with its
+    width in the schema metadata (``WIDTH_KEY``) so ``feature_dim`` reads it
+    without a job. Like ``F.array``, it takes the elements spread out or as
+    one list; the recorded width is the number of elements either way."""
+    if len(exprs) == 1 and isinstance(exprs[0], (list, tuple)):
+        exprs = tuple(exprs[0])
+    return F.array(*exprs).alias(FEATURES_COL, metadata={WIDTH_KEY: len(exprs)})
 
 
 def feature_dim(df: DataFrame, col: str = "x") -> int:

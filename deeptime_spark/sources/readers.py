@@ -16,12 +16,14 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deeptime_spark.operators.moments import features
+
 
 def _pack(df: DataFrame, feature_cols: Sequence[str], traj_col: str, time_col: str) -> DataFrame:
     return df.select(
         F.col(traj_col).cast("long").alias("traj_id"),
         F.col(time_col).cast("long").alias("t"),
-        F.array(*[F.col(c).cast("double") for c in feature_cols]).alias("x"),
+        features([F.col(c).cast("double") for c in feature_cols]),
     )
 
 

@@ -189,8 +189,14 @@ def test_features_width_survives_lag_blocks_and_filters(spark):
     feat = _windowed_features(spark, annotated=True)
     pairs = timeshifted(blocksplit(feat, blocksize=10), 1, traj_col="block_id")
     folds = pairs.select("x", F.explode(F.array(F.lit(0), F.lit(1))).alias("fold"))
-    widths, jobs = _jobs(spark, lambda: [feature_dim(feat), feature_dim(folds.where("fold > 0"))])
-    assert (widths, jobs) == ([2, 2], 0)
+    # like F.array, features takes its elements as one list too
+    listed = feat.select(features([F.col("x")[0], F.col("x")[1], F.col("x")[0]]))
+    widths, jobs = _jobs(
+        spark,
+        lambda: [feature_dim(feat), feature_dim(folds.where("fold > 0")), feature_dim(listed)],
+    )
+    assert (widths, jobs) == ([2, 2, 3], 0)
+    assert listed.select(F.size("x")).first()[0] == 3
 
 
 def test_covariance_fit_on_a_features_frame_runs_no_width_probe(spark):

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from deeptime_spark.data.schema import trajectory_from_arrays
+from deeptime_spark.operators.moments import WIDTH_KEY
 from deeptime_spark.sources import (
     load_model,
     read_trajectories_csv,
@@ -44,6 +45,7 @@ def test_csv_wide_format(spark, tmpdir):
     df = read_trajectories_csv(spark, tmpdir + "/t.csv")
     rows = sorted((r["traj_id"], r["t"], tuple(r["x"])) for r in df.collect())
     assert rows == [(0, 0, (1.0, 4.0)), (0, 1, (2.0, 5.0)), (1, 0, (3.0, 6.0))]
+    assert df.schema["x"].metadata == {WIDTH_KEY: 2}  # feature_dim reads it without a job
 
 
 def test_model_persistence_roundtrip(tmpdir, rng):
