@@ -359,14 +359,9 @@ class DeterministicKMeans(Estimator):
         # partition counts; rows identical in BOTH keys are fully
         # interchangeable, so the residual ambiguity is harmless). A
         # no-op for unique order keys.
-        sample_rows = (
-            df.orderBy(self.order_col, x_col)
-            .limit(self.sample_size)
-            .select(x_col)
-            .collect()
-        )
-        X0 = np.array([r[x_col] for r in sample_rows], dtype=np.float64)
-        if dispatch.on_driver("kmeans", int(len(sample_rows) >= self.sample_size)):
+        sample = df.orderBy(self.order_col, x_col).limit(self.sample_size).select(x_col)
+        X0 = np.asarray(dispatch.arrays(sample)[x_col], dtype=np.float64)
+        if dispatch.on_driver("kmeans", int(len(X0) >= self.sample_size)):
             # The bounded init sample IS the whole relation (limit
             # returned fewer rows than requested), so the Lloyd loop
             # runs driver-side on the rows already collected —

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator
 from deeptime_spark.clustering.cluster_model import ClusterModel, _pairwise_sq_dists
 
@@ -121,17 +122,13 @@ class RegularSpace(Estimator):
                 cand = src
                 if centers:
                     cand = src.filter(make_far(np.asarray(centers))(F.col(x_col)))
-                rows = cand.orderBy(*order).limit(batch_size).select(x_col).collect()
-                if not rows:
+                batch = dispatch.arrays(cand.orderBy(*order).limit(batch_size).select(x_col))
+                X = np.asarray(batch[x_col], dtype=np.float64)
+                if not len(X):
                     break
                 n_before = len(centers)
-                _leader_scan(
-                    np.array([r[x_col] for r in rows], dtype=np.float64),
-                    self.dmin,
-                    max_centers,
-                    centers,
-                )
-                if len(rows) < batch_size or len(centers) == n_before:
+                _leader_scan(X, self.dmin, max_centers, centers)
+                if len(X) < batch_size or len(centers) == n_before:
                     break  # batch covered the whole remainder
         finally:
             src.unpersist()

@@ -21,6 +21,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from deeptime_spark import dispatch
 from deeptime_spark.operators.moments import features
 
 TRAJECTORY_SCHEMA = StructType(
@@ -162,19 +163,21 @@ def to_dataset(data, lagtime: int | None = None, spark: SparkSession | None = No
     return df
 
 
+def _by_trajectory(df: DataFrame, col: str, dtype) -> list[np.ndarray]:
+    """``col`` as ``dtype`` per trajectory, in ``traj_id`` order, each
+    ordered by ``t``, from one ``dispatch.arrays`` fetch of the frame."""
+    a = dispatch.arrays(df.select("traj_id", "t", col).orderBy("traj_id", "t"))
+    starts = np.flatnonzero(np.diff(a["traj_id"])) + 1
+    return np.split(a[col].astype(dtype, copy=False), starts) if len(a["t"]) else []
+
+
 def collect_trajectories(df: DataFrame) -> list[np.ndarray]:
-    """Driver-side materialization back to the reference's list-of-ndarrays
-    form (testing / small-data interop only — never in the hot path)."""
-    rows = df.select("traj_id", "t", "x").orderBy("traj_id", "t").collect()
-    out: dict[int, list] = {}
-    for r in rows:
-        out.setdefault(r.traj_id, []).append(r.x)
-    return [np.asarray(out[k], dtype=np.float64) for k in sorted(out)]
+    """The reference's list-of-ndarrays form: one ``(T_i, d)`` float64 array
+    per trajectory in ``traj_id`` order (data that fits on the driver:
+    tests, interop)."""
+    return _by_trajectory(df, "x", np.float64)
 
 
 def collect_dtrajs(df: DataFrame) -> list[np.ndarray]:
-    rows = df.select("traj_id", "t", "state").orderBy("traj_id", "t").collect()
-    out: dict[int, list] = {}
-    for r in rows:
-        out.setdefault(r.traj_id, []).append(r.state)
-    return [np.asarray(out[k], dtype=np.int32) for k in sorted(out)]
+    """``collect_trajectories`` for the int32 ``state`` column."""
+    return _by_trajectory(df, "state", np.int32)

@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator, Model
 from deeptime_spark.kernels import Kernel
 from deeptime_spark.numeric.eigen import sort_eigs, spd_eig
@@ -55,15 +56,9 @@ def _collect_pairs(df: DataFrame, lagtime: int, x_col: str, max_samples: int, se
     key = F.md5(
         F.concat_ws("_", F.col("traj_id").cast("string"), F.col("t").cast("string"))
     )
-    rows = (
-        pairs.select(F.col(x_col).alias("_x"), F.col(x_col + "_lagged").alias("_y"), key.alias("_h"))
-        .orderBy("_h")
-        .limit(max_samples)
-        .collect()
-    )
-    x = np.array([r["_x"] for r in rows])
-    y = np.array([r["_y"] for r in rows])
-    return x, y
+    y_col = x_col + "_lagged"
+    a = dispatch.arrays(pairs.orderBy(key).limit(max_samples).select(x_col, y_col))
+    return a[x_col], a[y_col]
 
 
 class KernelEDMDModel(Model):

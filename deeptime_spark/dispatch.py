@@ -13,6 +13,10 @@ from __future__ import annotations
 import contextlib
 import os
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 ENV = "DEEPTIME_DISPATCH"
 
 # decision -> closed range of input sizes that runs on the driver, with the
@@ -50,8 +54,9 @@ BOUNDS = {
     # mapInPandas job per iteration. tram_events, warm-min on 4 cores: driver
     # 2.76 vs 12.26 s at x1 (100k samples), 12.54 vs 29.84 s at x8 (800k).
     # The driver wins at both sizes, so the bound is a memory cap: the
-    # collect raised the Python peak RSS by 77 MB at x1 and 446 MB at x8,
-    # ~0.53 kB per sample, so 2M samples hold ~1.1 GB on the driver
+    # arrays fetch (the state column and the flat bias buffer, no Row
+    # objects) raises the Python peak RSS by 40 MB at x1 and 85 MB at x8,
+    # ~64 bytes per added sample (the Row collect it replaced: 83 and 452 MB)
     "tram_bias": (0, 2_000_000),
 }
 
@@ -75,6 +80,31 @@ def fetch(decision: str, df):
         return None
     pdf = df.limit(hi + 1).toPandas()
     return pdf if on_driver(decision, len(pdf)) else None
+
+
+def arrays(df) -> dict:
+    """Every column of ``df`` as one contiguous, writeable numpy array,
+    ``{name: array}``, from one Arrow job (``toArrow``, whatever the
+    session's Arrow setting) in the collect's row order, so an ``orderBy``
+    keeps its meaning. An array column comes back ``(rows, width)``, the
+    width read from its Arrow offsets (``(0, 0)`` for no rows). A NULL in an
+    integer column, a NULL array or arrays of unequal length raise
+    ``ValueError`` naming the column; a NULL double comes back NaN."""
+    table = df.toArrow()
+    return {name: _numpy(name, table.column(name)) for name in table.column_names}
+
+
+def _numpy(name: str, col) -> np.ndarray:
+    if pa.types.is_list(col.type):
+        col = col.combine_chunks()
+        width = pc.min_max(col.value_lengths()).as_py()
+        if col.null_count or width["min"] != width["max"]:
+            raise ValueError(f"arrays: array column {name!r} holds a NULL or unequal lengths")
+        return _numpy(name, col.flatten()).reshape(len(col), width["max"] or 0)
+    if pa.types.is_integer(col.type) and col.null_count:
+        raise ValueError(f"arrays: integer column {name!r} holds a NULL")
+    a = col.to_numpy(zero_copy_only=False)
+    return a if a.flags.writeable else a.copy()
 
 
 @contextlib.contextmanager

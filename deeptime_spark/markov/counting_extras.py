@@ -18,6 +18,7 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
+from deeptime_spark import dispatch
 from deeptime_spark.local_relation import local_df as _local_df
 from deeptime_spark.markov.transition_counting import lagged_pairs
 from pyspark.sql import DataFrame, Window
@@ -70,15 +71,21 @@ def girsanov_reweighted_counts_df(
 def girsanov_reweighted_count_matrix(
     df: DataFrame, lagtime: int, n_states: Optional[int] = None, **kw
 ) -> np.ndarray:
-    rows = girsanov_reweighted_counts_df(df, lagtime, **kw).collect()
-    n = n_states or (max(max(r["s_from"], r["s_to"]) for r in rows) + 1)
+    a = dispatch.arrays(girsanov_reweighted_counts_df(df, lagtime, **kw))
+    n = n_states or max(a["s_from"].max(), a["s_to"].max()) + 1
     C = np.zeros((n, n))
-    for r in rows:
-        C[r["s_from"], r["s_to"]] = r["n"]
+    C[a["s_from"], a["s_to"]] = a["n"]
     return C
 
 
 # ------------------------------------------------------------- bootstrap
+
+def _draw_blocks(blocked: DataFrame, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """The sorted distinct ``block_id``s (sorted: ``distinct()``'s order is the
+    shuffle layout's) and as many indices into them drawn with replacement."""
+    ids = np.sort(dispatch.arrays(blocked.select("block_id").distinct())["block_id"])
+    return ids, np.random.default_rng(seed).choice(len(ids), size=len(ids), replace=True)
+
 
 def bootstrap_counts(
     df: DataFrame,
@@ -97,9 +104,7 @@ def bootstrap_counts(
 
     bs = blocksize or max(lagtime, 1)
     blocked = blocksplit(df, blocksize=bs)
-    block_ids = [r["block_id"] for r in blocked.select("block_id").distinct().collect()]
-    rng = np.random.default_rng(seed)
-    drawn = rng.choice(len(block_ids), size=len(block_ids), replace=True)
+    block_ids, drawn = _draw_blocks(blocked, seed)
     mult = np.bincount(drawn, minlength=len(block_ids))
     lut = _local_df(df.sparkSession, 
         [(block_ids[i], int(m)) for i, m in enumerate(mult) if m > 0], ["block_id", "_mult"]
@@ -107,13 +112,12 @@ def bootstrap_counts(
     pairs = lagged_pairs(
         blocked.join(F.broadcast(lut), "block_id"), lagtime, state_col, by=("block_id",)
     )
-    rows = pairs.groupBy(F.col(state_col).alias("s_from"), F.col("s_to")).agg(
+    a = dispatch.arrays(pairs.groupBy(F.col(state_col).alias("s_from"), F.col("s_to")).agg(
         F.sum("_mult").alias("n")
-    ).collect()
-    n = n_states or (max((max(r["s_from"], r["s_to"]) for r in rows), default=-1) + 1)
+    ))
+    n = n_states or max(a["s_from"].max(initial=-1), a["s_to"].max(initial=-1)) + 1
     C = np.zeros((n, n))
-    for r in rows:
-        C[r["s_from"], r["s_to"]] = r["n"]
+    C[a["s_from"], a["s_to"]] = a["n"]
     return C
 
 
@@ -125,9 +129,7 @@ def bootstrap_trajectories_df(df: DataFrame, blocksize: int, seed: int = 42) -> 
     from deeptime_spark.operators.lag import blocksplit
 
     blocked = blocksplit(df, blocksize=blocksize)
-    block_ids = [r["block_id"] for r in blocked.select("block_id").distinct().collect()]
-    rng = np.random.default_rng(seed)
-    drawn = rng.choice(len(block_ids), size=len(block_ids), replace=True)
+    block_ids, drawn = _draw_blocks(blocked, seed)
     lut = _local_df(df.sparkSession, 
         [(block_ids[b], int(i)) for i, b in enumerate(drawn)], ["block_id", "_new_traj"]
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+from deeptime_spark import dispatch
 from deeptime_spark.markov.transition_counting import count_models, lagged_pairs
 
 
@@ -113,11 +114,11 @@ def effective_count_matrix(
         raise ValueError(f"unknown average mode {average!r}")
     C = count_models(df, [lag], n_states=n_states, state_col=state_col)[0].count_matrix
     # every observed transition has an inefficiency: both come from lagged_pairs
-    I = np.zeros_like(C)
-    for r in statistical_inefficiencies_df(
+    a = dispatch.arrays(statistical_inefficiencies_df(
         df, lag, truncate_acf=truncate_acf, mact=mact, state_col=state_col
-    ).collect():
-        I[r["s_from"], r["s_to"]] = r["ineff"]
+    ))
+    I = np.zeros_like(C)
+    I[a["s_from"], a["s_to"]] = a["ineff"]
     if average == "none":
         return I * C
     if average == "all":

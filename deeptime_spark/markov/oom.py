@@ -19,6 +19,7 @@ from typing import Optional
 import numpy as np
 from pyspark.sql import DataFrame
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator
 from deeptime_spark.markov.msm import MarkovStateModel
 from deeptime_spark.markov.transition_counting import (
@@ -153,15 +154,13 @@ class OOMReweightedMSM(Estimator):
 
     def fit(self, df: DataFrame) -> "OOMReweightedMSM":
         tau = self.lagtime
-        rows = transition_counts_df(df, tau, state_col=self.state_col).collect()
-        n = max(max(r["s_from"], r["s_to"]) for r in rows) + 1
+        a = dispatch.arrays(transition_counts_df(df, tau, state_col=self.state_col))
+        n = max(a["s_from"].max(), a["s_to"].max()) + 1
         Ct = np.zeros((n, n))
-        for r in rows:
-            Ct[r["s_from"], r["s_to"]] = r["n"]
-        rows2 = two_step_counts_df(df, tau, state_col=self.state_col).collect()
+        Ct[a["s_from"], a["s_to"]] = a["n"]
+        a = dispatch.arrays(two_step_counts_df(df, tau, state_col=self.state_col))
         C2t = np.zeros((n, n, n))
-        for r in rows2:
-            C2t[r["s0"], r["s1"], r["s2"]] = r["n"]
+        C2t[a["s0"], a["s1"], a["s2"]] = a["n"]
         T, symbols, Ct_sub, oom_vals = oom_estimate_from_counts(
             Ct, C2t, rank_mode=self.rank_mode, tol_rank=self.tol_rank,
             nbs=self.nbs, seed=self.seed, reversible=self.reversible,

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator, Model
-from deeptime_spark.markov.transition_counting import lagged_pairs
+from deeptime_spark.operators.lag import lagged
 
 
 def _logsumexp(a: np.ndarray, axis=None) -> np.ndarray:
@@ -41,10 +41,6 @@ def _logsumexp(a: np.ndarray, axis=None) -> np.ndarray:
     amax = np.where(np.isfinite(amax), amax, 0.0)
     out = np.log(np.sum(np.exp(a - amax), axis=axis)) + np.squeeze(amax, axis=axis)
     return out
-
-
-def _logaddexp(a, b):
-    return np.logaddexp(a, b)
 
 
 def tram_dataset_df(
@@ -83,6 +79,25 @@ def tram_dataset_df(
     return spark.createDataFrame(
         pd.concat(frames, ignore_index=True),
         "traj_id long, t long, state int, therm_state int, bias array<double>",
+    )
+
+
+def _lag_counts(df: DataFrame, lagtime: int, state_col: str, therm_col: str, bias_col: str) -> dict:
+    """Arrays ``k, i, j, n`` from one aggregate: ``n`` samples of ensemble
+    ``k`` in state ``i >= 0`` whose partner ``lagtime`` frames on is in state
+    ``j``. An invalid partner (trajectory tail, negative state) counts under
+    ``j = -1``, so each ``(k, i)``'s rows also sum to its state count.
+    ``w0, w1`` are the least and greatest bias width in each group."""
+    partner = F.when(F.col("s_to") >= 0, F.col("s_to")).otherwise(-1)
+    return dispatch.arrays(
+        lagged(df, {"s_to": (state_col, lagtime)}, by=(therm_col, "traj_id"))
+        .where(F.col(state_col) >= 0)
+        .groupBy(F.col(therm_col).alias("k"), F.col(state_col).alias("i"), partner.alias("j"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size(bias_col)).alias("w0"),
+            F.max(F.size(bias_col)).alias("w1"),
+        )
     )
 
 
@@ -134,35 +149,32 @@ def restrict_connected(df: DataFrame, lagtime: int = 1, state_col: str = "state"
     if connectivity not in ("summed_count_matrix", "post_hoc_RE", "BAR_variance"):
         raise ValueError(f"unknown connectivity {connectivity!r}")
 
-    pair_rows = (
-        lagged_pairs(df, lagtime, state_col, by=(therm_col, "traj_id"))
-        .groupBy(F.col(therm_col).alias("k"), F.col(state_col).alias("i"), F.col("s_to").alias("j"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    if not pair_rows:
+    counts = _lag_counts(df, lagtime, state_col, therm_col, bias_col)
+    pk, pi, pj, pn = (counts[c][counts["j"] >= 0] for c in "kijn")
+    if not len(pi):
         raise ValueError(f"restrict_connected found no valid transition at lagtime {lagtime}")
-    n = max(max(r["i"], r["j"]) for r in pair_rows) + 1
+    n = max(pi.max(), pj.max()) + 1
 
     if connectivity == "summed_count_matrix":
         C = np.zeros((n, n))
-        for r in pair_rows:
-            C[r["i"], r["j"]] += r["n"]
+        np.add.at(C, (pi, pj), pn)
         keep = max(connected_components(C > 0, directed=True), key=len)
     else:
-        K = max(r["k"] for r in pair_rows) + 1
-        # capped per-(markov, therm) bias sample blocks, deterministic order
+        K = int(pk.max()) + 1
+        # capped per-(markov, therm) bias sample blocks of the K ensembles,
+        # each in its window's (traj_id, t) order, which the stable sort keeps
         ws = Window.partitionBy(state_col, therm_col).orderBy("traj_id", "t")
-        srows = (
-            df.where(F.col(state_col) >= 0)
+        s = dispatch.arrays(
+            df.where((F.col(state_col) >= 0) & (F.col(therm_col) < K))
             .withColumn("_rn", F.row_number().over(ws))
             .where(F.col("_rn") <= max_samples_per_state)
-            .select(F.col(state_col).alias("i"), F.col(therm_col).alias("k"), F.col(bias_col))
-            .collect()
+            .select(F.col(state_col).alias("i"), F.col(therm_col).alias("k"), F.col(bias_col).alias("b"))
         )
-        blocks: dict = {}
-        for r in srows:
-            blocks.setdefault((r["i"], r["k"]), []).append(r[bias_col])
+        key = s["i"].astype(np.int64) * K + s["k"]
+        order = np.argsort(key, kind="stable")
+        key = key[order]
+        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        blocks = {divmod(int(c), K): B for c, B in zip(key[starts], np.split(s["b"][order], starts[1:]))}
         test = _post_hoc_re_overlap if connectivity == "post_hoc_RE" else _bar_variance_overlap
         adj = np.zeros((K * n, K * n), dtype=bool)
         # thermodynamic overlap edges: (k, i) -- (l, i)
@@ -171,18 +183,16 @@ def restrict_connected(df: DataFrame, lagtime: int = 1, state_col: str = "state"
                 BK = blocks.get((i, k))
                 if BK is None:
                     continue
-                BK = np.asarray(BK)
                 for l in range(k + 1, K):
                     BL = blocks.get((i, l))
                     if BL is None:
                         continue
-                    if test(BK, np.asarray(BL), k, l, connectivity_factor):
+                    if test(BK, BL, k, l, connectivity_factor):
                         a, b = k * n + i, l * n + i
                         adj[a, b] = adj[b, a] = True
         # intra-ensemble transition edges: (k, i) -- (k, j)
-        for r in pair_rows:
-            a, b = r["k"] * n + r["i"], r["k"] * n + r["j"]
-            adj[a, b] = adj[b, a] = True
+        a, b = pk * n + pi, pk * n + pj
+        adj[a, b] = adj[b, a] = True
         comp = max(connected_components(adj, directed=False), key=len)
         keep = sorted({int(node) % n for node in comp})
 
@@ -240,12 +250,11 @@ class _SparkBiasStore:
                 out_m.append(float(-_logsumexp(-divisor)))
             yield pd.DataFrame({"i": out_i, "f": out_f, "m": out_m})
 
-        rows = self.df.mapInPandas(upd, schema="i integer, f array<double>, m double").collect()
+        a = dispatch.arrays(self.df.mapInPandas(upd, schema="i integer, f array<double>, m double"))
         f_new = np.full((K, N), np.inf)
         markov = np.full(N, np.inf)
-        for r in rows:
-            f_new[:, r["i"]] = r["f"]
-            markov[r["i"]] = r["m"]
+        f_new[:, a["i"]] = a["f"].T
+        markov[a["i"]] = a["m"]
         return f_new, markov
 
     def unpersist(self):
@@ -307,47 +316,37 @@ class TRAM(Estimator):
     # ------------------------------------------------------- Spark stages
 
     def _collect_counts(self, df: DataFrame):
-        sc, tc = self.state_col, self.therm_col
-        pairs = (
-            lagged_pairs(df, self.lagtime, sc, by=(tc, "traj_id"))
-            .groupBy(F.col(tc).alias("k"), F.col(sc).alias("i"), F.col("s_to").alias("j"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        scounts = (
-            df.where(F.col(sc) >= 0)
-            .groupBy(F.col(tc).alias("k"), F.col(sc).alias("i"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        if not scounts:
+        """Transition counts ``(K, N, N)`` and state counts ``(K, N)``.
+        Raises ``ValueError`` unless every sample's bias holds one energy
+        per ensemble, checked here so both bias paths fail alike."""
+        a = _lag_counts(df, self.lagtime, self.state_col, self.therm_col, self.bias_col)
+        k, i, j, n = (a[c] for c in "kijn")
+        if not len(i):
             raise ValueError("TRAM found no sample with state >= 0 to count")
-        K = max(r["k"] for r in scounts) + 1
-        N = max(r["i"] for r in scounts) + 1
+        K, N = k.max() + 1, i.max() + 1
+        if a["w0"].min() != K or a["w1"].max() != K:
+            raise ValueError(
+                f"TRAM: bias widths {a['w0'].min()}..{a['w1'].max()} of the samples with "
+                f"state >= 0 differ from their {K} ensembles"
+            )
         C = np.zeros((K, N, N))
-        for r in pairs:
-            C[r["k"], r["i"], r["j"]] = r["n"]
+        C[k[j >= 0], i[j >= 0], j[j >= 0]] = n[j >= 0]
         state_counts = np.zeros((K, N))
-        for r in scounts:
-            state_counts[r["k"], r["i"]] = r["n"]
+        np.add.at(state_counts, (k, i), n)
         return C, state_counts
 
-    def _collect_bias(self, df: DataFrame, K: int, N: int):
+    def _collect_bias(self, df: DataFrame, N: int):
         # deterministic (state, traj, t) order: the per-state logsumexp
         # blocks then sum in a reproducible order, making the whole driver
         # iteration replayable by an external oracle (and stable across
         # partition layouts)
         sc, bc = self.state_col, self.bias_col
-        samples = (
+        a = dispatch.arrays(
             df.where(F.col(sc) >= 0)
-            .select(F.col(sc).alias("i"), F.col("traj_id"), F.col("t"), F.col(bc))
-            .orderBy("i", "traj_id", "t")
-            .collect()
+            .orderBy(sc, "traj_id", "t")
+            .select(F.col(sc).alias("i"), F.col(bc).alias("b"))
         )
-        bias_by_state = [[] for _ in range(N)]
-        for r in samples:
-            bias_by_state[r["i"]].append(r[bc])
-        return [np.array(b) if b else np.zeros((0, K)) for b in bias_by_state]
+        return np.split(a["b"], np.searchsorted(a["i"], np.arange(1, N)))
 
     # ------------------------------------------------------ driver updates
 
@@ -363,7 +362,7 @@ class TRAM(Estimator):
             with np.errstate(divide="ignore"):
                 diag_term = np.log(np.diag(C[k]))
             expo = (log_v[k][None, :] - f[k][:, None]) - (log_v[k][:, None] - f[k][None, :])
-            divisor = _logaddexp(expo, 0.0)
+            divisor = np.logaddexp(expo, 0.0)
             with np.errstate(divide="ignore"):
                 terms = np.where(Csym > 0, np.log(np.maximum(Csym, 1e-300)) - divisor, -np.inf)
             np.fill_diagonal(terms, diag_term)
@@ -380,7 +379,7 @@ class TRAM(Estimator):
             Csym = C[k] + C[k].T
             with np.errstate(divide="ignore"):
                 diag_term = np.log(np.diag(C[k])) + f[k]
-            divisor = _logaddexp(
+            divisor = np.logaddexp(
                 log_v[k][None, :] - f[k][:, None], log_v[k][:, None] - f[k][None, :]
             )
             with np.errstate(divide="ignore"):
@@ -395,7 +394,7 @@ class TRAM(Estimator):
             with np.errstate(divide="ignore"):
                 extra = np.where(NC > 0, np.log(np.maximum(NC, 1e-300)) + f[k], -np.inf)
             has = state_counts[k] > 0
-            mod[k, has] = _logaddexp(_logsumexp(terms[has], axis=1), extra[has])
+            mod[k, has] = np.logaddexp(_logsumexp(terms[has], axis=1), extra[has])
         return mod
 
     @staticmethod
@@ -422,7 +421,7 @@ class TRAM(Estimator):
         T = np.zeros((K, N, N))
         for k in range(K):
             Csym = C[k] + C[k].T
-            divisor = _logaddexp(
+            divisor = np.logaddexp(
                 log_v[k][None, :] - f[k][:, None], log_v[k][:, None] - f[k][None, :]
             )
             with np.errstate(invalid="ignore", over="ignore"):
@@ -444,7 +443,7 @@ class TRAM(Estimator):
         C, state_counts = self._collect_counts(df)
         K, N = state_counts.shape
         if dispatch.on_driver("tram_bias", int(state_counts.sum())):
-            self._model = self.fit_arrays(C, state_counts, self._collect_bias(df, K, N))
+            self._model = self.fit_arrays(C, state_counts, self._collect_bias(df, N))
         else:
             store = _SparkBiasStore(df, self.state_col, self.bias_col, K, N)
             self._model = self.fit_arrays(C, state_counts, store=store)

@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator, Model
 from deeptime_spark.operators.lag import lagged
 
@@ -34,17 +35,12 @@ def count_states(df: DataFrame, state_col: str = "state", ignore_negative: bool 
     """Histogram of state visits (reference markov/_util.py:25-55).
 
     Returns a dense vector indexed by state; -1 (unassigned) is excluded
-    when ignore_negative.
+    when ignore_negative, else a negative state raises ValueError, as in
+    the reference (``np.bincount``).
     """
-    grouped = df.groupBy(state_col).count().collect()
-    pairs = [(r[state_col], r["count"]) for r in grouped if r[state_col] is not None]
-    if ignore_negative:
-        pairs = [(s, c) for s, c in pairs if s >= 0]
-    n = max(s for s, _ in pairs) + 1 if pairs else 0
-    out = np.zeros(n, dtype=np.int64)
-    for s, c in pairs:
-        out[s] = c
-    return out
+    keep = F.col(state_col) >= 0 if ignore_negative else F.col(state_col).isNotNull()
+    a = dispatch.arrays(df.where(keep).groupBy(state_col).count())
+    return np.bincount(a[state_col], weights=a["count"]).astype(np.int64)
 
 
 class TransitionCountModel(Model):
@@ -69,21 +65,16 @@ class TransitionCountModel(Model):
         self.lagtime = lagtime
         self.state_histogram = state_histogram
         self.state_symbols = (
-            state_symbols if state_symbols is not None else np.arange(self._n(count_matrix))
+            state_symbols if state_symbols is not None else np.arange(count_matrix.shape[0])
         )
-
-    @staticmethod
-    def _n(C) -> int:
-        return C.shape[0]
 
     @property
     def n_states(self) -> int:
-        return self._n(self.count_matrix)
+        return self.count_matrix.shape[0]
 
     @property
     def total_count(self) -> float:
-        C = self.count_matrix
-        return float(C.sum())
+        return float(self.count_matrix.sum())
 
     def connected_sets(self, directed: bool = True) -> list[np.ndarray]:
         """Connected components of the count graph, largest first
@@ -214,22 +205,24 @@ def count_models(
     state_col: str = "state",
 ) -> list[TransitionCountModel]:
     """One ``TransitionCountModel`` per lagtime, all counted in ONE Spark
-    pass (``_lag_counts_df``, one collect) over a dtraj frame
+    pass (``_lag_counts_df``, one fetch) over a dtraj frame
     ``(traj_id, t, state)``. Negative states (unassigned, reference :148)
     are excluded; count_mode is one of ``COUNT_MODES``."""
     if count_mode not in COUNT_MODES:
         raise ValueError(f"count_models supports {COUNT_MODES}, got {count_mode!r}")
     lags = list(dict.fromkeys(lagtimes))
-    rows = _lag_counts_df(df, lags, count_mode, state_col).collect() if lags else []
-    n = n_states or max((r["s_from"] for r in rows), default=-1) + 1
+    if not lags:
+        return []
+    a = dispatch.arrays(_lag_counts_df(df, lags, count_mode, state_col).fillna(-1, ["s_to"]))
+    lag, s_from, s_to, cnt = a["lag"], a["s_from"], a["s_to"], a["n"]
+    n = n_states or s_from.max(initial=-1) + 1
     hist = np.zeros(n, dtype=np.int64)
+    np.add.at(hist, s_from[lag == lags[0]], cnt[lag == lags[0]])
     C = {tau: np.zeros((n, n), dtype=np.float64) for tau in lags}
-    for r in rows:
-        if r["lag"] == lags[0]:
-            hist[r["s_from"]] += r["n"]
-        if r["s_to"] is not None:
-            scale = 1.0 / r["lag"] if count_mode == "sliding-effective" else 1.0
-            C[r["lag"]][r["s_from"], r["s_to"]] = r["n"] * scale
+    for tau in lags:
+        pair = (lag == tau) & (s_to >= 0)
+        scale = 1.0 / tau if count_mode == "sliding-effective" else 1.0
+        C[tau][s_from[pair], s_to[pair]] = cnt[pair] * scale
     return [
         TransitionCountModel(C[tau], counting_mode=count_mode, lagtime=tau, state_histogram=hist)
         for tau in lagtimes

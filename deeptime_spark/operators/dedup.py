@@ -785,7 +785,7 @@ def embedding_near_duplicates(
 
 # ------------------------------------------------- duplicate clustering
 
-def _union_find_local(pairs: list) -> dict:
+def _union_find_local(pairs) -> dict:
     """Driver union-find with path compression; component = min member."""
     parent: dict = {}
 
@@ -842,19 +842,19 @@ def connected_components(
     """
     spark = edges.sparkSession
     # materialize the (possibly expensive) upstream pair pipeline exactly
-    # ONCE via persist+count. Never limit().collect() an unpersisted
+    # ONCE via persist+count. Never fetch a limit() of an unpersisted
     # pipeline here: Spark's incremental collect-limit starts with one
     # partition and re-executes the whole upstream as it widens — on an
     # LSH+verify pipeline that multiplies the dominant cost several times.
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
     n_edges = e0.count()
     if dispatch.on_driver("union_find", n_edges):
-        # union-find needs neither symmetrized nor distinct edges: collect
+        # union-find needs neither symmetrized nor distinct edges: fetch
         # the raw pairs from cache and solve on the driver — no
         # union/distinct shuffle, bit-identical output.
-        head = e0.collect()
+        a = dispatch.arrays(e0)
         e0.unpersist()
-        comp = _union_find_local([(r["a"], r["b"]) for r in head])
+        comp = _union_find_local(zip(a["a"].tolist(), a["b"].tolist()))
         return _local_df(spark, 
             sorted(comp.items()), "node long, component long"
         )

@@ -496,11 +496,8 @@ def triangle_counts(
         # integer kernel is bit-identical by construction. Falls through
         # to the distributed join when the wedge volume exceeds the
         # driver budget.
-        pdf = und.toPandas()
-        res = _driver_triangle_counts(
-            pdf["a"].to_numpy().astype("int64"),
-            pdf["b"].to_numpy().astype("int64"),
-        )
+        a = dispatch.arrays(und)
+        res = _driver_triangle_counts(a["a"].astype("int64"), a["b"].astype("int64"))
         if res is not None:
             und.unpersist()
             spark = edges.sparkSession
@@ -728,14 +725,14 @@ def label_propagation(
         # aggregated relation replaces n_iter x (join + two aggregates
         # + localCheckpoint); the all-integer synchronous vote rule is
         # replayed exactly, so output is bit-identical at any layout
-        pdf = und.toPandas()
+        a = dispatch.arrays(und)
         und.unpersist()
         return _local_df(
             spark,
             _driver_label_propagation(
-                pdf["a"].to_numpy().astype("int64"),
-                pdf["b"].to_numpy().astype("int64"),
-                pdf["w"].to_numpy().astype("int64"),
+                a["a"].astype("int64"),
+                a["b"].astype("int64"),
+                a["w"].astype("int64"),
                 n_iter,
             ),
             "node long, label long",
@@ -826,13 +823,13 @@ def k_core(
         # the numpy peel is bit-identical to the distributed loop and
         # replaces per-round (2 semi-joins + degree aggregate +
         # localCheckpoint + convergence count) with one Arrow collect
-        pdf = base.toPandas()
+        a = dispatch.arrays(base)
         base.unpersist()
         return _local_df(
             spark,
             _driver_k_core(
-                pdf["a"].to_numpy().astype("int64"),
-                pdf["b"].to_numpy().astype("int64"),
+                a["a"].astype("int64"),
+                a["b"].astype("int64"),
                 k,
                 max_iter,
             ),
@@ -951,13 +948,13 @@ def bfs_distances(
         # point, so the numpy level-synchronous BFS is bit-identical
         # and replaces up to max_depth x (frontier join + anti-join +
         # two localCheckpoints) with one Arrow collect
-        pdf = und.toPandas()
+        a = dispatch.arrays(und)
         und.unpersist()
         return _local_df(
             spark,
             _driver_bfs(
-                pdf["u"].to_numpy().astype("int64"),
-                pdf["v"].to_numpy().astype("int64"),
+                a["u"].astype("int64"),
+                a["v"].astype("int64"),
                 sources,
                 max_depth,
             ),
@@ -1044,15 +1041,8 @@ def _content_pivots(nodes: DataFrame, k: int, tag: str) -> list[int]:
     xxhash64 values (ties on id). Layout-free, replayable by the
     engine-independent hash replica, and independent of graph structure
     — so unbiased like a uniform draw. One bounded TakeOrdered."""
-    return [
-        int(r["node"])
-        for r in nodes.orderBy(
-            F.xxhash64(F.concat(F.col("node").cast("string"), F.lit(tag))),
-            F.col("node"),
-        )
-        .limit(k)
-        .collect()
-    ]
+    h = F.xxhash64(F.concat(F.col("node").cast("string"), F.lit(tag)))
+    return dispatch.arrays(nodes.orderBy(h, "node").select("node").limit(k))["node"].tolist()
 
 
 def betweenness_centrality(

@@ -17,6 +17,7 @@ from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
+from deeptime_spark import dispatch
 from deeptime_spark.local_relation import local_df as _local_df
 from deeptime_spark.operators.moments import feature_dim
 from pyspark.sql import Column, DataFrame, Window
@@ -345,16 +346,8 @@ def _content_sample(corpus: DataFrame, id_col: str, vec_col: str, n: int) -> np.
     independent of partitioning/layout, reproducible by any engine, and
     no corpus-size pass (TakeOrderedAndProject heap, not a full sort)."""
     key = F.md5(F.col(id_col).cast("string"))
-    return np.asarray(
-        [
-            r[0]
-            for r in corpus.select(F.col(vec_col), key.alias("_h"))
-            .orderBy("_h")
-            .limit(n)
-            .collect()
-        ],
-        dtype=np.float64,
-    )
+    sample = corpus.select(F.col(vec_col), key.alias("_h")).orderBy("_h").limit(n)
+    return np.asarray(dispatch.arrays(sample.select(vec_col))[vec_col], dtype=np.float64)
 
 
 def _lloyd(sample: np.ndarray, n_centers: int, iters: int, seed: int) -> np.ndarray:
@@ -631,31 +624,25 @@ def probe_ivf_index(
     fails loudly instead of silently materializing an unbounded frame;
     for corpus-scale query sets (all-pairs / batch re-ranking) use
     :func:`ivf_topk`, which keeps both sides distributed."""
-    qrows = (
-        queries.select(
-            F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec")
-        )
+    qa = dispatch.arrays(
+        queries.select(F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec"))
         .limit(max_batch + 1)
-        .collect()
     )
-    if len(qrows) > max_batch:
+    if len(qa["_qid"]) > max_batch:
         raise ValueError(
             f"probe_ivf_index is a serving-side probe over a bounded "
             f"request batch (> {max_batch} query rows); for "
             f"corpus-scale query sets use ivf_topk, which keeps the "
             f"query side distributed"
         )
-    crows = spark.read.parquet(f"{path}/quantizer").collect()
-    centers = np.zeros((len(crows), len(crows[0]["center"])))
-    for r in crows:
-        centers[int(r["cell"])] = r["center"]
+    q = dispatch.arrays(spark.read.parquet(f"{path}/quantizer"))
+    centers = q["center"][np.argsort(q["cell"])]
     probe_rows = []
     cells = set()
-    for r in qrows:
-        qv = np.asarray(r["_qvec"], dtype=np.float64)
+    for qid, qv in zip(qa["_qid"].tolist(), np.asarray(qa["_qvec"], dtype=np.float64)):
         d2 = ((centers - qv) ** 2).sum(axis=1)
         for cell in np.argsort(d2)[:n_probe]:
-            probe_rows.append((r["_qid"], [float(v) for v in qv], int(cell)))
+            probe_rows.append((qid, qv.tolist(), int(cell)))
             cells.add(int(cell))
     lists = spark.read.parquet(f"{path}/lists").where(
         F.col("_cell").isin(sorted(cells))

@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from deeptime_spark import dispatch
+
 
 def bin_column(c: Column, v0: float, v1: float, n_bins: int) -> Column:
     """Uniform bin index in [0, n_bins): floor((x - v0)/dx), clipped so the
@@ -74,11 +76,10 @@ def histogram2d(
     weight_col: Optional[str] = None,
 ) -> np.ndarray:
     """Dense (bins, bins) histogram matrix on the driver."""
-    rows = histogram2d_df(df, x_col, y_col, bins, x_range, y_range, weight_col).collect()
+    a = dispatch.arrays(histogram2d_df(df, x_col, y_col, bins, x_range, y_range, weight_col))
     bins_x, bins_y = bins if isinstance(bins, tuple) else (bins, bins)
     H = np.zeros((bins_x, bins_y))
-    for r in rows:
-        H[int(r["bin_x"]), int(r["bin_y"])] = float(r["hist_count"])
+    H[a["bin_x"], a["bin_y"]] = a["hist_count"]
     return H
 
 

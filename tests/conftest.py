@@ -1,5 +1,7 @@
+import ast
 import os
 import re
+from collections import Counter
 from pathlib import Path
 
 import numpy as np
@@ -41,6 +43,30 @@ def matching_defs(pattern: str, under: str = "deeptime_spark") -> set[tuple[str,
                 scope = re.match(r"(?:def|class) (\w+)", line).group(1)
             if re.search(pattern, line):
                 found.add((path, scope))
+    return found
+
+
+def matching_scopes(pattern: str, under: str = "deeptime_spark") -> Counter:
+    """How many source lines under ``under`` match the regex ``pattern``, by
+    ``(path, innermost def or class)``; nested scopes are dotted
+    (``Class.method.inner``), module-level lines are ``None``."""
+    found = Counter()
+    for path, text in python_sources(under).items():
+        scopes = []  # (first line, last line, dotted name), outer before inner
+
+        def visit(node, prefix):
+            for child in ast.iter_child_nodes(node):
+                name = prefix
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    name = f"{prefix}.{child.name}" if prefix else child.name
+                    scopes.append((child.lineno, child.end_lineno, name))
+                visit(child, name)
+
+        visit(ast.parse(text), "")
+        for n, line in enumerate(text.splitlines(), 1):
+            if re.search(pattern, line):
+                inner = [name for first, last, name in scopes if first <= n <= last]
+                found[(path, inner[-1] if inner else None)] += 1
     return found
 
 

@@ -77,6 +77,25 @@ def test_bootstrap_trajectories_df(spark, rng):
     assert len({r["traj_id"] for r in rows}) <= 10
 
 
+def test_bootstraps_draw_the_same_blocks_at_any_shuffle_layout(spark):
+    # distinct() orders the block ids by the shuffle layout; the draw must not
+    dtrajs = [np.random.default_rng(s).integers(0, 3, size=120) for s in range(3)]
+    df = dtraj_from_arrays(spark, dtrajs)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    counts, trajs = [], []
+    try:
+        for partitions in (4, 7, 1):
+            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+            counts.append(bootstrap_counts(df, lagtime=1, blocksize=10, seed=1, n_states=3))
+            out = bootstrap_trajectories_df(df, blocksize=10, seed=1)
+            trajs.append(sorted(tuple(r) for r in out.select("traj_id", "t", "state").collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for C, rows in zip(counts[1:], trajs[1:]):
+        np.testing.assert_array_equal(C, counts[0])
+        assert rows == trajs[0]
+
+
 def test_rate_matrix_roundtrip():
     K_true = np.array([[-0.3, 0.2, 0.1], [0.4, -0.5, 0.1], [0.05, 0.15, -0.2]])
     dt = 0.1

@@ -69,6 +69,17 @@ def test_count_states_histogram(spark):
     np.testing.assert_array_equal(hist, [2, 3, 1])
 
 
+def test_count_states_raises_on_negative_states_unless_ignored(spark):
+    # states 0, 1, 2 once each and three unassigned (-1) frames: the -1
+    # count once landed in state 2's slot through numpy's negative index
+    df = dtraj_from_arrays(spark, [np.array([0, -1, 1, -1, 2, -1])])
+    np.testing.assert_array_equal(count_states(df), [1, 1, 1])
+    with pytest.raises(ValueError, match="negative"):
+        count_states(df, ignore_negative=False)
+    pos = dtraj_from_arrays(spark, [np.array([0, 1, 2, 2])])
+    np.testing.assert_array_equal(count_states(pos, ignore_negative=False), [1, 1, 2])
+
+
 def test_pairs_do_not_cross_trajectories(spark):
     df = dtraj_from_arrays(spark, [np.array([0, 0]), np.array([1, 1])])
     C = TransitionCountEstimator(lagtime=1).fit(df).fetch_model().count_matrix

@@ -1,6 +1,8 @@
 """TRAM tests: exact recovery on a state-dependent-bias two-ensemble
 system where every quantity has a closed form."""
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -105,6 +107,19 @@ def test_tram_spark_bias_store_matches_driver(spark, tram_df):
     for attr in ("biased_conf_energies", "markov_state_energies",
                  "therm_state_energies", "transition_matrices"):
         np.testing.assert_array_equal(getattr(m_spark, attr), getattr(m_driver, attr))
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_tram_bias_wider_than_the_counted_ensembles_raises_on_both_paths(spark, distributed):
+    """Ensemble 2 has no sample with state >= 0, so the counts see two
+    ensembles while every bias holds three energies."""
+    from deeptime_spark import dispatch
+
+    rows = [(k, k, t, t % 2 if k < 2 else -1, [0.0, 0.1 * k, 0.2]) for k in range(3) for t in range(6)]
+    df = spark.createDataFrame(rows, "therm_state int, traj_id long, t long, state int, bias array<double>")
+    path = dispatch.force("distributed") if distributed else contextlib.nullcontext()
+    with path, pytest.raises(ValueError, match="bias widths 3..3 .* their 2 ensembles"):
+        TRAM(lagtime=1, maxiter=5).fit(df)
 
 
 def test_restrict_connected_without_valid_transition_raises_value_error(spark):
