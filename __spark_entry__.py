@@ -3116,7 +3116,7 @@ def _q_dedup_components(spark, sf_dir):
 
     docs = _read(spark, sf_dir, "documents")
     # same candidate materialization as dedup_verified_pairs: the pair
-    # pipeline is consumed by connected_components' own persist+count,
+    # pipeline is consumed by connected_components' own persist+fetch,
     # and the candidate subtree must not re-execute per join consumer
     cands = minhash_lsh_candidates(
         docs, n_hashes=32, bands=8, with_est=False
@@ -3359,33 +3359,34 @@ def _q_event_range_frame(spark, sf_dir):
 
 @query(bench=True, scale=True, dispatch=True)
 def _q_hmm_viterbi_events(spark, sf_dir):
-    """2-hidden-state HMM over the 5-symbol event dtraj: Baum-Welch then
-    per-trajectory viterbi decode, each on the driver inside the ``hmm``
-    dispatch bound (one fetch each) and as mapInPandas passes above it.
-    The trajectory is persisted pre-partitioned by traj_id ONCE and shared
-    by init counting, the fit and the viterbi pass — no re-derivation of
-    the event window per stage."""
+    """2-hidden-state HMM over the 5-symbol event dtraj: init counting,
+    Baum-Welch and per-trajectory viterbi decode. Inside the ``hmm``
+    dispatch bound the trajectory is fetched ONCE and all three run on the
+    driver from that fetch; above it the trajectory is persisted
+    pre-partitioned by traj_id and shared by the init counting, the fit's
+    and the decode's mapInPandas passes."""
+    from deeptime_spark import dispatch
     from deeptime_spark.hmm import MaximumLikelihoodHMM, init_discrete_metastable_from_data
 
-    # explicit partition count: AQE would coalesce the small window
-    # shuffle to ~1 partition, serializing the Python E-step/FFBS batches —
-    # pin parallelism while keeping trajectories co-located by traj_id
-    traj = (
-        _event_traj(spark, sf_dir).select("traj_id", "t", "state")
-        .repartition(spark.sparkContext.defaultParallelism, "traj_id").persist()
-    )
+    traj = _event_traj(spark, sf_dir).select("traj_id", "t", "state")
+    data = dispatch.fetch("hmm", traj)
+    if data is None:
+        # explicit partition count: AQE would coalesce the small window
+        # shuffle to ~1 partition, serializing the Python E-step batches —
+        # pin parallelism while keeping trajectories co-located by traj_id
+        data = traj.repartition(spark.sparkContext.defaultParallelism, "traj_id").persist()
     init = init_discrete_metastable_from_data(
-        traj, n_hidden_states=2, lagtime=1, n_observation_states=5
+        data, n_hidden_states=2, lagtime=1, n_observation_states=5
     )
     model = (
         MaximumLikelihoodHMM(init, lagtime=1, maxit=3, assume_colocated=True)
-        .fit(traj)
+        .fit(data)
         .fetch_model()
     )
-    # the returned plan reads the cached trajectory; the cache is left for
-    # LRU eviction because the caller still has to execute the plan (an
-    # eager collect+recreate here costs far more than the cached partitions)
-    out = model.viterbi_df(traj, colocated=True)
+    # above the bound the returned plan reads the cached trajectory; the
+    # cache is left for LRU eviction because the caller still has to
+    # execute the plan
+    out = model.viterbi_df(data, colocated=True)
     return out.select(
         "traj_id", "t", F.col("hidden_state").cast("long").alias("hidden_state")
     )
@@ -3394,7 +3395,10 @@ def _q_hmm_viterbi_events(spark, sf_dir):
 @query
 def _q_bayes_hmm_events(spark, sf_dir):
     """Bayesian HMM posterior (batched-FFBS Gibbs) over the event dtraj:
-    posterior mean + 95% CI of the hidden transition matrix."""
+    posterior mean + 95% CI of the hidden transition matrix. Inside the
+    ``hmm`` dispatch bound one fetch serves the init counts and the ML
+    prior; the Gibbs sweeps read the persisted trajectory."""
+    from deeptime_spark import dispatch
     from deeptime_spark.hmm import (
         BayesianHMM,
         MaximumLikelihoodHMM,
@@ -3408,12 +3412,15 @@ def _q_bayes_hmm_events(spark, sf_dir):
         _event_traj(spark, sf_dir).select("traj_id", "t", "state")
         .repartition(spark.sparkContext.defaultParallelism, "traj_id").persist()
     )
+    # the fetch is the action that fills traj's cache
+    local = dispatch.fetch("hmm", traj)
+    data = traj if local is None else local
     init = init_discrete_metastable_from_data(
-        traj, n_hidden_states=2, lagtime=1, n_observation_states=5
+        data, n_hidden_states=2, lagtime=1, n_observation_states=5
     )
     prior = (
         MaximumLikelihoodHMM(init, lagtime=1, maxit=2, assume_colocated=True)
-        .fit(traj)
+        .fit(data)
         .fetch_model()
     )
     post = BayesianHMM(prior, n_samples=10, seed=42, assume_colocated=True).fit(traj).fetch_model()

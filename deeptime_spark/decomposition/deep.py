@@ -424,26 +424,27 @@ def _collocate(df: DataFrame, traj_col: str, time_col: str, x_cols: List[str]):
     return sel.repartition("_tid").sortWithinPartitions("_tid", "_t").persist()
 
 
-# Below the "deep_fit" dispatch bound one Arrow collect plus the driver
+# Below the "deep_fit" dispatch bound one bounded Arrow fetch plus the driver
 # replay (*_train_arrays: the SAME per-traj kernels and sorted reduces, so
 # bit-identical results) replaces n_epochs x (broadcast + mapInPandas +
 # collect) round trips whose inputs the driver could hold outright.
 
 
-def _driver_traj_arrays(sel: DataFrame, d: int) -> List[tuple]:
-    """[(traj_id, (T, d) float64 X)] in sorted-trajectory order from one
-    Arrow collect of the projected frame — the numpy mirror of
-    ``_collocate`` + ``_partition_traj_arrays`` (stable time sort within
-    each trajectory, same casts), bounded by the "deep_fit" dispatch bound."""
-    pdf = sel.toPandas()
-    if pdf.empty:
+def _driver_traj_arrays(a: dict, d: int) -> List[tuple]:
+    """[(traj_id, (T, d) float64 X)] in sorted-trajectory order from the
+    fetched projection (``dispatch.fetch`` of ``_traj_sel``) — the numpy
+    mirror of ``_collocate`` + ``_partition_traj_arrays``: stable time sort
+    within each trajectory, the same casts, and the Fortran-ordered blocks
+    pandas' ``to_numpy`` hands the distributed kernels."""
+    tid, t = a["_tid"], a["_t"]
+    if not len(tid):
         return []
-    pdf = pdf.sort_values(["_tid", "_t"], kind="mergesort")
-    xcols = [f"_x{i}" for i in range(d)]
-    return [
-        (int(tid), grp[xcols].to_numpy(dtype=np.float64))
-        for tid, grp in pdf.groupby("_tid", sort=True)
-    ]
+    order = np.lexsort((t, tid))
+    tid = tid[order]
+    X = np.column_stack([a[f"_x{i}"][order] for i in range(d)]).astype(np.float64)
+    starts = np.flatnonzero(np.r_[True, tid[1:] != tid[:-1]])
+    ends = np.r_[starts[1:], len(tid)]
+    return [(int(tid[b]), np.asfortranarray(X[b:e])) for b, e in zip(starts, ends)]
 
 
 def _partition_traj_arrays(batches: Iterator[pd.DataFrame], d: int):
@@ -519,9 +520,10 @@ class VAMPNet(Estimator):
         k = int(self.layers[-1])
         tau = self.lagtime
         sel = _traj_sel(df, traj_col, time_col, list(x_cols))
-        if dispatch.on_driver("deep_fit", sel.count() * max(d, 1)):
+        local = dispatch.fetch("deep_fit", sel, max(d, 1))
+        if local is not None:
             params, scores = vampnet_train_arrays(
-                _driver_traj_arrays(sel, d), self.layers, tau,
+                _driver_traj_arrays(local, d), self.layers, tau,
                 self.n_epochs, self.lr, self.seed, self.epsilon,
             )
             self._model = VAMPNetModel(params, self.layers, scores, self.lagtime)
@@ -653,9 +655,10 @@ class TAE(Estimator):
             raise ValueError(f"layers[0]={self.layers[0]} != len(x_cols)={d}")
         tau = self.lagtime
         sel = _traj_sel(df, traj_col, time_col, list(x_cols))
-        if dispatch.on_driver("deep_fit", sel.count() * max(d, 1)):
+        local = dispatch.fetch("deep_fit", sel, max(d, 1))
+        if local is not None:
             params, losses = tae_train_arrays(
-                _driver_traj_arrays(sel, d), self.layers, tau,
+                _driver_traj_arrays(local, d), self.layers, tau,
                 self.n_epochs, self.lr, self.seed,
             )
             self._model = TAEModel(
@@ -866,9 +869,10 @@ class TVAE(Estimator):
         d = len(x_cols)
         tau, beta, seed = self.lagtime, self.beta, self.seed
         sel = _traj_sel(df, traj_col, time_col, list(x_cols))
-        if dispatch.on_driver("deep_fit", sel.count() * max(d, 1)):
+        local = dispatch.fetch("deep_fit", sel, max(d, 1))
+        if local is not None:
             params, losses = tvae_train_arrays(
-                _driver_traj_arrays(sel, d), d, self.hidden, self.bottleneck,
+                _driver_traj_arrays(local, d), d, self.hidden, self.bottleneck,
                 tau, self.n_epochs, beta, self.lr, seed,
             )
             self._model = TVAEModel(params, losses, self.lagtime)

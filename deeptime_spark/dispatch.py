@@ -1,4 +1,5 @@
-"""The one place that says whether a gated operator finishes on the driver.
+"""The one place that says whether a gated operator finishes on the driver,
+and the one Arrow path that brings its input there.
 
 An input small enough to collect finishes on the driver with numpy: short
 iterative Spark loops are bound by per-round scheduling, not data. Both
@@ -6,6 +7,13 @@ paths return bit-identical results (tests/test_forced_distributed.py), so
 a bound only moves time. ``force("distributed")`` sends every decision to
 the distributed path; its only state is ``DEEPTIME_DISPATCH=distributed``,
 read at each decision, so a subprocess or ``monkeypatch.setenv`` works too.
+
+``arrays`` fetches a frame as numpy columns in one Arrow job. ``fetch`` is
+the bounded form every size-gated site uses: it fetches at most the
+bound's rows plus one and decides from the count it got back, so a site
+runs one job where it ran a ``count()`` and then a collect. Driver results
+go back to Spark through ``local_relation.local_df`` as a JVM local
+relation, so the hop is one Arrow transfer each way.
 """
 
 from __future__ import annotations
@@ -70,16 +78,20 @@ def on_driver(decision: str, size: int) -> bool:
     return not mode and lo <= size <= hi
 
 
-def fetch(decision: str, df):
-    """One bounded fetch for a decision sized in rows: ``df`` as pandas when
-    it has at most the bound's rows, else None. Forced distributed returns
-    None without running a job; otherwise it costs one job of at most
-    bound + 1 rows, instead of a ``count()`` followed by a collect."""
+def fetch(decision: str, df, width: int = 1):
+    """The one bounded fetch: ``dispatch.arrays(df)`` when ``df`` has at most
+    the bound's rows, else None. ``width`` converts a bound counted in
+    elements (``deep_fit``: rows x features) to rows. Forced distributed
+    returns None without running a job; otherwise it costs one Arrow job of
+    at most ``hi // width + 1`` rows, and the fetched row count decides, so
+    no ``count()`` runs before it. On a persisted ``df`` the fetch is the
+    action that fills the cache for a distributed fallback."""
     lo, hi = BOUNDS[decision]
     if not on_driver(decision, lo):
         return None
-    pdf = df.limit(hi + 1).toPandas()
-    return pdf if on_driver(decision, len(pdf)) else None
+    a = arrays(df.limit(hi // width + 1))
+    n = len(next(iter(a.values())))
+    return a if on_driver(decision, n * width) else None
 
 
 def arrays(df) -> dict:

@@ -9,7 +9,9 @@ batched ``forward_backward_batch``/``viterbi_batch`` run many trajectories
 in one vectorized time loop and are lane-exact: a trajectory's result is
 bit-identical alone or in any batch. So a Spark partition (mapInPandas)
 and the driver (inputs inside ``dispatch.BOUNDS["hmm"]``) compute the
-same numbers, and the model's DataFrame methods pick either path.
+same numbers, and the model's DataFrame methods pick either path. They
+also take a trajectory already fetched with ``dispatch.fetch`` (numpy
+columns traj_id, t, obs), as deeptime's estimators take numpy dtrajs.
 """
 
 from __future__ import annotations
@@ -18,8 +20,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -30,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from deeptime_spark import dispatch
+from deeptime_spark.local_relation import columns_df
 
 
 def forward_backward(A: np.ndarray, pobs: np.ndarray, pi: np.ndarray):
@@ -221,30 +223,35 @@ def viterbi_batch(A: np.ndarray, pobs_list: list, pi: np.ndarray) -> list:
     return paths
 
 
+def _groups(traj: np.ndarray, t: np.ndarray, obs: np.ndarray) -> list:
+    """Split (traj_id, t, obs) columns into per-trajectory (traj_id,
+    t_array, obs_array) groups in (traj_id, t) order."""
+    order = np.lexsort((t, traj))
+    traj, t, obs = traj[order], t[order], obs[order]
+    bounds = np.flatnonzero(np.r_[True, traj[1:] != traj[:-1]]) if len(traj) else []
+    ends = np.r_[bounds[1:], len(traj)]
+    return [(traj[b], t[b:e], obs[b:e]) for b, e in zip(bounds, ends)]
+
+
 def _partition_groups(batches, obs_col: str) -> list:
-    """Materialize pandas batches of (traj_id, t, obs) rows — one
-    mapInPandas partition, or a frame fetched to the driver — and split
-    them into per-trajectory (traj_id, t_array, obs_array) groups in
-    traj_id order (rows of a trajectory are co-located by the upstream
-    repartition)."""
+    """``_groups`` of one mapInPandas partition's pandas batches (rows of a
+    trajectory are co-located by the upstream repartition)."""
     pdfs = [p for p in batches]
     if not pdfs:
         return []
-    pdf = pd.concat(pdfs, ignore_index=True).sort_values(["traj_id", "t"])
-    if pdf.empty:
-        return []
-    traj = pdf["traj_id"].to_numpy()
-    bounds = np.flatnonzero(np.r_[True, traj[1:] != traj[:-1]])
-    ts = pdf["t"].to_numpy()
-    obs = pdf[obs_col].to_numpy()
-    ends = np.r_[bounds[1:], len(traj)]
-    return [(traj[b], ts[b:e], obs[b:e]) for b, e in zip(bounds, ends)]
+    pdf = pd.concat(pdfs, ignore_index=True)
+    return _groups(pdf["traj_id"].to_numpy(), pdf["t"].to_numpy(), pdf[obs_col].to_numpy())
 
 
-def _decode_groups(groups: list, kind: str, A: np.ndarray, pi: np.ndarray, om) -> pd.DataFrame:
+def _local_groups(a: dict, obs_col: str) -> list:
+    """``_groups`` of a trajectory fetched to the driver (``dispatch.fetch``)."""
+    return _groups(a["traj_id"], a["t"], a[obs_col])
+
+
+def _decode_groups(groups: list, kind: str, A: np.ndarray, pi: np.ndarray, om) -> dict:
     """Decode (traj_id, t, obs) groups with one lane-exact kernel call:
-    per-frame gamma (``kind="gamma"``) or the Viterbi path, as one frame of
-    (traj_id, t, state_probabilities | hidden_state) rows."""
+    per-frame gamma (``kind="gamma"``) or the Viterbi path, as the columns
+    of (traj_id, t, state_probabilities | hidden_state) rows."""
     pobs_list = [om.to_state_probability_trajectory(obs) for _, _, obs in groups]
     out = {
         "traj_id": np.repeat(
@@ -258,7 +265,7 @@ def _decode_groups(groups: list, kind: str, A: np.ndarray, pi: np.ndarray, om) -
     else:
         paths = viterbi_batch(A, pobs_list, pi)
         out["hidden_state"] = np.concatenate([np.empty(0, np.int32), *paths]).astype(np.int32)
-    return pd.DataFrame(out)
+    return out
 
 
 def viterbi(A: np.ndarray, pobs: np.ndarray, pi: np.ndarray) -> np.ndarray:
@@ -327,14 +334,14 @@ class HiddenMarkovModel:
 
     # ------------------------------------------------------- DataFrame API
 
-    def _decode_df(
-        self, df: DataFrame, kind: str, obs_col: str, colocated: bool = False
-    ) -> DataFrame:
-        """Batched decode. Inside the ``hmm`` dispatch bound the frame is
-        fetched once and decoded on the driver into a local frame; above it
-        trajectories are co-located by hash repartition and one mapInPandas
-        pass decodes each partition with one kernel call. Lane-exact
-        kernels make both paths return the same rows."""
+    def _decode_df(self, data, kind: str, obs_col: str, colocated: bool = False) -> DataFrame:
+        """Batched decode. A trajectory fetched to the driver (the
+        ``dispatch.fetch`` arrays of (traj_id, t, obs_col)) is decoded there
+        into a local frame; a frame inside the ``hmm`` dispatch bound is
+        fetched once and decoded the same way; above it trajectories are
+        co-located by hash repartition and one mapInPandas pass decodes
+        each partition with one kernel call. Lane-exact kernels make both
+        paths return the same rows."""
         A = self.transition_matrix
         pi = self.initial_distribution
         om = self.output_model
@@ -358,31 +365,31 @@ class HiddenMarkovModel:
         def fn(batches):
             groups = _partition_groups(batches, obs_col)
             if groups:
-                yield _decode_groups(groups, kind, A, pi, om)
+                yield pd.DataFrame(_decode_groups(groups, kind, A, pi, om))
 
-        out = df.select("traj_id", "t", obs_col)
-        local = dispatch.fetch("hmm", out)
+        if isinstance(data, dict):
+            local, spark, out = data, SparkSession.active(), None
+        else:
+            spark, out = data.sparkSession, data.select("traj_id", "t", obs_col)
+            local = dispatch.fetch("hmm", out)
         if local is not None:
-            rows = _decode_groups(_partition_groups([local], obs_col), kind, A, pi, om)
-            return df.sparkSession.createDataFrame(rows, schema)
+            cols = _decode_groups(_local_groups(local, obs_col), kind, A, pi, om)
+            return columns_df(spark, cols, schema)
         if not colocated:
             # pin parallelism: AQE coalescing would serialize the decode
-            out = out.repartition(
-                df.sparkSession.sparkContext.defaultParallelism, "traj_id"
-            )
+            out = out.repartition(spark.sparkContext.defaultParallelism, "traj_id")
         return out.mapInPandas(fn, schema=schema)
 
-    def state_probabilities_df(self, df: DataFrame, obs_col: str = "state") -> DataFrame:
+    def state_probabilities_df(self, df, obs_col: str = "state") -> DataFrame:
         """gamma per frame: batched forward-backward per partition (the
         reference's `transform(..., 'sfull')`)."""
         return self._decode_df(df, "gamma", obs_col)
 
-    def viterbi_df(
-        self, df: DataFrame, obs_col: str = "state", colocated: bool = False
-    ) -> DataFrame:
-        """Most likely hidden path per trajectory. ``colocated=True`` skips
-        the repartition when the caller's frame is already hash-partitioned
-        by traj_id (e.g. persisted upstream of an EM fit)."""
+    def viterbi_df(self, df, obs_col: str = "state", colocated: bool = False) -> DataFrame:
+        """Most likely hidden path per trajectory of a frame or of a fetched
+        trajectory. ``colocated=True`` skips the repartition when the
+        caller's frame is already hash-partitioned by traj_id (e.g.
+        persisted upstream of an EM fit)."""
         return self._decode_df(df, "viterbi", obs_col, colocated=colocated)
 
     def transform(self, df: DataFrame, obs_col: str = "state") -> DataFrame:

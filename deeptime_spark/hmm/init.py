@@ -74,11 +74,14 @@ def init_discrete_metastable_from_msm(
 
 
 def init_discrete_metastable_from_data(
-    df: DataFrame, n_hidden_states: int, lagtime: int, obs_col: str = "state",
+    df, n_hidden_states: int, lagtime: int, obs_col: str = "state",
     reversible: bool = True, n_observation_states: Optional[int] = None,
 ) -> HiddenMarkovModel:
     """Fit an observable-space MSM on Spark (counting job) then coarse-grain
     (reference metastable_from_data, :274-401, mode='largest-regularized').
+    ``df`` may also be a trajectory already fetched with ``dispatch.fetch``
+    (numpy columns traj_id, t, obs_col); the counts then come from the
+    arrays, with no Spark job.
 
     Pass ``n_observation_states`` when the observable alphabet size is
     known: it skips a full max-aggregation pass over the trajectory (one
@@ -99,6 +102,8 @@ def init_discrete_metastable_from_data(
         n_full = int(symbols.max()) + 1
         if n_observation_states is not None:
             n_full = max(n_full, int(n_observation_states))
+        elif isinstance(df, dict):
+            obs_max = df[obs_col].max()
         else:
             obs_max = df.agg(F.max(obs_col).alias("m")).first()["m"]
             n_full = max(n_full, int(obs_max) + 1)

@@ -4,8 +4,10 @@ Reference: ``MaximumLikelihoodHMM``
 (/root/reference/src/deeptime/markov/hmm/_maximum_likelihood_hmm.py:16-424).
 
 Inside ``dispatch.BOUNDS["hmm"]`` the lagged frame is fetched to the
-driver once and every E-step runs there. Above it (SURVEY.md §2.9's Spark
-shape), each EM iteration is ONE mapInPandas job over the frame
+driver once and every E-step runs there; a trajectory the caller already
+fetched (``dispatch.fetch``) is lagged in numpy and fits the same way.
+Above it (SURVEY.md §2.9's Spark shape), each EM iteration is ONE
+mapInPandas job over the frame
 co-located by trajectory: one lane-exact forward-backward call per
 partition emits one sufficient-statistics row per trajectory (loglik,
 gamma_0, Baum-Welch counts, output-model stats). Either way the driver
@@ -30,6 +32,7 @@ from deeptime_spark import dispatch
 from deeptime_spark.base import Estimator
 from deeptime_spark.hmm.hmm_model import (
     HiddenMarkovModel,
+    _local_groups,
     _partition_groups,
     forward_backward_batch,
 )
@@ -109,11 +112,25 @@ def _reduce(traj_ids: np.ndarray, rows: np.ndarray, N: int) -> dict:
     }
 
 
-def _driver_estep(pdf: pd.DataFrame, obs_col: str):
-    """The E-step on the driver for a fetched lagged frame: trajectories are
-    grouped once, then every EM iteration is one ``_traj_stats`` call over
-    all of them, reduced like the distributed rows."""
-    groups = [g for g in _partition_groups([pdf], obs_col) if len(g[2]) > 1]
+def _lag_observations(a: dict, lag: int, stride: int, obs_col: str) -> dict:
+    """``lag_observations_df`` for a fetched trajectory (numpy columns
+    traj_id, t, obs_col), with the same column math; length-1
+    sub-trajectories are left for the E-step to drop."""
+    shift = a["t"] % lag
+    keep = shift % stride == 0
+    shift = shift[keep]
+    return {
+        "traj_id": a["traj_id"][keep] * lag + shift,
+        "t": (a["t"][keep] - shift) // lag,
+        obs_col: a[obs_col][keep],
+    }
+
+
+def _driver_estep(a: dict, obs_col: str):
+    """The E-step on the driver for a fetched lagged trajectory: trajectories
+    are grouped once, then every EM iteration is one ``_traj_stats`` call
+    over all of them, reduced like the distributed rows."""
+    groups = [g for g in _local_groups(a, obs_col) if len(g[2]) > 1]
     return lambda A, pi, om: _reduce(*_traj_stats(groups, A, pi, om), len(pi))
 
 
@@ -187,11 +204,13 @@ class MaximumLikelihoodHMM(Estimator):
             # the wire as two flat arrays, not one Spark row each
             yield pd.DataFrame({"traj_id": [traj_ids], "rows": [rows.ravel()]})
 
-        pdf = df.mapInPandas(estep, schema=schema).toPandas()
-        traj_ids = np.concatenate([np.empty(0, np.int64), *pdf["traj_id"]])
+        # the packed arrays are ragged across partitions, so they come back
+        # as one Arrow table and are flattened, not as numpy columns
+        table = df.mapInPandas(estep, schema=schema).toArrow()
+        traj_ids = table.column("traj_id").combine_chunks().flatten().to_numpy()
         width = 1 + len(pi) + len(pi) ** 2 + om.stats_dim()
-        rows = np.concatenate([np.empty(0), *pdf["rows"]]).reshape(len(traj_ids), width)
-        return _reduce(traj_ids, rows, len(pi))
+        rows = table.column("rows").combine_chunks().flatten().to_numpy()
+        return _reduce(traj_ids, rows.reshape(len(traj_ids), width), len(pi))
 
     # ------------------------------------------------------------ M-step
 
@@ -223,7 +242,10 @@ class MaximumLikelihoodHMM(Estimator):
 
     # -------------------------------------------------------------- fit
 
-    def fit(self, df: DataFrame, progress=None) -> "MaximumLikelihoodHMM":
+    def fit(self, df, progress=None) -> "MaximumLikelihoodHMM":
+        """Baum-Welch on a (traj_id, t, obs_col) frame, or on a trajectory
+        already fetched with ``dispatch.fetch`` (then every E-step runs on
+        the driver and no Spark job starts)."""
         from deeptime_spark.callbacks import ProgressCallback
 
         init = self.initial_model
@@ -232,16 +254,21 @@ class MaximumLikelihoodHMM(Estimator):
         om = init.output_model.copy()
 
         colocated = self.lagtime == 1 and self.stride == 1 and self.assume_colocated
-        if colocated:
-            # input frame == lagged frame at lag 1; caller already co-located
-            # (and usually persisted) it by traj_id — no second shuffle, no
-            # duplicate cache; singleton trajectories drop inside the E-step
-            lagged = df.select("traj_id", "t", self.obs_col)
+        if isinstance(df, dict):
+            lagged = None
+            local = _lag_observations(df, self.lagtime, self.stride, self.obs_col)
         else:
-            lagged = lag_observations_df(df, self.lagtime, self.stride).select(
-                "traj_id", "t", self.obs_col
-            )
-        local = dispatch.fetch("hmm", lagged)
+            if colocated:
+                # input frame == lagged frame at lag 1; caller already
+                # co-located (and usually persisted) it by traj_id — no
+                # second shuffle, no duplicate cache; singleton
+                # trajectories drop inside the E-step
+                lagged = df.select("traj_id", "t", self.obs_col)
+            else:
+                lagged = lag_observations_df(df, self.lagtime, self.stride).select(
+                    "traj_id", "t", self.obs_col
+                )
+            local = dispatch.fetch("hmm", lagged)
         owns_cache = local is None and not colocated
         if owns_cache:
             # the EM loop re-reads the lagged frame every iteration: persist

@@ -1,33 +1,59 @@
-"""Single-partition literal DataFrames (bench/driver hot path).
+"""Literal DataFrames from driver-side results, built in the JVM.
 
-``SparkSession.createDataFrame(list, schema)`` parallelizes the driver-side
-rows into ``defaultParallelism`` partitions — on a 32-core session a 1-row
-report frame becomes 32 near-empty *Python* partitions. Every downstream
-action then pays 32 tasks (a noop sink write measured ~0.7-1.4 s), a
-``first()`` escalates through the 1/4/20/... take() ladder because the row
-hides in the last partition, and a ``coalesce(1)`` is the worst of all: the
-single merged task evaluates the 32 pickled partitions through the Python
-worker SEQUENTIALLY (measured ~6 s for a 16-row frame — the round-12
-profile of ivf_index_probe's quantizer sidecar write).
-
-Literal relations built from driver-side results (reports, gate rows,
-collected model tables) are by construction tiny; one partition is their
-right physical shape at any scale. ``local_df`` pins ``numSlices=1`` so a
-literal frame costs one task everywhere it is consumed.
+Reports, gate rows, collected model tables and driver-kernel outputs are
+small by construction. ``local_df`` hands them to Spark as one Arrow table
+(``createDataFrame(pyarrow.Table, struct)``), which the JVM turns into a
+``LocalRelation``: the plan reads a ``LocalTableScan`` and every consumer
+runs JVM-only tasks, whatever the session's Arrow setting. A frame built
+from a Python row list (``createDataFrame(list)`` or ``parallelize``) is a
+Python RDD instead, so each consumer starts a Python worker; a noop sink
+over such a frame measured 0.13-0.21 s against 0.03-0.06 s for the
+``LocalTableScan`` of the same rows (4 cores).
 """
 
 from __future__ import annotations
 
+import functools
+
+import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
+from pyspark.sql.types import DataType, StructField, StructType
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl(schema: str) -> StructType:
+    return DataType.fromDDL(schema)
+
 
 def local_df(spark, rows, schema):
-    """``spark.createDataFrame(rows, schema)`` with ONE partition.
+    """``spark.createDataFrame(rows, schema)`` as a JVM local relation.
 
     ``rows`` is a driver-side list (or other sized iterable) of
-    tuples/Rows; ``schema`` a DDL string or StructType. Values and
-    schema handling are identical to ``createDataFrame`` — only the
-    partition count differs (1 instead of ``defaultParallelism``).
+    tuples/Rows; ``schema`` a DDL string, a StructType, or a list of column
+    names whose types are inferred from the values (as ``createDataFrame``
+    infers them: int -> long, float -> double, list -> array).
     """
     rows = rows if isinstance(rows, list) else list(rows)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), schema
+    if isinstance(schema, (list, tuple)):
+        cols = list(zip(*rows))
+        if not cols:
+            raise ValueError("local_df: cannot infer column types from no rows")
+        arrays = [pa.array(c) for c in cols]
+        schema = StructType(
+            [StructField(n, from_arrow_type(a.type)) for n, a in zip(schema, arrays)]
+        )
+        return spark.createDataFrame(pa.table(arrays, names=schema.names), schema)
+    struct = _ddl(schema) if isinstance(schema, str) else schema
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    return columns_df(spark, dict(zip(struct.names, cols)), struct)
+
+
+def columns_df(spark, columns: dict, schema):
+    """``local_df`` for column-major data: ``{name: sequence or numpy
+    array}``, each converted to the schema field's Arrow type."""
+    struct = _ddl(schema) if isinstance(schema, str) else schema
+    table = pa.table(
+        [pa.array(columns[f.name], type=to_arrow_type(f.dataType)) for f in struct.fields],
+        names=struct.names,
     )
+    return spark.createDataFrame(table, struct)

@@ -197,8 +197,31 @@ def _lag_counts_df(
     )
 
 
+def _lag_counts_arrays(
+    a: dict, lagtimes: Sequence[int], count_mode: str, state_col: str
+) -> dict:
+    """``_lag_counts_df`` for a trajectory fetched to the driver (numpy
+    columns traj_id, t, state_col): the same ``(lag, s_from, s_to, n)``
+    groups, counted with ``np.unique``."""
+    order = np.lexsort((a["t"], a["traj_id"]))
+    traj, t, s = a["traj_id"][order], a["t"][order], a[state_col][order]
+    keys = []
+    for tau in lagtimes:
+        lead = np.full(len(s), -1, dtype=np.int64)
+        if tau < len(s):
+            same = traj[tau:] == traj[:-tau]
+            lead[:-tau][same] = s[tau:][same]
+        valid = lead >= 0
+        if count_mode == "sample":
+            valid &= t % tau == 0
+        src = s >= 0
+        keys.append(np.stack([np.full(src.sum(), tau), s[src], np.where(valid, lead, -1)[src]]))
+    groups, n = np.unique(np.concatenate(keys, axis=1).astype(np.int64), axis=1, return_counts=True)
+    return {"lag": groups[0], "s_from": groups[1], "s_to": groups[2], "n": n}
+
+
 def count_models(
-    df: DataFrame,
+    df,
     lagtimes: Sequence[int],
     count_mode: str = "sliding",
     n_states: Optional[int] = None,
@@ -206,14 +229,19 @@ def count_models(
 ) -> list[TransitionCountModel]:
     """One ``TransitionCountModel`` per lagtime, all counted in ONE Spark
     pass (``_lag_counts_df``, one fetch) over a dtraj frame
-    ``(traj_id, t, state)``. Negative states (unassigned, reference :148)
-    are excluded; count_mode is one of ``COUNT_MODES``."""
+    ``(traj_id, t, state)``, or counted in numpy from a dtraj already
+    fetched with ``dispatch.fetch`` (the same matrices, bit for bit).
+    Negative states (unassigned, reference :148) are excluded; count_mode
+    is one of ``COUNT_MODES``."""
     if count_mode not in COUNT_MODES:
         raise ValueError(f"count_models supports {COUNT_MODES}, got {count_mode!r}")
     lags = list(dict.fromkeys(lagtimes))
     if not lags:
         return []
-    a = dispatch.arrays(_lag_counts_df(df, lags, count_mode, state_col).fillna(-1, ["s_to"]))
+    if isinstance(df, dict):
+        a = _lag_counts_arrays(df, lags, count_mode, state_col)
+    else:
+        a = dispatch.arrays(_lag_counts_df(df, lags, count_mode, state_col).fillna(-1, ["s_to"]))
     lag, s_from, s_to, cnt = a["lag"], a["s_from"], a["s_to"], a["n"]
     n = n_states or s_from.max(initial=-1) + 1
     hist = np.zeros(n, dtype=np.int64)

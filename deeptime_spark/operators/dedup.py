@@ -841,18 +841,21 @@ def connected_components(
     ``component`` is the minimum node id in the component.
     """
     spark = edges.sparkSession
-    # materialize the (possibly expensive) upstream pair pipeline exactly
-    # ONCE via persist+count. Never fetch a limit() of an unpersisted
-    # pipeline here: Spark's incremental collect-limit starts with one
-    # partition and re-executes the whole upstream as it widens — on an
-    # LSH+verify pipeline that multiplies the dominant cost several times.
+    # the (possibly expensive) upstream pair pipeline runs ONCE: the
+    # bounded fetch is the action that fills e0's cache, which the
+    # distributed loop reads when the pairs are over the bound. A limit()
+    # fetched through Arrow is one pass (a per-partition limit, then one
+    # shuffle to a single partition); it is collect()'s take-ladder, not
+    # this path, that re-executes an upstream as it widens. On a
+    # self-join pair pipeline over the sf0.01 documents the call runs 3
+    # jobs (the join's two map stages, then the fetch) where persist +
+    # count + fetch ran 5.
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    n_edges = e0.count()
-    if dispatch.on_driver("union_find", n_edges):
-        # union-find needs neither symmetrized nor distinct edges: fetch
-        # the raw pairs from cache and solve on the driver — no
-        # union/distinct shuffle, bit-identical output.
-        a = dispatch.arrays(e0)
+    a = dispatch.fetch("union_find", e0)
+    if a is not None:
+        # union-find needs neither symmetrized nor distinct edges: solve
+        # the raw pairs on the driver — no union/distinct shuffle,
+        # bit-identical output.
         e0.unpersist()
         comp = _union_find_local(zip(a["a"].tolist(), a["b"].tolist()))
         return _local_df(spark, 

@@ -488,15 +488,13 @@ def triangle_counts(
     # orientation join, plus the join input) — without the persist each
     # one re-scans the raw edges and re-runs the distinct exchange.
     und = e0.distinct().persist()
-    n_edges = und.count()
-    if materialize and dispatch.on_driver("triangles", n_edges):
-        # the canonical edge set is already materialized in cache, one
-        # Arrow collect replaces the degree join + wedge join + count
-        # aggregate + node outer-join (4 shuffles and ~8 jobs), and the
-        # integer kernel is bit-identical by construction. Falls through
-        # to the distributed join when the wedge volume exceeds the
-        # driver budget.
-        a = dispatch.arrays(und)
+    a = dispatch.fetch("triangles", und) if materialize else None
+    if a is not None:
+        # one bounded Arrow fetch (it also fills und's cache) replaces the
+        # degree join + wedge join + count aggregate + node outer-join
+        # (4 shuffles and ~8 jobs), and the integer kernel is bit-identical
+        # by construction. Falls through to the distributed join when the
+        # wedge volume exceeds the driver budget.
         res = _driver_triangle_counts(a["a"].astype("int64"), a["b"].astype("int64"))
         if res is not None:
             und.unpersist()
@@ -719,13 +717,12 @@ def label_propagation(
     ).where(F.col("a") != F.col("b"))
     und = e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
     und = und.groupBy("a", "b").agg(F.count(F.lit(1)).alias("w")).persist()
-    n_edges = und.count()
-    if dispatch.on_driver("graph", n_edges):
-        # driver below the bound: one Arrow collect of the
-        # aggregated relation replaces n_iter x (join + two aggregates
-        # + localCheckpoint); the all-integer synchronous vote rule is
+    a = dispatch.fetch("graph", und)
+    if a is not None:
+        # driver below the bound: one Arrow fetch of the aggregated
+        # relation replaces n_iter x (join + two aggregates +
+        # localCheckpoint); the all-integer synchronous vote rule is
         # replayed exactly, so output is bit-identical at any layout
-        a = dispatch.arrays(und)
         und.unpersist()
         return _local_df(
             spark,
@@ -817,13 +814,12 @@ def k_core(
         F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
     ).where(F.col("a") != F.col("b"))
     base = e0.distinct().persist()
-    n_edges = base.count()
-    if dispatch.on_driver("graph", n_edges):
+    a = dispatch.fetch("graph", base)
+    if a is not None:
         # driver below the bound: the k-core fixed point is UNIQUE, so
         # the numpy peel is bit-identical to the distributed loop and
         # replaces per-round (2 semi-joins + degree aggregate +
-        # localCheckpoint + convergence count) with one Arrow collect
-        a = dispatch.arrays(base)
+        # localCheckpoint + convergence count) with one Arrow fetch
         base.unpersist()
         return _local_df(
             spark,
@@ -938,17 +934,16 @@ def bfs_distances(
     ).where(F.col("u") != F.col("v"))
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # persist the deduplicated relation BEFORE the node count so the
-    # O(|E|) union+distinct shuffle runs once; the large regime derives
-    # its repartitioned copy from the cache
+    # persist the deduplicated relation BEFORE the fetch so the O(|E|)
+    # union+distinct shuffle runs once; the large regime derives its
+    # repartitioned copy from the cache the fetch filled
     und = e.distinct().persist()
-    n_und = und.count()
-    if dispatch.on_driver("graph", n_und):
+    a = dispatch.fetch("graph", und)
+    if a is not None:
         # driver below the bound: hop distances are a unique fixed
         # point, so the numpy level-synchronous BFS is bit-identical
         # and replaces up to max_depth x (frontier join + anti-join +
-        # two localCheckpoints) with one Arrow collect
-        a = dispatch.arrays(und)
+        # two localCheckpoints) with one Arrow fetch
         und.unpersist()
         return _local_df(
             spark,

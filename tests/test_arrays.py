@@ -21,9 +21,8 @@ FETCH = r"\.collect\(\)|\.first\(\)|toPandas\(|toArrow\(|\.take\(|\.head\(|toLoc
 # (a ``.first()`` gate, per-partition or per-key partials) or rows used as
 # Python objects.
 ROW_FETCHES = {
-    # the Arrow fetches themselves: arrays, and fetch's bounded pandas frame
+    # the Arrow fetch itself (dispatch.fetch is arrays of a limit())
     ("deeptime_spark/dispatch.py", "arrays"): 1,
-    ("deeptime_spark/dispatch.py", "fetch"): 1,
     # .first() gates and one-row aggregates
     ("deeptime_spark/clustering/box.py", "BoxDiscretization.fit"): 1,
     ("deeptime_spark/hmm/init.py", "init_discrete_metastable_from_data"): 1,
@@ -47,7 +46,8 @@ ROW_FETCHES = {
     ("deeptime_spark/operators/stats.py", "histogram2d_df"): 1,
     ("deeptime_spark/sindy/sindy.py", "SINDyModel.score"): 1,
     # per-partition or per-key partials: moments, k-means, deep fits, the
-    # HMM E-step and Gibbs sweeps, regular-space leaders, logsumexp
+    # HMM E-step (ragged packed arrays, read through toArrow) and Gibbs
+    # sweeps, regular-space leaders, logsumexp
     ("deeptime_spark/operators/moments.py", "_moments_arrow"): 1,
     ("deeptime_spark/operators/moments.py", "_moments_expr"): 1,
     ("deeptime_spark/clustering/kmeans.py", "DeterministicKMeans.fit"): 1,
@@ -67,9 +67,6 @@ ROW_FETCHES = {
     ("deeptime_spark/operators/text.py", "quality_classifier_scores_df"): 2,
     ("deeptime_spark/operators/bpe.py", "collect_word_counts"): 1,
     ("deeptime_spark/operators/sketches.py", "bottomk_quantiles"): 1,
-    # the deep fits' driver replay keeps the pandas sort and memory layout
-    # of its distributed twin, so both stay bit-identical
-    ("deeptime_spark/decomposition/deep.py", "_driver_traj_arrays"): 1,
     # a pandas head inside a grouped map, not a fetch
     ("deeptime_spark/operators/dedup.py", "semantic_duplicates.dedup_cluster"): 1,
 }

@@ -58,6 +58,17 @@ def test_count_models_equal_brute_force(spark, dtraj_df, count_mode, lagtimes, p
         assert m.counting_mode == count_mode
 
 
+@pytest.mark.parametrize("count_mode", ["sliding", "sliding-effective", "sample"])
+def test_count_models_of_fetched_arrays_equal_the_frames_bit_for_bit(spark, dtraj_df, count_mode):
+    from deeptime_spark import dispatch
+
+    lagtimes = [1, 2, 3, 5, 200]  # 200: longer than every trajectory
+    fetched = count_models(dispatch.arrays(dtraj_df), lagtimes, count_mode=count_mode)
+    for a, b in zip(fetched, count_models(dtraj_df, lagtimes, count_mode=count_mode)):
+        assert a.count_matrix.tobytes() == b.count_matrix.tobytes()
+        assert a.state_histogram.tobytes() == b.state_histogram.tobytes()
+
+
 def test_fit_msms_jobs_land_in_the_callers_group_and_do_not_grow_with_lags(spark):
     rng = np.random.default_rng(11)
     df = dtraj_from_arrays(spark, [rng.integers(0, 3, size=300) for _ in range(3)]).cache()

@@ -257,3 +257,40 @@ def test_gated_query_unchanged_when_forced_distributed(spark, name):
         spark.catalog.clearCache()
     assert len(by_default)
     pd.testing.assert_frame_equal(forced, by_default, check_exact=True)
+
+
+def test_k_core_bound_edge_fetches_once_and_runs_no_count(spark, monkeypatch):
+    """k_core's input at exactly the graph bound: one fetch, the driver
+    peel, and no count() before it; one row over the bound: the
+    distributed loop, bit-equal; forced distributed: no fetch at all."""
+    from pyspark.sql import DataFrame
+
+    edges = _edges(spark, empty=False)
+    n = len({(min(a, b), max(a, b)) for a, b in edges.collect() if a != b})
+    calls = {"fetch": 0, "kernel": 0, "count": 0}
+
+    def spy(key, real):
+        def wrapped(*args, **kwargs):
+            calls[key] += 1
+            return real(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(dispatch, "arrays", spy("fetch", dispatch.arrays))
+    monkeypatch.setattr(G, "_driver_k_core", spy("kernel", G._driver_k_core))
+    monkeypatch.setattr(DataFrame, "count", spy("count", DataFrame.count))
+
+    def run(bound):
+        monkeypatch.setitem(dispatch.BOUNDS, "graph", (1, bound))
+        for key in calls:
+            calls[key] = 0
+        return _rows(G.k_core(edges, k=5))
+
+    at_bound = run(n)
+    assert calls == {"fetch": 1, "kernel": 1, "count": 0}
+    over = run(n - 1)
+    assert calls["fetch"] == 1 and calls["kernel"] == 0
+    assert over == at_bound and at_bound
+    with dispatch.force("distributed"):
+        forced = run(n)
+    assert calls["fetch"] == 0 and calls["kernel"] == 0
+    assert forced == at_bound

@@ -440,11 +440,11 @@ def test_web_host_stats_is_jvm_only_single_agg(spark):
 def test_vamp_score_covariance_path_stays_arrow(spark):
     """vamp_score_events' distributed stage is the covariance
     aggregation; scoring itself is driver math over a literal frame, so
-    the returned plan must be a local scan of literals (no Spark jobs at
-    transform time beyond the fit that already ran)."""
+    the returned plan must be a JVM local scan of literals (no Spark jobs
+    at transform time beyond the fit that already ran)."""
     df = entrymod._q_vamp_score_events(spark, SF)
     plan = plan_of(df)
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
+    assert "LocalTableScan" in plan
     rows = {r["score_kind"]: r["score"] for r in df.collect()}
     # VAMP-r >= 1 by construction (1 + sum sigma^r, sigma >= 0)
     assert rows["vamp1"] >= 1.0 and rows["vamp2"] >= 1.0
