@@ -55,7 +55,10 @@ BOUNDS = {
     # at x8 (800k); the lines through both cross near 300k. The distributed
     # E-step reduces the same per-trajectory rows as the driver: against a
     # per-partition sum it cost 1.28 vs 1.24 s at x1 and 2.28 vs 2.14 s at
-    # x8 (medians of 4 forced-distributed fits), inside the sum's spread
+    # x8 (medians of 4 forced-distributed fits), inside the sum's spread.
+    # Above the bound the dropped fetches (the query's, then the fit's and
+    # the decode's) slow the distributed path at x8 from 3.88 to 4.39 s on
+    # 4 cores (SCALE.md), still well ahead of the driver
     "hmm": (0, 300_000),
     # TRAM bias energies, samples with state >= 0: collected as per-state
     # blocks for the driver fold, else persisted by state and folded by one

@@ -102,10 +102,11 @@ def init_discrete_metastable_from_data(
         n_full = int(symbols.max()) + 1
         if n_observation_states is not None:
             n_full = max(n_full, int(n_observation_states))
-        elif isinstance(df, dict):
-            obs_max = df[obs_col].max()
         else:
-            obs_max = df.agg(F.max(obs_col).alias("m")).first()["m"]
+            if isinstance(df, dict):
+                obs_max = df[obs_col].max(initial=-1)
+            else:
+                obs_max = df.agg(F.max(obs_col).alias("m")).first()["m"]
             n_full = max(n_full, int(obs_max) + 1)
         B_sub = init.output_model.output_probabilities
         B = np.full((n_hidden_states, n_full), 1e-12)

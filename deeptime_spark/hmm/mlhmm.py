@@ -4,8 +4,9 @@ Reference: ``MaximumLikelihoodHMM``
 (/root/reference/src/deeptime/markov/hmm/_maximum_likelihood_hmm.py:16-424).
 
 Inside ``dispatch.BOUNDS["hmm"]`` the lagged frame is fetched to the
-driver once and every E-step runs there; a trajectory the caller already
-fetched (``dispatch.fetch``) is lagged in numpy and fits the same way.
+driver once and every E-step runs there; at lagtime 1 and stride 1 a
+trajectory the caller already fetched (``dispatch.fetch``) fits the same
+way.
 Above it (SURVEY.md §2.9's Spark shape), each EM iteration is ONE
 mapInPandas job over the frame
 co-located by trajectory: one lane-exact forward-backward call per
@@ -109,20 +110,6 @@ def _reduce(traj_ids: np.ndarray, rows: np.ndarray, N: int) -> dict:
         "gamma0": total[1 : 1 + N],
         "counts": total[1 + N : 1 + N + N * N].reshape(N, N),
         "om_stats": total[1 + N + N * N :],
-    }
-
-
-def _lag_observations(a: dict, lag: int, stride: int, obs_col: str) -> dict:
-    """``lag_observations_df`` for a fetched trajectory (numpy columns
-    traj_id, t, obs_col), with the same column math; length-1
-    sub-trajectories are left for the E-step to drop."""
-    shift = a["t"] % lag
-    keep = shift % stride == 0
-    shift = shift[keep]
-    return {
-        "traj_id": a["traj_id"][keep] * lag + shift,
-        "t": (a["t"][keep] - shift) // lag,
-        obs_col: a[obs_col][keep],
     }
 
 
@@ -243,9 +230,10 @@ class MaximumLikelihoodHMM(Estimator):
     # -------------------------------------------------------------- fit
 
     def fit(self, df, progress=None) -> "MaximumLikelihoodHMM":
-        """Baum-Welch on a (traj_id, t, obs_col) frame, or on a trajectory
-        already fetched with ``dispatch.fetch`` (then every E-step runs on
-        the driver and no Spark job starts)."""
+        """Baum-Welch on a (traj_id, t, obs_col) frame, or, at lagtime 1
+        and stride 1, on a trajectory already fetched with
+        ``dispatch.fetch`` (then every E-step runs on the driver and no
+        Spark job starts)."""
         from deeptime_spark.callbacks import ProgressCallback
 
         init = self.initial_model
@@ -255,8 +243,15 @@ class MaximumLikelihoodHMM(Estimator):
 
         colocated = self.lagtime == 1 and self.stride == 1 and self.assume_colocated
         if isinstance(df, dict):
+            # at lag 1, stride 1 the lagged trajectory is the input itself
+            # (the E-step drops length-1 trajectories); other lags are
+            # lagged as a frame by lag_observations_df
+            if self.lagtime != 1 or self.stride != 1:
+                raise ValueError(
+                    "a fetched trajectory fits at lagtime=1, stride=1 only; pass the frame"
+                )
             lagged = None
-            local = _lag_observations(df, self.lagtime, self.stride, self.obs_col)
+            local = df
         else:
             if colocated:
                 # input frame == lagged frame at lag 1; caller already

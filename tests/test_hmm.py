@@ -383,3 +383,53 @@ def test_mlhmm_assume_colocated_equivalent(spark, discrete_ground_truth):
         assert seen[2] == seen[5]
     finally:
         coloc.unpersist()
+
+
+def test_init_from_fetched_trajectory_equals_frame(spark, discrete_ground_truth):
+    """The init on a ``dispatch.fetch``-ed trajectory equals the init on its
+    frame bit for bit without ``n_observation_states``, also when the top
+    symbol is only ever a trajectory's last frame (so it lies outside the
+    MSM's largest connected set and only the symbol maximum sizes B)."""
+    dtrajs = [discrete_ground_truth.simulate(300, seed=300 + s)[1].astype(int) for s in range(3)]
+    dtrajs.append(np.array([0, 1, 2, 1, 3]))
+    df = dtraj_from_arrays(spark, dtrajs)
+    models = [
+        init_discrete_metastable_from_data(data, n_hidden_states=2, lagtime=1)
+        for data in (df, dispatch.arrays(df))
+    ]
+    frame, fetched = (
+        (
+            m.transition_matrix.tolist(),
+            m.initial_distribution.tolist(),
+            m.output_model.output_probabilities.tolist(),
+        )
+        for m in models
+    )
+    assert len(frame[2][0]) == 4
+    assert frame == fetched
+
+
+def test_mlhmm_fit_and_decode_of_fetched_trajectory_equal_the_frame(spark, discrete_ground_truth):
+    """A fetched trajectory fits and decodes on the driver bit-equal to its
+    frame at lag 1; other lags need the frame's lag_observations_df."""
+    dtrajs = [discrete_ground_truth.simulate(300, seed=400 + s)[1].astype(int) for s in range(3)]
+    dtrajs.append(np.array([2]))  # length 1: dropped by both fits
+    df = dtraj_from_arrays(spark, dtrajs)
+    local = dispatch.arrays(df)
+    init = init_discrete_metastable_from_data(df, n_hidden_states=2, lagtime=1)
+    seen = []
+    for data in (df, local):
+        m = MaximumLikelihoodHMM(init, lagtime=1, maxit=4).fit(data).fetch_model()
+        path = m.viterbi_df(data).orderBy("traj_id", "t").collect()
+        seen.append(
+            (
+                m.transition_matrix.tolist(),
+                m.initial_distribution.tolist(),
+                m.output_model.output_probabilities.tolist(),
+                [(r["traj_id"], r["t"], r["hidden_state"]) for r in path],
+            )
+        )
+    assert seen[0] == seen[1]
+    for kw in ({"lagtime": 2}, {"lagtime": 1, "stride": 2}):
+        with pytest.raises(ValueError, match="lagtime=1, stride=1"):
+            MaximumLikelihoodHMM(init, maxit=1, **kw).fit(local)
